@@ -5,12 +5,12 @@ The batch query (operators/retrieval.py ``bm25_topk``) tokenizes the
 corpus into a (doc_id, term, tf) inverted index and scores from it. A
 crawl stream should never re-tokenize history to refresh that index:
 tf rows are pure partial counts over disjoint document slices, so each
-micro-batch contributes its own index SEGMENT — keyed by (checkpoint
-scope, batch_id), purge-then-rewritten on replay (the drift-monitor /
-segment-sketch discipline) — and the serving path reads the merged
-segments through THE SAME ``bm25_scored_from_index`` the batch query
-uses (one scorer, two surfaces; the incremental-MinHash band-index
-precedent, dedup.py).
+micro-batch contributes its own index segment to a
+:class:`~.segments.SegmentTable` (scope, replay and compaction rules
+are stated there; tf merges by SUM per (doc_id, term)), and the serving
+path reads the merged segments through THE SAME
+``bm25_scored_from_index`` the batch query uses (one scorer, two
+surfaces; the incremental-MinHash band-index precedent, dedup.py).
 
 A per-segment doc-count cell rides alongside the tf rows: token-less
 documents carry no index rows but still shift idf's N and the
@@ -20,15 +20,12 @@ recovered from the index itself.
 Contract: cross-batch document identity is UPSTREAM's job (the crawl
 frontier emits each canonical resource exactly once — L140); this
 maintainer guarantees replay idempotency per batch, not cross-batch
-dedup. Segments merge by addition (SUM per (doc_id, term)), the same
-law the drift cells follow.
+dedup.
 
 At 100 TB: each batch tokenizes only its own documents; the segment
 table is append-shaped and :meth:`StreamingBM25Index.compact` folds
-settled segments on the count-min partials' cadence (scope-isolated,
-highest batch kept un-folded for replay repair — sketch_stream's two
-safety rules); serving cost is the batch scorer's (index probe bounded
-by query terms — never a corpus rescan).
+settled segments; serving cost is the batch scorer's (index probe
+bounded by query terms — never a corpus rescan).
 """
 
 from __future__ import annotations
@@ -42,6 +39,7 @@ from ..operators.retrieval import (
     build_tf_index,
 )
 from ..sources.table_store import TableStore
+from .segments import SegmentTable, drain, json_stream
 
 #: per-batch index segments: (checkpoint, batch_id, doc_id, term, tf).
 BM25_TF_PARTIALS = "bm25_tf_partials"
@@ -71,104 +69,46 @@ class StreamingBM25Index:
         self.source_dir = source_dir
         self.checkpoint_dir = checkpoint_dir
         self.schema = schema
-
-    def _scope(self) -> str:
-        # batch ids restart at 0 when a checkpoint is cleared — scope
-        # segments by checkpoint path (stream identity, the shared
-        # device of every streaming maintainer here)
-        return self.checkpoint_dir
+        self.tf_segments = SegmentTable(
+            store, BM25_TF_PARTIALS, checkpoint_dir,
+            keys=("doc_id", "term"), sums=("tf",), ddl=BM25_TF_DDL,
+        )
+        self.doc_segments = SegmentTable(
+            store, BM25_DOC_PARTIALS, checkpoint_dir,
+            keys=(), sums=("n_docs",), ddl=BM25_DOC_DDL,
+        )
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Replace this batch's index segment + doc cell (idempotent)."""
-        own = (F.col("checkpoint") == self._scope()) & (
-            F.col("batch_id") == int(batch_id)
+        self.tf_segments.replace(
+            batch_id, build_tf_index(batch_df.select("doc_id", "text"))
         )
-        key = [
-            F.lit(self._scope()).alias("checkpoint"),
-            F.lit(int(batch_id)).cast("long").alias("batch_id"),
-        ]
-        seg = build_tf_index(batch_df.select("doc_id", "text")).select(
-            *key, "doc_id", "term", "tf"
+        self.doc_segments.replace(
+            batch_id, batch_df.select(F.count("*").cast("long").alias("n_docs"))
         )
-        cell = batch_df.select(
-            *key, F.count("*").cast("long").alias("n_docs")
-        )
-        for table, part in ((BM25_TF_PARTIALS, seg), (BM25_DOC_PARTIALS, cell)):
-            if self.store.exists(table):
-                kept = self.store.read(table).filter(~own)
-                self.store.overwrite(table, kept.unionByName(part))
-            else:
-                self.store.overwrite(table, part)
 
     def run_available_now(self) -> None:
-        q = (
-            self.spark.readStream.format("json")
-            .schema(self.schema)
-            .load(self.source_dir)
-            .writeStream.foreachBatch(self._merge_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            json_stream(self.spark, self.schema, self.source_dir),
+            self._merge_batch,
+            self.checkpoint_dir,
         )
-        q.awaitTermination()
 
     def compact(self) -> None:
-        """Fold THIS scope's settled index segments into one
-        (batch_id −1) segment per table — the maintenance sweep once
-        history fragments. tf rows merge by SUM per (doc_id, term) and
-        doc cells by SUM (the same union law :meth:`tf`/:meth:`n_docs`
-        apply on read, so serving output is bit-identical before and
-        after — pytest-pinned). Safety rules shared with
-        ``StreamingCountMin.compact``: only this checkpoint scope's
-        rows fold, and the scope's HIGHEST batch_id segment stays
-        un-folded — it is the only batch that can still crash-replay,
-        and its replay repairs by purging its own (scope, batch_id)
-        rows, which folding away would break."""
-        plans = (
-            (BM25_TF_PARTIALS, ["doc_id", "term"], "tf"),
-            (BM25_DOC_PARTIALS, [], "n_docs"),
-        )
-        for table, keys, val in plans:
-            if not self.store.exists(table):
-                continue
-            cur = self.store.read(table)
-            mine = cur.filter(F.col("checkpoint") == self._scope())
-            others = cur.filter(F.col("checkpoint") != self._scope())
-            last = mine.agg(F.max("batch_id")).first()[0]
-            if last is None:
-                continue
-            folded = (
-                mine.filter(F.col("batch_id") != last)
-                .groupBy(*keys)
-                .agg(F.sum(val).cast("long").alias(val))
-                # groupBy() over zero settled rows yields one NULL row
-                .filter(F.col(val).isNotNull())
-                .select(
-                    F.lit(self._scope()).alias("checkpoint"),
-                    F.lit(-1).cast("long").alias("batch_id"),
-                    *keys,
-                    val,
-                )
-            )
-            keep_last = mine.filter(F.col("batch_id") == last)
-            self.store.overwrite(
-                table, others.unionByName(folded).unionByName(keep_last)
-            )
+        """Fold settled index segments and doc cells (the SegmentTable
+        compaction); :meth:`tf`, :meth:`n_docs` and serving are
+        bit-identical before and after."""
+        self.tf_segments.compact()
+        self.doc_segments.compact()
 
     def tf(self) -> DataFrame:
         """Merged (doc_id, term, tf) index over everything ingested."""
-        return (
-            self.store.read_or_empty(BM25_TF_PARTIALS, BM25_TF_DDL)
-            .groupBy("doc_id", "term")
-            .agg(F.sum("tf").cast("long").alias("tf"))
-        )
+        return self.tf_segments.merged()
 
     def n_docs(self) -> DataFrame:
         """1-row (n_docs) frame — token-less documents included."""
-        return self.store.read_or_empty(
-            BM25_DOC_PARTIALS, BM25_DOC_DDL
-        ).select(
-            F.coalesce(F.sum("n_docs"), F.lit(0)).cast("long").alias("n_docs")
+        return self.doc_segments.merged().select(
+            F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs")
         )
 
     def topk(self) -> DataFrame:

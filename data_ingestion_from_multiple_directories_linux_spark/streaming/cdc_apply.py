@@ -6,10 +6,9 @@ A change-data-capture feed lands as files of change rows
 micro-batch into the target table with MERGE semantics and makes the
 fold IDEMPOTENT under foreachBatch's at-least-once contract: a batch
 that replays (crash after apply, before checkpoint commit) is detected
-by a (checkpoint-scope, batch_id) marker — the same stream-identity
-device as StreamingIngestion/StreamingCountMin, scoped by checkpoint
-path because batch ids restart at 0 when a checkpoint is cleared — and
-skipped instead of applied twice. Apply + marker cannot be one atomic
+by a (checkpoint-scope, batch_id) marker — scoped by the segment
+tables' stream-identity rule (streaming/segments.py) — and skipped
+instead of applied twice. Apply + marker cannot be one atomic
 write on a filesystem, so the order is apply-then-mark: a crash between
 the two replays the batch, and the replay re-applies the same changes —
 MERGE of the same change set is convergent (same final rows), so
@@ -30,8 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.maintenance import compact_table
 from ..operators.warehouse import merge_upsert, src_col
 from ..sources.table_store import TableStore
+from .segments import checkpoint_scope, drain, json_stream, scoped
 
 #: marker table: one row per applied (scope, batch)
 CDC_COMMITS = "cdc_commits"
@@ -74,7 +75,7 @@ class StreamingCdcApply:
         return {
             int(r["batch_id"])
             for r in self.store.read(CDC_COMMITS)
-            .filter(F.col("checkpoint") == self.checkpoint_dir)
+            .filter(scoped(self.checkpoint_dir))
             .select("batch_id")
             .collect()
         }
@@ -92,30 +93,13 @@ class StreamingCdcApply:
 
         row = local_df(
             self.spark,
-            [(self.checkpoint_dir, int(batch_id))],
+            [(checkpoint_scope(self.checkpoint_dir), int(batch_id))],
             "checkpoint string, batch_id long",
         )
         self.store.append(CDC_COMMITS, row)
         if self._applied is None:
             self._applied = self._load_applied()
         self._applied.add(int(batch_id))
-
-    def _compact_commits(self) -> None:
-        """Bound the marker table's one-file-per-batch fragmentation
-        (same discipline as StreamingIngestion._compact_commits)."""
-        import os
-
-        if not self.store.exists(CDC_COMMITS):
-            return
-        n_files = sum(
-            1
-            for f in os.listdir(self.store.path(CDC_COMMITS))
-            if f.endswith(".parquet")
-        )
-        if n_files > self.COMMITS_COMPACT_FILES:
-            self.store.overwrite(
-                CDC_COMMITS, self.store.read(CDC_COMMITS).coalesce(1)
-            )
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self._is_applied(batch_id):
@@ -146,14 +130,11 @@ class StreamingCdcApply:
 
     def run_available_now(self) -> None:
         self._applied = None  # fresh view of the marker table per run
-        q = (
-            self.spark.readStream.format("json")
-            .schema(self.schema)
-            .load(self.source_dir)
-            .writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            json_stream(self.spark, self.schema, self.source_dir),
+            self._apply_batch,
+            self.checkpoint_dir,
         )
-        q.awaitTermination()
-        self._compact_commits()
+        compact_table(
+            self.store, CDC_COMMITS, min_files=self.COMMITS_COMPACT_FILES + 1
+        )

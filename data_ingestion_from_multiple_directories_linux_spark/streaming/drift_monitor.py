@@ -10,17 +10,16 @@ and the dashboard is recomputed from the (tiny) merged cell table by
 THE SAME scoring function the batch query uses
 (``drift_from_cells``, imported — one implementation, two surfaces).
 
-Idempotency under foreachBatch's at-least-once contract follows the
-segment-sketch design (streaming/sketch_stream.py): segments are keyed
-by (checkpoint scope, batch_id) and a replayed batch REPLACES its own
-rows (purge-then-write), so ingesting the corpus in K waves — or
-replaying any wave — yields bit-identical cells to one-shot ingestion
-(pytest pins both).
+Each micro-batch's cells are one segment of a
+:class:`~.segments.SegmentTable` (scope, replay and compaction rules
+are stated there), so ingesting the corpus in K waves — or replaying
+any wave — yields bit-identical cells to one-shot ingestion (pytest
+pins both).
 
 At 100 TB of stream history: the cell table is (sources × vocabulary)
-per segment — aggregate-sized, never corpus-sized — and the settled
-segments fold via the same compact() cadence as the count-min
-partials when fragmentation grows.
+per segment — aggregate-sized, never corpus-sized — and
+:meth:`StreamingDriftMonitor.compact` folds the settled segments when
+fragmentation grows.
 """
 
 from __future__ import annotations
@@ -30,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.corpus_stats import drift_from_cells, token_cells
 from ..sources.table_store import TableStore
+from .segments import SegmentTable, drain, json_stream
 
 #: partial-cells table: one (source, term, o) segment per micro-batch.
 DRIFT_PARTIALS = "drift_cell_partials"
@@ -56,55 +56,32 @@ class StreamingDriftMonitor:
         self.source_dir = source_dir
         self.checkpoint_dir = checkpoint_dir
         self.schema = schema
-
-    def _scope(self) -> str:
-        # batch ids restart at 0 when a checkpoint is cleared, so
-        # segments are scoped by checkpoint path (stream identity).
-        return self.checkpoint_dir
+        self.segments = SegmentTable(
+            store, DRIFT_PARTIALS, checkpoint_dir,
+            keys=("source", "term"), sums=("o",), ddl=DRIFT_PARTIALS_DDL,
+        )
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Replace this batch's cell segment (idempotent replay)."""
-        part = token_cells(
-            batch_df.filter(F.col("source").isNotNull())
-        ).select(
-            F.lit(self._scope()).alias("checkpoint"),
-            F.lit(int(batch_id)).cast("long").alias("batch_id"),
-            "source",
-            "term",
-            "o",
+        self.segments.replace(
+            batch_id, token_cells(batch_df.filter(F.col("source").isNotNull()))
         )
-        if self.store.exists(DRIFT_PARTIALS):
-            kept = self.store.read(DRIFT_PARTIALS).filter(
-                ~(
-                    (F.col("checkpoint") == self._scope())
-                    & (F.col("batch_id") == int(batch_id))
-                )
-            )
-            self.store.overwrite(DRIFT_PARTIALS, kept.unionByName(part))
-        else:
-            self.store.overwrite(DRIFT_PARTIALS, part)
 
     def run_available_now(self) -> None:
-        q = (
-            self.spark.readStream.format("json")
-            .schema(self.schema)
-            .load(self.source_dir)
-            .writeStream.foreachBatch(self._merge_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            json_stream(self.spark, self.schema, self.source_dir),
+            self._merge_batch,
+            self.checkpoint_dir,
         )
-        q.awaitTermination()
+
+    def compact(self) -> None:
+        """Fold settled cell segments (the SegmentTable compaction);
+        :meth:`cells` and the dashboard are unchanged."""
+        self.segments.compact()
 
     def cells(self) -> DataFrame:
         """Merged (source, term, o) cells over everything seen so far."""
-        return (
-            self.store.read_or_empty(
-                DRIFT_PARTIALS, DRIFT_PARTIALS_DDL
-            )
-            .groupBy("source", "term")
-            .agg(F.sum("o").cast("long").alias("o"))
-        )
+        return self.segments.merged()
 
     def drift(self) -> DataFrame:
         """The chi-square dashboard from the merged cells — the SAME

@@ -27,14 +27,14 @@ tick):
    output table, and their bits APPEND to the filter (bloom_bits is
    mergeable by union — no read-modify-write of a bitmap).
 
-Idempotency under foreachBatch's at-least-once contract: output rows
-are keyed by (checkpoint scope, batch_id) and a replayed batch
-purges-then-rewrites its own rows (the stream_ingest audit device);
-the rescue join reads the output table WITHOUT the replaying batch's
-own rows, so a replay re-derives exactly the same emission even though
-its keys are already in the filter (they all probe positive and all
-get rescued). Duplicate bit appends are harmless by the filter's
-union-merge law.
+Idempotency under foreachBatch's at-least-once contract: output,
+dispatch and carry rows are per-batch segments of three
+:class:`~.segments.SegmentTable` instances (streaming/segments.py
+states the scope and replay rules); the rescue join reads the output
+table WITHOUT the replaying batch's own rows, so a replay re-derives
+exactly the same emission even though its keys are already in the
+filter (they all probe positive and all get rescued). Duplicate bit
+appends are harmless by the filter's union-merge law.
 
 At 100 TB: the filter is the only broadcast state (one array row, the
 L128 sizing/sharding notes apply); the exact-rescue join is bounded by
@@ -66,6 +66,7 @@ from ..operators.politeness import (
 )
 from ..operators.urlnorm import url_canonicalize
 from ..sources.table_store import TableStore
+from .segments import SegmentTable, drain, json_stream
 
 #: emitted-frontier table: one row per first-seen canonical resource.
 FRONTIER_OUT = "crawl_frontier_out"
@@ -152,12 +153,16 @@ class StreamingCrawlFrontier:
         self.carry_cap_ticks = carry_cap_ticks
         self.unknown_host_allowance = unknown_host_allowance
         self.unknown_host_cap = unknown_host_cap
-
-    def _scope(self) -> str:
-        # batch ids restart at 0 when a checkpoint is cleared — scope
-        # state rows by checkpoint path (the stream-identity device
-        # shared with StreamingIngestion / StreamingCountMin)
-        return self.checkpoint_dir
+        self.out = SegmentTable(
+            store, FRONTIER_OUT, checkpoint_dir, keys=("url", "doc_id")
+        )
+        self.dispatch = SegmentTable(
+            store, FRONTIER_DISPATCH, checkpoint_dir,
+            keys=("host", "url", "doc_id"),
+        )
+        self.carry = SegmentTable(
+            store, FRONTIER_CARRY, checkpoint_dir, keys=("host", "carry")
+        )
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         canon = (
@@ -177,40 +182,23 @@ class StreamingCrawlFrontier:
 
         # exact rescue: positives not in the emitted table (excluding a
         # replaying batch's own rows) are Bloom false positives
-        if self.store.exists(FRONTIER_OUT):
-            prior = self.store.read(FRONTIER_OUT).filter(
-                ~(
-                    (F.col("checkpoint") == self._scope())
-                    & (F.col("batch_id") == int(batch_id))
-                )
-            )
+        prior = self.out.without(batch_id)
+        if prior is not None:
             rescued = positives.join(
                 prior.select("url").distinct(), "url", "left_anti"
             )
         else:
-            prior = None
             rescued = positives
 
-        new = negatives.unionByName(rescued).select(
-            F.lit(self._scope()).alias("checkpoint"),
-            F.lit(int(batch_id)).cast("long").alias("batch_id"),
-            "url",
-            "doc_id",
-        )
         # materialize before writing: ``new`` derives from the CURRENT
         # output-table files via the rescue join, and the overwrite
         # below swaps those files out — a lazy plan evaluated after the
         # swap (the bits append) would read deleted parquet. One batch's
         # emissions are small; the checkpoint also means the rescue join
         # runs once, not once per consumer.
+        new = self.out.stamp(negatives.unionByName(rescued), batch_id)
         new = new.localCheckpoint(eager=True)
-
-        # purge-then-rewrite this batch's own output rows (idempotent
-        # replay), append everything else untouched
-        if prior is not None:
-            self.store.overwrite(FRONTIER_OUT, prior.unionByName(new))
-        else:
-            self.store.overwrite(FRONTIER_OUT, new)
+        self.out.write(new, prior)
 
         # append the new keys' bits — duplicate appends are harmless
         # (bloom_bits merges by union), so no replay guard is needed
@@ -228,19 +216,15 @@ class StreamingCrawlFrontier:
     def _dispatch_tick(self, tick: int) -> None:
         """One politeness tick: apportion → add banked carry → dispatch
         oldest-pending per host → bank the (capped) remainder."""
-        scope = self._scope()
-        own = (F.col("checkpoint") == scope) & (F.col("batch_id") == tick)
-
         out = self.store.read(FRONTIER_OUT).select(
             "batch_id", "url", "doc_id"
         )
-        if self.store.exists(FRONTIER_DISPATCH):
-            prior_d = self.store.read(FRONTIER_DISPATCH).filter(~own)
+        prior_d = self.dispatch.without(tick)
+        if prior_d is not None:
             pending = out.join(
                 prior_d.select("url").distinct(), "url", "left_anti"
             )
         else:
-            prior_d = None
             pending = out
 
         # this tick's exact largest-remainder apportionment (Σ == budget)
@@ -252,10 +236,7 @@ class StreamingCrawlFrontier:
         if self.store.exists(FRONTIER_CARRY):
             cprev = (
                 self.store.read(FRONTIER_CARRY)
-                .filter(
-                    (F.col("checkpoint") == scope)
-                    & (F.col("batch_id") < tick)
-                )
+                .filter(self.carry.owned & (F.col("batch_id") < tick))
                 .withColumn(
                     "_rn",
                     F.row_number().over(
@@ -288,47 +269,18 @@ class StreamingCrawlFrontier:
             # overwrites — pin it before any consumer runs post-swap
             materialize=lambda df: df.localCheckpoint(eager=True),
         )
-        disp = disp_t.select(
-            F.lit(scope).alias("checkpoint"),
-            F.lit(tick).cast("long").alias("batch_id"),
-            "host",
-            "url",
-            "doc_id",
-        )
-
-        carry_rows = carry_t.select(
-            F.lit(scope).alias("checkpoint"),
-            F.lit(tick).cast("long").alias("batch_id"),
-            "host",
-            "carry",
-        )
-        carry_rows = carry_rows.localCheckpoint(eager=True)  # reads CARRY
-
-        if prior_d is not None:
-            self.store.overwrite(
-                FRONTIER_DISPATCH, prior_d.unionByName(disp)
-            )
-        else:
-            self.store.overwrite(FRONTIER_DISPATCH, disp)
-        if self.store.exists(FRONTIER_CARRY):
-            kept_c = self.store.read(FRONTIER_CARRY).filter(~own)
-            self.store.overwrite(
-                FRONTIER_CARRY, kept_c.unionByName(carry_rows)
-            )
-        else:
-            self.store.overwrite(FRONTIER_CARRY, carry_rows)
+        carry_rows = self.carry.stamp(carry_t, tick).localCheckpoint(
+            eager=True
+        )  # reads CARRY
+        self.dispatch.write(self.dispatch.stamp(disp_t, tick), prior_d)
+        self.carry.write(carry_rows, self.carry.without(tick))
 
     def run_available_now(self) -> None:
-        q = (
-            self.spark.readStream.format("json")
-            .schema(self.schema)
-            .load(self.source_dir)
-            .writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            json_stream(self.spark, self.schema, self.source_dir),
+            self._process_batch,
+            self.checkpoint_dir,
         )
-        q.awaitTermination()
 
     def frontier(self) -> DataFrame:
         """Every first-seen canonical resource emitted so far:

@@ -7,18 +7,18 @@ centroids via ``save_ivf_centroids`` / ``load_ivf_centroids``, PQ
 codebooks likewise — the L122/L141 cadence), but until this module new
 vectors were only assigned at QUERY time: a continuously-ingesting
 deployment had no maintainer that keeps the assignment current as the
-corpus grows. This closes that gap on the established segment
-discipline (streaming/bm25_stream.py — the pattern named by the
-round-11 verdict):
+corpus grows. This closes that gap on the segment law every streaming
+maintainer shares (streaming/segments.py states the scope, replay and
+compaction rules):
 
 * each micro-batch's vectors pass the similarity family's validation
   gate (declared dim, finite elements), are assigned to their nearest
   PERSISTED centroid (``_assign_cells`` against ``load_ivf_centroids``
   — the centroids are pinned; assignment is a pure function of vector
   and centroids, so batch boundaries cannot change any vector's cell);
-* the batch's rows land as an assignment SEGMENT keyed by (checkpoint
-  scope, batch_id), purge-then-rewritten on replay (foreachBatch's
-  at-least-once contract → idempotent);
+* the batch's rows land as one assignment segment of a
+  :class:`~.segments.SegmentTable`; assignment rows are per-vector
+  facts, so segments merge by union and compaction is a key rewrite;
 * ``topk()`` serves the ``ivf_topk_neighbors`` ranking from the merged
   segments — pinned EQUAL to the registered batch query over the same
   corpus in tests (the one-scorer-two-surfaces contract, enforced by
@@ -65,6 +65,7 @@ from ..operators.similarity import (
     train_ivf_centroids,
 )
 from ..sources.table_store import TableStore
+from .segments import SegmentTable, drain, json_stream
 
 #: per-batch assignment segments.
 IVF_ASSIGN_SEGMENTS = "ivf_assign_segments"
@@ -94,12 +95,10 @@ class StreamingIvfIndex:
         self.checkpoint_dir = checkpoint_dir
         self.centroids_table = centroids_table
         self.schema = schema
-
-    def _scope(self) -> str:
-        # batch ids restart at 0 when a checkpoint is cleared — scope
-        # segments by checkpoint path (stream identity, the shared
-        # device of every streaming maintainer here)
-        return self.checkpoint_dir
+        self.segments = SegmentTable(
+            store, IVF_ASSIGN_SEGMENTS, checkpoint_dir,
+            keys=("vec_id", "v", "nv", "cell"), ddl=IVF_ASSIGN_DDL,
+        )
 
     def _assign_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Replace this batch's assignment segment (idempotent)."""
@@ -118,76 +117,26 @@ class StreamingIvfIndex:
         )
         vecs = vecs.withColumn("nv", norm_sq_q("v"))
         cent = load_ivf_centroids(self.store, self.centroids_table)
-        own = (F.col("checkpoint") == self._scope()) & (
-            F.col("batch_id") == int(batch_id)
-        )
-        seg = _assign_cells(vecs, cent).select(
-            F.lit(self._scope()).alias("checkpoint"),
-            F.lit(int(batch_id)).cast("long").alias("batch_id"),
-            "vec_id",
-            "v",
-            "nv",
-            "cell",
-        )
-        if self.store.exists(IVF_ASSIGN_SEGMENTS):
-            kept = self.store.read(IVF_ASSIGN_SEGMENTS).filter(~own)
-            self.store.overwrite(IVF_ASSIGN_SEGMENTS, kept.unionByName(seg))
-        else:
-            self.store.overwrite(IVF_ASSIGN_SEGMENTS, seg)
+        self.segments.replace(batch_id, _assign_cells(vecs, cent))
 
     def run_available_now(self) -> None:
-        q = (
-            self.spark.readStream.format("json")
-            .schema(self.schema)
-            .load(self.source_dir)
-            .writeStream.foreachBatch(self._assign_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            json_stream(self.spark, self.schema, self.source_dir),
+            self._assign_batch,
+            self.checkpoint_dir,
         )
-        q.awaitTermination()
 
     def compact(self) -> None:
-        """Fold THIS scope's settled assignment segments into one
-        (batch_id −1) segment — the maintenance sweep once history
-        fragments. Assignment rows are per-vector facts (no merge law
-        needed): the fold is a key rewrite, so :meth:`assigned` —
-        and therefore serving and the balance report — is row-identical
-        before and after (pytest-pinned). Safety rules shared with
-        ``StreamingCountMin.compact``: only this checkpoint scope's
-        rows fold, and the scope's HIGHEST batch_id segment stays
-        un-folded — the only batch that can still crash-replay repairs
-        by purging its own (scope, batch_id) rows, which folding away
-        would break."""
-        if not self.store.exists(IVF_ASSIGN_SEGMENTS):
-            return
-        cur = self.store.read(IVF_ASSIGN_SEGMENTS)
-        mine = cur.filter(F.col("checkpoint") == self._scope())
-        others = cur.filter(F.col("checkpoint") != self._scope())
-        last = mine.agg(F.max("batch_id")).first()[0]
-        if last is None:
-            return
-        folded = mine.filter(F.col("batch_id") != last).select(
-            F.lit(self._scope()).alias("checkpoint"),
-            F.lit(-1).cast("long").alias("batch_id"),
-            "vec_id",
-            "v",
-            "nv",
-            "cell",
-        )
-        keep_last = mine.filter(F.col("batch_id") == last)
-        self.store.overwrite(
-            IVF_ASSIGN_SEGMENTS,
-            others.unionByName(folded).unionByName(keep_last),
-        )
+        """Fold settled assignment segments (the SegmentTable
+        compaction — a key rewrite), so :meth:`assigned`, serving and
+        the balance report are row-identical before and after."""
+        self.segments.compact()
 
     def assigned(self) -> DataFrame:
         """Merged (vec_id, v, nv, cell) assignment over everything
         ingested — the same shape ``_assign_cells`` returns, so every
         batch consumer of an assignment can read it."""
-        return self.store.read_or_empty(
-            IVF_ASSIGN_SEGMENTS, IVF_ASSIGN_DDL
-        ).select("vec_id", "v", "nv", "cell")
+        return self.segments.merged()
 
     def topk(self) -> DataFrame:
         """The ``ivf_topk_neighbors`` ranking served from the streamed

@@ -10,13 +10,11 @@ queryable sketch is the sum over everything seen so far. Ingesting a
 corpus in K micro-batches yields bit-identical cells to ingesting it in
 one shot, which is the whole point of a mergeable summary.
 
-Idempotency under foreachBatch's at-least-once contract follows the
-segment-sketch design (how log-structured stores keep per-segment
-sketches): partials are stored keyed by (checkpoint scope, batch_id) —
-a replayed batch REPLACES its own partial rows instead of adding them
-twice (the same purge-before-write move as StreamingIngestion's audit
-path, stream_ingest.py). The merge to queryable cells happens at read
-time over the tiny partial table (≤ batches × depth × width rows),
+Each micro-batch's cell partials are one segment of a
+:class:`~.segments.SegmentTable` (scope, replay and compaction rules
+are stated there): a replayed batch REPLACES its own partial rows
+instead of adding them twice. The merge to queryable cells happens at
+read time over the tiny partial table (≤ batches × depth × width rows),
 with ``compact()`` folding history into one segment when the partial
 count grows.
 """
@@ -28,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..operators.profiling import CM_DEPTH, CM_WIDTH, _cm_hash
 from ..sources.table_store import TableStore
+from .segments import SegmentTable, drain, json_stream
 
 #: partial-cells table: one segment of cell counts per micro-batch
 CM_PARTIALS = "cm_partials"
@@ -80,56 +79,35 @@ class StreamingCountMin:
         self.checkpoint_dir = checkpoint_dir
         self.schema = schema
         self.key_col = key_col
+        self.segments = SegmentTable(
+            store, CM_PARTIALS, checkpoint_dir,
+            keys=("j", "bucket"), sums=("cell_n",), ddl=CM_PARTIALS_DDL,
+        )
 
     # -- merge ----------------------------------------------------------
 
-    def _scope(self) -> str:
-        # same stream-identity device as StreamingIngestion._commit_scope:
-        # batch ids restart at 0 when a checkpoint is cleared, so partials
-        # are scoped by checkpoint path
-        return self.checkpoint_dir
-
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Replace this batch's partial segment (idempotent replay)."""
-        part = cm_cell_partials(batch_df, self.key_col).select(
-            F.lit(self._scope()).alias("checkpoint"),
-            F.lit(int(batch_id)).cast("long").alias("batch_id"),
-            "j",
-            "bucket",
-            "cell_n",
-        )
-        if self.store.exists(CM_PARTIALS):
-            kept = self.store.read(CM_PARTIALS).filter(
-                ~(
-                    (F.col("checkpoint") == self._scope())
-                    & (F.col("batch_id") == int(batch_id))
-                )
-            )
-            self.store.overwrite(CM_PARTIALS, kept.unionByName(part))
-        else:
-            self.store.overwrite(CM_PARTIALS, part)
+        self.segments.replace(batch_id, cm_cell_partials(batch_df, self.key_col))
 
     def run_available_now(self) -> None:
-        q = (
-            self.spark.readStream.format("json")
-            .schema(self.schema)
-            .load(self.source_dir)
-            .writeStream.foreachBatch(self._merge_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            json_stream(self.spark, self.schema, self.source_dir),
+            self._merge_batch,
+            self.checkpoint_dir,
         )
-        q.awaitTermination()
+
+    def compact(self) -> None:
+        """Fold settled partial segments (the SegmentTable compaction);
+        :meth:`cells` is unchanged."""
+        self.segments.compact()
 
     # -- query ----------------------------------------------------------
 
     def cells(self) -> DataFrame:
-        """The queryable sketch: partial segments merged by addition."""
-        return (
-            self.store.read(CM_PARTIALS)
-            .groupBy("j", "bucket")
-            .agg(F.sum("cell_n").cast("long").alias("cell_n"))
-        )
+        """The queryable sketch: partial segments merged by addition
+        (empty before the first batch)."""
+        return self.segments.merged()
 
     def estimate(self, keys: DataFrame, key_col: str) -> DataFrame:
         """Point-frequency estimates (min over hash rows; always ≥ the
@@ -151,44 +129,4 @@ class StreamingCountMin:
             mins.append(F.coalesce(F.col(f"n{j}"), F.lit(0)))
         return out.select(
             key_col, F.least(*mins).cast("long").alias("cm_estimate")
-        )
-
-    def compact(self) -> None:
-        """Fold THIS scope's settled partial segments into one
-        (batch_id −1) — the maintenance sweep once history fragments.
-
-        Two safety rules (both review-found hazards):
-
-        * only this checkpoint scope's rows fold — another stream
-          instance sharing the store keeps its own segments, which its
-          replays must still be able to find and replace;
-        * the scope's HIGHEST batch_id segment is kept un-folded: it is
-          the only batch that can still replay (a crash lands between
-          apply and checkpoint commit), and its replay repairs by
-          deleting its own (scope, batch_id) segment — folding it away
-          would make the delete a no-op and double-count the batch.
-          Everything below it is checkpoint-committed and settled."""
-        if not self.store.exists(CM_PARTIALS):
-            return
-        cur = self.store.read(CM_PARTIALS)
-        mine = cur.filter(F.col("checkpoint") == self._scope())
-        others = cur.filter(F.col("checkpoint") != self._scope())
-        last = mine.agg(F.max("batch_id")).first()[0]
-        if last is None:
-            return
-        folded = (
-            mine.filter(F.col("batch_id") != last)
-            .groupBy("j", "bucket")
-            .agg(F.sum("cell_n").cast("long").alias("cell_n"))
-            .select(
-                F.lit(self._scope()).alias("checkpoint"),
-                F.lit(-1).cast("long").alias("batch_id"),
-                "j",
-                "bucket",
-                "cell_n",
-            )
-        )
-        keep_last = mine.filter(F.col("batch_id") == last)
-        self.store.overwrite(
-            CM_PARTIALS, others.unionByName(folded).unionByName(keep_last)
         )

@@ -16,8 +16,8 @@ Mapping to the reference's operating model:
   combination gives effectively-exactly-once staging/audit rows over
   plain parquet (the same role a transactional table format plays at
   cluster scale);
-* ``trigger(availableNow=True)`` — one cron tick (processes everything
-  pending, then stops), replacing cron + the pgrep single-instance lock
+* the availableNow trigger (``segments.drain``) — one cron tick
+  (processes everything pending, then stops), replacing cron + the pgrep single-instance lock
   (orchestrate_file_ingestion.sh:16-26, G7): a second concurrent start
   on the same checkpoint is refused by the streaming engine;
 * ``foreachBatch`` — runs the SAME cleanse/quarantine/lineage pipeline
@@ -50,6 +50,7 @@ from ..ingest.engine import (
 from ..sources.json_dir import CORRUPT_COL
 from ..sources.schemas import schema_for_table
 from ..sources.table_store import TableStore
+from .segments import checkpoint_scope, drain, scoped
 
 
 class StreamingIngestion:
@@ -122,9 +123,6 @@ class StreamingIngestion:
     #: (one tiny parquet file is appended per micro-batch)
     COMMITS_COMPACT_FILES = 64
 
-    def _commit_scope(self) -> str:
-        return os.path.abspath(self.checkpoint)
-
     def _load_committed(self) -> set[int]:
         """One scan at stream start; per-batch checks are then O(1)
         in-memory (the previous shape re-read the whole marker table
@@ -144,8 +142,8 @@ class StreamingIngestion:
         df = self.store.read(self.COMMITS)
         if "checkpoint" not in df.columns:
             return set()
-        cond = (F.col("table_name") == f"stg_{self.table}") & (
-            F.col("checkpoint") == self._commit_scope()
+        cond = (F.col("table_name") == f"stg_{self.table}") & scoped(
+            self.checkpoint
         )
         return {
             int(r["batch_id"])
@@ -172,29 +170,13 @@ class StreamingIngestion:
         # the measured ~10x pathology local_df exists to avoid
         row = local_df(
             self.spark,
-            [(f"stg_{self.table}", self._commit_scope(), batch_id)],
+            [(f"stg_{self.table}", checkpoint_scope(self.checkpoint), batch_id)],
             "table_name string, checkpoint string, batch_id long",
         ).withColumn("committed_at", F.current_timestamp())
         self.store.append(self.COMMITS, row)
         if self._committed is None:
             self._committed = self._load_committed()
         self._committed.add(batch_id)
-
-    def _compact_commits(self) -> None:
-        """Rewrite the marker table when its one-file-per-batch append
-        pattern has fragmented it (bounds the per-run startup scan; the
-        write-temp-swap overwrite keeps it atomic)."""
-        if not self.store.exists(self.COMMITS):
-            return
-        n_files = sum(
-            1
-            for f in os.listdir(self.store.path(self.COMMITS))
-            if f.endswith(".parquet")
-        )
-        if n_files > self.COMMITS_COMPACT_FILES:
-            self.store.overwrite(
-                self.COMMITS, self.store.read(self.COMMITS).coalesce(1)
-            )
 
     def _purge_batch_rows(self, files: list[tuple[str, str]]) -> None:
         """Crash-replay repair: drop any rows a half-committed attempt of
@@ -413,13 +395,13 @@ class StreamingIngestion:
         saw, and compact the commit-marker table if fragmented."""
         self._committed = None  # fresh view of the marker table per run
         snapshot = self._snapshot_files()
-        q = (
-            self._source()
-            .writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(self._source(), self._process_batch, self.checkpoint)
         self._audit_empty_files(snapshot)
-        self._compact_commits()
+        # imported here: operators.maintenance registers queries, and
+        # importing it from the streaming package would move them ahead
+        # of earlier-imported operator modules in registration order
+        from ..operators.maintenance import compact_table
+
+        compact_table(
+            self.store, self.COMMITS, min_files=self.COMMITS_COMPACT_FILES + 1
+        )

@@ -27,6 +27,13 @@ def spark():
     # (test_scale_techniques AQE coalescing) pin against it.
     # Warehouse in a temp dir so catalog tables (bucketing tests) never
     # pollute the repo.
+    # Heap capped at 8g unless SPARK_GRAFT_DRIVER_MEM says otherwise: at
+    # the engine's 16g default G1 keeps growing the heap instead of
+    # collecting, and over the whole suite the JVM reaches ~15 GB RSS —
+    # on a 15 GB host the kernel OOM-kills it mid-run and every later
+    # Spark test fails with "Connection refused". Set in the environment
+    # so the subprocess sessions some tests spawn inherit the same cap.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     return get_spark(
         app_name="engine-tests",
         cpus=8,

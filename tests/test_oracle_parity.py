@@ -6,9 +6,6 @@ not tolerated in the test."""
 
 from __future__ import annotations
 
-import decimal
-import math
-
 import duckdb
 import pandas as pd
 import pytest
@@ -16,45 +13,7 @@ import pytest
 import __spark_entry__ as entry_mod
 
 from tests.conftest import SF_SMALL
-
-
-def _duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
-        )
-    return con
-
-
-def _norm(v):
-    if v is None:
-        return None
-    if isinstance(v, float) and math.isnan(v):
-        return None
-    if v is pd.NaT:
-        return None
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, (int, float)):
-        return float(v)
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime()
-    return v
-
-
-def canonical_rows(pdf: pd.DataFrame) -> list[tuple]:
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    rows = [
-        tuple(_norm(v) for v in row)
-        for row in pdf.itertuples(index=False, name=None)
-    ]
-    return sorted(rows, key=repr)
+from tools.oracle_rows import canonical_rows, duck_con
 
 
 ORACLES = entry_mod.oracle_sql()
@@ -64,7 +23,7 @@ QUERIES = entry_mod.queries()
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, name):
     sdf = QUERIES[name](spark, SF_SMALL).toPandas()
-    con = _duck_con(SF_SMALL)
+    con = duck_con(SF_SMALL)
     ddf = con.execute(ORACLES[name]).df()
     con.close()
     assert len(sdf) == len(ddf), f"{name}: row count {len(sdf)} != oracle {len(ddf)}"
@@ -216,7 +175,7 @@ def _check_one_query(spark, sf_dir: str, label: str, name: str) -> str | None:
         sdf = QUERIES[name](spark, sf_dir).toPandas()
     except Exception as e:  # noqa: BLE001 — collecting a report
         return f"{name}: Spark aborted: {e}"
-    con = _duck_con(sf_dir)
+    con = duck_con(sf_dir)
     try:
         ddf = con.execute(ORACLES[name]).df()
     except Exception as e:  # noqa: BLE001

@@ -645,6 +645,8 @@ def test_streaming_count_min_matches_one_shot(spark, tmp_path):
     cm = StreamingCountMin(
         spark, store, str(src), str(tmp_path / "ckpt"), schema, "user_id"
     )
+    # an empty stream serves an empty sketch (no table yet)
+    assert cm.cells().count() == 0
     write_file("b1.json", batch1)
     cm.run_available_now()
     write_file("b2.json", batch2)
@@ -714,6 +716,33 @@ def test_streaming_count_min_matches_one_shot(spark, tmp_path):
     # folded away), so cells stay exactly the one-shot values
     cm._merge_batch(replay, b2_id)
     assert cells_dict(cm.cells()) == oneshot
+
+
+def test_checkpoint_spellings_share_one_scope(spark, tmp_path, monkeypatch):
+    """A relative and an absolute spelling of one checkpoint directory
+    are one stream: a batch crash-replayed under the other spelling
+    replaces its segment instead of being counted twice."""
+    from data_ingestion_from_multiple_directories_linux_spark.sources.table_store import (
+        TableStore,
+    )
+    from data_ingestion_from_multiple_directories_linux_spark.streaming.sketch_stream import (
+        StreamingCountMin,
+        cm_cell_partials,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    store = TableStore(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame([(i % 5,) for i in range(40)], "user_id long")
+    for ck in ("ck", str(tmp_path / "ck")):
+        cm = StreamingCountMin(
+            spark, store, str(tmp_path / "src"), ck, "user_id long", "user_id"
+        )
+        cm._merge_batch(df, 0)
+
+    def cells_dict(cells):
+        return {(r["j"], r["bucket"]): r["cell_n"] for r in cells.collect()}
+
+    assert cells_dict(cm.cells()) == cells_dict(cm_cell_partials(df, "user_id"))
 
 
 def _write_ndjson(path, rows):
@@ -1787,6 +1816,15 @@ def test_streaming_drift_monitor_matches_batch_dashboard(spark, tmp_path):
     before = cell_dict(mon.cells())
     mon._merge_batch(one_batch, batch_id=1)
     assert cell_dict(mon.cells()) == before
+
+    # compaction folds the settled wave: the dashboard is unchanged, and
+    # the kept (highest) batch still crash-replays as a no-op
+    dash_before = dash(mon.drift())
+    mon.compact()
+    assert dash(mon.drift()) == dash_before
+    mon._merge_batch(one_batch, batch_id=1)
+    assert cell_dict(mon.cells()) == before
+    assert dash(mon.drift()) == dash_before
 
 
 def test_streaming_bm25_compact_preserves_index_and_serving(spark, tmp_path):

@@ -3,11 +3,9 @@
 Same compare as driver_sim.py (rows + columns + normalized value multiset)
 but only for the named queries — the fast loop while building an operator.
 """
-import decimal, math, sys, time
+import sys, time
 
 sys.path.insert(0, "/root/repo")
-import duckdb
-import pandas as pd
 from pyspark.sql import SparkSession
 
 spark = (
@@ -21,27 +19,10 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as E
+from oracle_rows import canonical_rows, duck_con
 
 SF = "/root/testdata/sf0.01"
-con = duckdb.connect()
-for name in "region nation customer supplier part orders lineitem events documents embeddings".split():
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF}/{name}.parquet')")
-
-
-def norm(v):
-    if v is None: return None
-    if isinstance(v, float) and math.isnan(v): return None
-    if v is pd.NaT: return None
-    if isinstance(v, decimal.Decimal): return float(v)
-    if isinstance(v, bool): return v
-    if isinstance(v, (int, float)): return float(v)
-    if isinstance(v, pd.Timestamp): return v.to_pydatetime()
-    return v
-
-
-def canon(pdf):
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    return sorted((tuple(norm(v) for v in r) for r in pdf.itertuples(index=False, name=None)), key=repr)
+con = duck_con(SF)
 
 
 qs, os_ = E.queries(), E.oracle_sql()
@@ -56,12 +37,12 @@ for name in sys.argv[1:]:
     ddf = con.execute(os_[name]).df()
     ok_rows = len(sdf) == len(ddf)
     ok_cols = sorted(sdf.columns) == sorted(ddf.columns)
-    ok_vals = ok_rows and ok_cols and canon(sdf) == canon(ddf)
+    ok_vals = ok_rows and ok_cols and canonical_rows(sdf) == canonical_rows(ddf)
     status = "OK" if ok_vals else "MISMATCH"
     if status != "OK":
         fail += 1
         if ok_rows and ok_cols:
-            a, b = canon(sdf), canon(ddf)
+            a, b = canonical_rows(sdf), canonical_rows(ddf)
             diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
             for x, y in diffs:
                 print(f"    spark={x}\n    duck ={y}")

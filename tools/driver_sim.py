@@ -1,9 +1,7 @@
 """Simulate the correctness driver against /root/repo/__spark_entry__.py."""
-import decimal, math, os, sys, time
+import os, sys, time
 
 sys.path.insert(0, "/root/repo")
-import duckdb
-import pandas as pd
 from pyspark.sql import SparkSession
 
 spark = (
@@ -20,6 +18,7 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as E
+from oracle_rows import canonical_rows, duck_con
 
 # --- t1 smoke: entry() twice, schema stability ---
 df1 = E.entry(spark)
@@ -31,23 +30,6 @@ assert len(rows1) > 0
 
 # --- t2 correctness at sf0.01 ---
 SF = os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01")
-con = duckdb.connect()
-for name in "region nation customer supplier part orders lineitem events documents embeddings".split():
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF}/{name}.parquet')")
-
-def norm(v):
-    if v is None: return None
-    if isinstance(v, float) and math.isnan(v): return None
-    if v is pd.NaT: return None
-    if isinstance(v, decimal.Decimal): return float(v)
-    if isinstance(v, bool): return v
-    if isinstance(v, (int, float)): return float(v)
-    if isinstance(v, pd.Timestamp): return v.to_pydatetime()
-    return v
-
-def canon(pdf):
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    return sorted((tuple(norm(v) for v in r) for r in pdf.itertuples(index=False, name=None)), key=repr)
 
 qs, os_ = E.queries(), E.oracle_sql()
 
@@ -55,7 +37,7 @@ qs, os_ = E.queries(), E.oracle_sql()
 def check(name):
     """One query's line + pass/fail. Runs on a worker thread — Spark
     job submission is thread-safe and each call opens its own DuckDB
-    connection (the module-level `con` is NOT thread-safe).
+    connection (a DuckDB connection is NOT thread-safe).
 
     CONSTRAINT (ADVICE r06): all workers share ONE SparkSession, so
     session-scoped temp views are a cross-thread hazard. Operators
@@ -68,9 +50,7 @@ def check(name):
     sdf = qs[name](spark, SF).toPandas()
     if name not in os_:
         return f"  {name}: rows-only, {len(sdf)} rows ({time.time()-t0:.1f}s)", True
-    c = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-        c.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+    c = duck_con(SF)
     try:
         ddf = c.execute(os_[name]).df()
     finally:
@@ -78,7 +58,7 @@ def check(name):
     ok = (
         len(sdf) == len(ddf)
         and sorted(sdf.columns) == sorted(ddf.columns)
-        and canon(sdf) == canon(ddf)
+        and canonical_rows(sdf) == canonical_rows(ddf)
     )
     status = "OK" if ok else "MISMATCH"
     return f"  {name}: {status} rows={len(sdf)}/{len(ddf)} ({time.time()-t0:.1f}s)", ok

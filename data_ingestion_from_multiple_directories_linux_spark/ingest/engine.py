@@ -30,8 +30,10 @@ same information Spark's own FileIndex holds), never row data.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -50,7 +52,7 @@ from ..sources.json_dir import (
     discover_files,
     read_table_files,
 )
-from ..functions.naming import TS_RE
+from ..functions.naming import TS_RE, derive_batch_id
 from ..sources.table_store import TableStore
 
 INGESTION_LOG = "ingestion_log"
@@ -80,6 +82,15 @@ PIPELINE_LOG_DDL = (
 #: Error-message storage cap (reference file_loader.py:189).
 ERROR_MSG_CAP = 10_000
 
+#: staging partition layout: facility = the natural partition unit
+#: (§1.1; directories keyed by facility → partition pruning on read)
+STAGING_PARTITION = ("stg_datim_id",)
+
+#: one work item: (file_name, facility_id), keyed exactly as
+#: file_loader.py:328-336
+Pair = tuple[str, str]
+PAIR_DDL = "file_name string, facility_id string"
+
 _INTERNAL_COLS = ("_src_file", "_src_facility", CORRUPT_COL)
 
 
@@ -106,10 +117,8 @@ def cleanse_and_split(
     columns. Returns (valid, bad, date_cols, flagged) where ``flagged``
     retains EVERY input row with the verdict flags ``_is_corrupt`` /
     ``_all_null`` / ``_bad_date`` (mutually exclusive, in that priority),
-    so callers derive raw/corrupt/valid/bad counts per file in ONE
-    aggregation pass — one scan of the data instead of two.
-    Used by both the batch engine and the streaming foreachBatch path —
-    identical semantics by construction."""
+    so :func:`land_files` derives raw/corrupt/valid/bad counts per file
+    in ONE aggregation pass — one scan of the data instead of two."""
     corrupt = F.col(CORRUPT_COL).isNotNull()
     for t in transforms.get(table, []):
         df = t(df)
@@ -156,6 +165,173 @@ def finalize_lineage(
         F.col("_src_file").alias("stg_file_name"),
         F.col("_src_facility").alias("stg_datim_id"),
     )
+
+
+@dataclass
+class FileCounts:
+    """One file's landing outcome: its rows by verdict, or the error
+    that stopped its table's landing (G8)."""
+
+    raw: int = 0
+    corrupt: int = 0
+    valid: int = 0
+    bad: int = 0
+    error: str | None = None
+
+
+def land_files(
+    store: TableStore,
+    table: str,
+    raw: DataFrame,
+    transforms: dict[str, list],
+    purge_pairs: set[Pair] | None,
+    purge: Callable[[str, set[Pair]], None] | None = None,
+) -> dict[Pair, FileCounts]:
+    """Land one table's files — the one sink of the batch engine and of
+    the streaming foreachBatch.
+
+    ``raw`` is the PERMISSIVE read (corrupt rows included) carrying the
+    _src_file/_src_facility lineage columns. It is persisted once,
+    cleansed (:func:`cleanse_and_split`) and counted per file in ONE
+    aggregation job (raw/corrupt/valid/bad — one scan of the cached
+    data). The ``purge_pairs`` then lose the rows an earlier attempt
+    appended to staging and quarantine, so a retry is exactly-once.
+    ``None`` purges every file in ``raw``, this table's ingestion-log
+    rows for them included: a micro-batch replayed after a crash
+    re-lands and re-audits all of its files. ``purge(store_table,
+    pairs)`` defaults to :func:`purge_file_pairs`. Valid and quarantine
+    rows are appended only when the counts say they exist.
+
+    Returns the counts of every file with at least one row; a file
+    that parses to zero rows has no entry."""
+    purge = purge or partial(purge_file_pairs, store)
+    # Persist BEFORE any query touching the corrupt column: Spark
+    # forbids queries whose JSON-scan schema is only _corrupt_record
+    # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) unless the
+    # frame is cached; _src_file/_src_facility derive from
+    # input_file_name(), not data columns, so the raw/corrupt counts
+    # below would hit exactly that rule.
+    raw = raw.persist()
+    try:
+        valid, bad, date_cols, flagged = cleanse_and_split(table, raw, transforms)
+        is_live = ~F.col("_is_corrupt") & ~F.col("_all_null")
+        counts = {
+            (r["_src_file"], r["_src_facility"]): FileCounts(
+                r["raw"], r["corrupt"], r["valid"], r["bad"]
+            )
+            for r in flagged.groupBy("_src_file", "_src_facility")
+            .agg(
+                F.count("*").alias("raw"),
+                F.count(F.when(F.col("_is_corrupt"), 1)).alias("corrupt"),
+                F.count(F.when(is_live & ~F.col("_bad_date"), 1)).alias("valid"),
+                F.count(F.when(F.col("_bad_date"), 1)).alias("bad"),
+            )
+            .collect()
+        }
+        if purge_pairs is None:
+            purge_pairs = set(counts)
+            purge_file_pairs(store, INGESTION_LOG, purge_pairs, f"stg_{table}")
+        if purge_pairs:
+            purge(f"stg_{table}", purge_pairs)
+            purge(f"stg_{table}_bad_dates", purge_pairs)
+        if any(c.valid for c in counts.values()):
+            store.append(
+                f"stg_{table}",
+                finalize_lineage(valid, date_cols, cast_dates=True),
+                STAGING_PARTITION,
+            )
+        if any(c.bad for c in counts.values()):
+            # quarantine keeps raw (uncast) values for review
+            store.append(
+                f"stg_{table}_bad_dates",
+                finalize_lineage(bad, date_cols, cast_dates=False),
+                STAGING_PARTITION,
+            )
+    finally:
+        raw.unpersist()
+    return counts
+
+
+def purge_file_pairs(
+    store: TableStore, name: str, pairs: set[Pair], table_name: str | None = None
+) -> None:
+    """Remove the rows of the (file, facility) ``pairs`` from ``name`` via
+    read-filter-overwrite: a staging table is keyed on its lineage pair
+    stg_file_name/stg_datim_id, the ingestion log on file_name/facility_id
+    within ``table_name``'s rows (other tables' rows are never purged).
+
+    The pair list joins as a broadcast frame, NOT an OR-chain
+    predicate: a 50k-pair requeue (max_files_per_run) would otherwise
+    fold into a 50k-term binary expression tree that Catalyst
+    re-analyzes per table — driver minutes / StackOverflow territory.
+    The anti-join is linear and the probe stays a hash lookup per row."""
+    if not pairs or not store.exists(name):
+        return
+    cur = store.read(name)
+    pdf = local_df(store.spark, sorted(pairs), PAIR_DDL)
+    log = name == INGESTION_LOG
+    fcol, faccol = ("file_name", "facility_id") if log else ("stg_file_name", "stg_datim_id")
+    # qualify both sides: the log's own columns are also named
+    # file_name/facility_id
+    on = (cur[fcol] == pdf["file_name"]) & (cur[faccol] == pdf["facility_id"])
+    if log:
+        on = on & (cur["table_name"] == table_name)
+    if cur.join(F.broadcast(pdf), on, "left_semi").limit(1).count() == 0:
+        return
+    remaining = cur.join(F.broadcast(pdf), on, "left_anti")
+    if remaining.limit(1).count() == 0:
+        # an empty parquet dir is unreadable (no footer) — drop instead
+        store.drop(name)
+    else:
+        store.overwrite(name, remaining, () if log else STAGING_PARTITION)
+
+
+def audit_rows(
+    table: str, files: dict[Pair, FileCounts], now: datetime
+) -> list[dict]:
+    """The one verdict law (G4/G6/G8): one ingestion-log row per file of
+    ``table`` from its counts, attempted at ``now``."""
+    rows = []
+    for (fn, fac), c in files.items():
+        if c.error:
+            status, err = "failed", c.error
+        elif c.corrupt:
+            status, err = "failed", "malformed JSON"
+        elif c.raw == 0:
+            # G4 (file_loader.py:591-595) — zero parsed rows
+            status, err = "failed", "JSON file is empty"
+        elif c.valid + c.bad == 0:
+            # non-empty file whose every row was dropped by cleansing
+            # (F6 all-null drop) — distinct message for triage
+            status, err = "failed", "all rows null after cleansing"
+        elif c.bad:
+            # G3: valid rows ingested, file still logged failed with
+            # detail (file_loader.py:637-653)
+            status = "failed"
+            err = f"{c.bad} record(s) failed date validation (quarantined)"
+        else:
+            status, err = "success", None
+        rows.append(
+            {
+                "file_name": fn,
+                "facility_id": fac,
+                "table_name": f"stg_{table}",
+                "batch_id": derive_batch_id(fn),
+                "status": status,
+                "json_rec_count": c.valid,
+                "bad_rec_count": c.bad,
+                "error_message": err and err[:ERROR_MSG_CAP],
+                "load_start_time": now,
+                "load_end_time": datetime.now(),
+            }
+        )
+    return rows
+
+
+def log_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """:func:`audit_rows` output as one single-partition log frame."""
+    cols = [c.split()[0] for c in INGESTION_LOG_DDL.split(", ")]
+    return local_df(spark, [tuple(r[k] for k in cols) for r in rows], INGESTION_LOG_DDL)
 
 
 def _default_transforms() -> dict[str, list]:
@@ -215,15 +391,11 @@ class IngestionEngine:
         self,
         spark: SparkSession,
         warehouse: str,
-        partition_by_facility: bool = True,
         max_files_per_run: int | None = 50_000,
         submit_workers: int | None = None,
     ) -> None:
         self.spark = spark
         self.store = TableStore(spark, warehouse)
-        # staging partition layout: facility = the natural partition unit
-        # (§1.1; directories keyed by facility → partition pruning on read)
-        self.partition_cols = ("stg_datim_id",) if partition_by_facility else ()
         # batch-size throttle (O2: LIMIT 50000, file_loader.py:255)
         self.max_files_per_run = max_files_per_run
         # G5 fan-out width: per-table jobs submit from this many threads
@@ -389,176 +561,29 @@ class IngestionEngine:
         the run continues with the other tables — the reference logs
         per-file failure and moves on (file_loader.py:426-439).
         """
-        by_file: dict[tuple[str, str], dict] = {
-            (m.file_name, m.facility_id): {
-                "meta": m,
-                "raw": 0,
-                "valid": 0,
-                "bad": 0,
-                "corrupt": 0,
-                "error": None,
-            }
-            for m in group
-        }
+        pairs = [(m.file_name, m.facility_id) for m in group]
         try:
-            self._ingest_table_body(table, group, by_file, retry_pairs)
+            counts = land_files(
+                self.store,
+                table,
+                read_table_files(self.spark, table, [m.path for m in group]),
+                self.transforms,
+                # retry hygiene: purge any prior partial rows of
+                # re-attempted files before appending
+                retry_pairs & set(pairs),
+                self._purge_file_rows,
+            )
         except Exception as e:  # G8 error classification, per-table isolation
             msg = f"{type(e).__name__}: {str(e)[:ERROR_MSG_CAP]}"
-            for st in by_file.values():
-                if st["error"] is None:
-                    st["error"] = msg
-        return self._audit_rows(table, by_file, now)
-
-    def _ingest_table_body(
-        self,
-        table: str,
-        group: list[FileMeta],
-        by_file: dict[tuple[str, str], dict],
-        retry_pairs: set[tuple[str, str]],
-    ) -> None:
-        paths = [m.path for m in group]
-        pair_key = ("_src_file", "_src_facility")
-        df = read_table_files(self.spark, table, paths)
-        # Persist BEFORE any query touching the corrupt column: Spark
-        # forbids queries whose JSON-scan schema is only _corrupt_record
-        # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) unless the
-        # frame is cached; _src_file/_src_facility derive from
-        # input_file_name(), not data columns, so the raw/corrupt stats
-        # below would hit exactly that rule.
-        df = df.persist()
-        try:
-            # G2 + F6/F7 + G3 shared cleansing pipeline (row-preserving)
-            valid, bad, date_cols, flagged = cleanse_and_split(
-                table, df, self.transforms
-            )
-
-            # ONE aggregation pass over the flagged frame for ALL per-file
-            # counts (raw/corrupt/valid/bad) — one scan of the cached
-            # data, one job, instead of separate stats + counts passes
-            valid_counts: dict[tuple[str, str], int] = {}
-            bad_counts: dict[tuple[str, str], int] = {}
-            is_live = ~F.col("_is_corrupt") & ~F.col("_all_null")
-            for r in (
-                flagged.groupBy(*pair_key)
-                .agg(
-                    F.count("*").alias("n_raw"),
-                    F.count(F.when(F.col("_is_corrupt"), 1)).alias("n_corrupt"),
-                    F.count(
-                        F.when(is_live & ~F.col("_bad_date"), 1)
-                    ).alias("n_valid"),
-                    F.count(F.when(F.col("_bad_date"), 1)).alias("n_bad"),
-                )
-                .collect()
-            ):
-                key = (r["_src_file"], r["_src_facility"])
-                st = by_file.get(key)
-                if st is not None:
-                    st["raw"] = int(r["n_raw"])
-                    st["corrupt"] = int(r["n_corrupt"])
-                if r["n_valid"]:
-                    valid_counts[key] = int(r["n_valid"])
-                if r["n_bad"]:
-                    bad_counts[key] = int(r["n_bad"])
-
-            # retry hygiene: purge any prior partial rows of re-attempted
-            # files before appending, so a retry is exactly-once overall
-            table_retries = retry_pairs & set(by_file)
-            if table_retries:
-                self._purge_file_rows(f"stg_{table}", table_retries)
-                self._purge_file_rows(f"stg_{table}_bad_dates", table_retries)
-
-            if valid_counts:
-                self.store.append(
-                    f"stg_{table}",
-                    finalize_lineage(valid, date_cols, cast_dates=True),
-                    self.partition_cols,
-                )
-            if bad_counts:
-                # quarantine keeps raw (uncast) values for review
-                self.store.append(
-                    f"stg_{table}_bad_dates",
-                    finalize_lineage(bad, date_cols, cast_dates=False),
-                    self.partition_cols,
-                )
-        finally:
-            df.unpersist()
-
-        for key, st in by_file.items():
-            st["valid"] = int(valid_counts.get(key, 0))
-            st["bad"] = int(bad_counts.get(key, 0))
-
-    def _purge_file_rows(self, store_table: str, pairs: set[tuple[str, str]]) -> None:
-        """Remove a retried file's previously-appended rows (keyed on the
-        lineage pair stg_file_name/stg_datim_id) via read-filter-overwrite.
-
-        The pair list joins as a broadcast frame, NOT an OR-chain
-        predicate: a 50k-pair requeue (max_files_per_run) would
-        otherwise fold into a 50k-term binary expression tree that
-        Catalyst re-analyzes per table — driver minutes / StackOverflow
-        territory (the same pathology _purge_batch_rows documents on
-        the streaming side). The anti-join is linear and the probe
-        stays a hash lookup per row."""
-        if not pairs or not self.store.exists(store_table):
-            return
-        cur = self.store.read(store_table)
-        pdf = local_df(
-            self.spark, sorted(pairs), "file_name string, facility_id string"
+            counts = {k: FileCounts(error=msg) for k in pairs}
+        return audit_rows(
+            table, {k: counts.get(k, FileCounts()) for k in pairs}, now
         )
-        on = (cur["stg_file_name"] == pdf["file_name"]) & (
-            cur["stg_datim_id"] == pdf["facility_id"]
-        )
-        if cur.join(F.broadcast(pdf), on, "left_semi").limit(1).count() == 0:
-            return
-        remaining = cur.join(F.broadcast(pdf), on, "left_anti")
-        if remaining.limit(1).count() == 0:
-            # an empty parquet dir is unreadable (no footer) — drop instead
-            self.store.drop(store_table)
-        else:
-            self.store.overwrite(store_table, remaining, self.partition_cols)
 
-    # ------------------------------------------------------------------
-    # audit (G4/G6/G8)
-    # ------------------------------------------------------------------
-
-    def _audit_rows(
-        self, table: str, by_file: dict[tuple[str, str], dict], now: datetime
-    ) -> list[dict]:
-        rows = []
-        for (fn, _fac), st in by_file.items():
-            m: FileMeta = st["meta"]
-            if st["error"]:
-                status, err = "failed", st["error"]
-            elif st["corrupt"]:
-                status, err = "failed", "malformed JSON"
-            elif st["raw"] == 0:
-                # G4 (file_loader.py:591-595) — zero parsed rows
-                status, err = "failed", "JSON file is empty"
-            elif st["valid"] + st["bad"] == 0:
-                # non-empty file whose every row was dropped by cleansing
-                # (F6 all-null drop) — distinct message for triage
-                status, err = "failed", "all rows null after cleansing"
-            elif st["bad"]:
-                # G3: valid rows ingested, file still logged failed with
-                # detail (file_loader.py:637-653)
-                status = "failed"
-                err = f"{st['bad']} record(s) failed date validation (quarantined)"
-            else:
-                status, err = "success", None
-            rows.append(
-                {
-                    "file_name": fn,
-                    "facility_id": m.facility_id,
-                    "table_name": f"stg_{table}",
-                    "batch_id": m.batch_id,
-                    "status": status,
-                    "json_rec_count": st["valid"],
-                    "bad_rec_count": st["bad"],
-                    "error_message": err and err[:ERROR_MSG_CAP],
-                    "load_start_time": now,
-                    "load_end_time": datetime.now(),
-                }
-            )
-        return rows
+    def _purge_file_rows(self, store_table: str, pairs: set[Pair]) -> None:
+        """Remove a retried file's previously-appended staging rows
+        (:func:`purge_file_pairs`)."""
+        purge_file_pairs(self.store, store_table, pairs)
 
     # ------------------------------------------------------------------
     # run (§3.1 lifecycle)
@@ -650,16 +675,7 @@ class IngestionEngine:
             report.tables[t] = report.tables.get(t, 0) + row["json_rec_count"]
 
         if audit:
-            log_df = local_df(
-                self.spark,
-                [tuple(r[k] for k in (
-                    "file_name", "facility_id", "table_name", "batch_id", "status",
-                    "json_rec_count", "bad_rec_count", "error_message",
-                    "load_start_time", "load_end_time",
-                )) for r in audit],
-                INGESTION_LOG_DDL,
-            )
-            self.store.append(INGESTION_LOG, log_df)
+            self.store.append(INGESTION_LOG, log_frame(self.spark, audit))
             mon_df = local_df(
                 self.spark,
                 [

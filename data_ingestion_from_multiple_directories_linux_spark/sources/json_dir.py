@@ -92,34 +92,47 @@ def catalog_df(spark: SparkSession, metas: list[FileMeta]) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def read_table_files(
-    spark: SparkSession, table: str, paths: list[str]
-) -> DataFrame:
-    """One distributed read of every file destined for ``table``.
+def permissive_schema(table: str) -> T.StructType | None:
+    """``table``'s registered schema plus the ``_corrupt_record`` column
+    PERMISSIVE mode fills for a malformed file (None if unregistered)."""
+    schema = schema_for_table(table)
+    if schema is None:
+        return None
+    return T.StructType(
+        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
+    )
+
+
+def json_reader(reader, schema: T.StructType | None):
+    """The one JSON read configuration, for ``spark.read`` and
+    ``spark.readStream`` alike.
 
     multiLine=true: each file is a JSON *array* (reference
     ``pd.read_json`` file_loader.py:588). With a registered target schema
-    the read is schema-targeted (no inference pass) and PERMISSIVE mode
-    captures malformed files in ``_corrupt_record`` instead of failing the
-    job — per-file error classification (G8) happens downstream. Extra
-    JSON fields are dropped, missing ones are NULL — the reference's
-    tolerant extra/missing-column policy (SURVEY.md §7).
+    (:func:`permissive_schema`) the read is schema-targeted (no inference
+    pass) and PERMISSIVE mode captures malformed files in
+    ``_corrupt_record`` instead of failing the job — per-file error
+    classification (G8) happens downstream. Extra JSON fields are
+    dropped, missing ones are NULL — the reference's tolerant
+    extra/missing-column policy (SURVEY.md §7)."""
+    reader = reader.format("json").option("multiLine", "true")
+    if schema is None:
+        return reader
+    return (
+        reader.schema(schema)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
+    )
 
-    Appends ``_src_file`` (bare filename) and ``_src_facility`` from
-    ``input_file_name()`` for per-file audit + lineage.
-    """
-    schema = schema_for_table(table)
-    reader = spark.read.option("multiLine", "true")
-    if schema is not None:
-        schema = T.StructType(
-            list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
-        )
-        reader = (
-            reader.schema(schema)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        )
-    df = reader.json(paths)
+
+def read_table_files(
+    spark: SparkSession, table: str, paths: list[str]
+) -> DataFrame:
+    """One distributed read of every file destined for ``table``
+    (:func:`json_reader`), with ``_src_file`` (bare filename) and
+    ``_src_facility`` from ``input_file_name()`` for per-file audit +
+    lineage."""
+    df = json_reader(spark.read, permissive_schema(table)).load(paths)
     if CORRUPT_COL not in df.columns:
         df = df.withColumn(CORRUPT_COL, F.lit(None).cast("string"))
     return with_source_lineage(df)

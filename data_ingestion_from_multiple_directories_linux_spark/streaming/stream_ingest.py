@@ -6,23 +6,26 @@ Mapping to the reference's operating model:
 * ``readStream.json(<root>/*/<table>_*.json)`` — the upload tree scan
   (file_loader.py:264-265), one stream per target table so each stream
   has one schema (the reference routes by filename the same way,
-  file_loader.py:288-309);
+  file_loader.py:288-309), configured by the batch read's own
+  ``json_dir.json_reader``;
 * file-source checkpoint — the sync_file processed-state machine
   (file_loader.py:247-278): the source offers each file in exactly one
   micro-batch across restarts. foreachBatch itself is at-least-once, so
   the sink adds a ``_stream_commits`` marker table: a replayed batch_id
   is skipped outright, and an uncommitted (crashed-mid-append) batch is
-  repaired by purging its files' partial rows before re-append — the
-  combination gives effectively-exactly-once staging/audit rows over
-  plain parquet (the same role a transactional table format plays at
-  cluster scale);
+  repaired by purging its files' partial staging and audit rows before
+  re-landing — the combination gives effectively-exactly-once
+  staging/audit rows over plain parquet (the same role a transactional
+  table format plays at cluster scale);
 * the availableNow trigger (``segments.drain``) — one cron tick
   (processes everything pending, then stops), replacing cron + the pgrep single-instance lock
   (orchestrate_file_ingestion.sh:16-26, G7): a second concurrent start
   on the same checkpoint is refused by the streaming engine;
-* ``foreachBatch`` — runs the SAME cleanse/quarantine/lineage pipeline
-  as the batch engine (ingest.engine.cleanse_and_split /
-  finalize_lineage) and appends staging + audit rows per micro-batch;
+* ``foreachBatch`` — lands the micro-batch through the batch engine's
+  own sink (``ingest.engine.land_files``: one persist, one per-file
+  count job, one purge, staging + quarantine appends) and audits it by
+  the same verdict law (``ingest.engine.audit_rows``), so both modes
+  write the same staging, quarantine and audit rows for the same files;
 * ``maxFilesPerTrigger`` — the batch-size throttle (O2, LIMIT 50000).
 
 Scale: the file source lists and tracks files on the driver exactly like
@@ -34,21 +37,25 @@ required.
 
 from __future__ import annotations
 
+import glob
 import os
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..ingest.engine import (
     INGESTION_LOG,
+    PAIR_DDL,
+    FileCounts,
+    Pair,
     _default_transforms,
-    cleanse_and_split,
-    finalize_lineage,
+    audit_rows,
+    land_files,
     local_df,
+    log_frame,
 )
-from ..sources.json_dir import CORRUPT_COL
-from ..sources.schemas import schema_for_table
+from ..sources.json_dir import json_reader, permissive_schema, with_source_lineage
 from ..sources.table_store import TableStore
 from .segments import checkpoint_scope, drain, scoped
 
@@ -64,10 +71,9 @@ class StreamingIngestion:
         table: str,
         checkpoint_dir: str | None = None,
         max_files_per_trigger: int | None = None,
-        partition_by_facility: bool = True,
     ) -> None:
-        schema = schema_for_table(table)
-        if schema is None:
+        self.schema = permissive_schema(table)
+        if self.schema is None:
             raise ValueError(
                 f"streaming ingestion needs a registered schema for {table!r}; "
                 "the file source cannot infer per-batch (add it to "
@@ -77,15 +83,12 @@ class StreamingIngestion:
         self.store = TableStore(spark, warehouse)
         self.root = root
         self.table = table
-        self.schema = T.StructType(
-            list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType(), True)]
-        )
+        self.pattern = os.path.join(root, "*", f"{table}_*.json")
         self.checkpoint = checkpoint_dir or os.path.join(
             warehouse, f"_checkpoints/{table}"
         )
         self.max_files_per_trigger = max_files_per_trigger
         self.transforms = _default_transforms()
-        self.partition_cols = ("stg_datim_id",) if partition_by_facility else ()
         #: committed batch ids for this stream identity, loaded once per
         #: run (see _load_committed)
         self._committed: set[int] | None = None
@@ -93,23 +96,13 @@ class StreamingIngestion:
     # ------------------------------------------------------------------
 
     def _source(self) -> DataFrame:
-        reader = (
-            self.spark.readStream.format("json")
-            .schema(self.schema)
-            .option("multiLine", "true")
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        )
+        reader = json_reader(self.spark.readStream, self.schema)
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(self.max_files_per_trigger))
-        pattern = os.path.join(self.root, "*", f"{self.table}_*.json")
-        df = reader.load(pattern)
         # decoded lineage names — raw filesystem keys, matching the
         # driver-side snapshot/purge/audit joins (see
         # json_dir.with_source_lineage)
-        from ..sources.json_dir import with_source_lineage
-
-        return with_source_lineage(df)
+        return with_source_lineage(reader.load(self.pattern))
 
     #: sink-side commit log: (table_name, checkpoint, batch_id) per
     #: committed batch. The CHECKPOINT column scopes markers to one
@@ -178,215 +171,60 @@ class StreamingIngestion:
             self._committed = self._load_committed()
         self._committed.add(batch_id)
 
-    def _purge_batch_rows(self, files: list[tuple[str, str]]) -> None:
-        """Crash-replay repair: drop any rows a half-committed attempt of
-        this batch already appended, keyed on the batch's (file,
-        facility) pairs — the file source assigns each file to exactly
-        one batch_id, so the key is exact.
-
-        The pair list joins as a broadcast frame, NOT an OR-chain
-        predicate: a 13k-file batch would otherwise build a 13k-term
-        binary expression tree that Catalyst re-analyzes per table
-        (driver minutes / StackOverflow territory); the anti-join is
-        linear and the probe stays a hash lookup per row."""
-        if not files:
-            return
-        pairs = local_df(
-            self.spark, sorted(files), "file_name string, facility_id string"
-        )
-        for store_table, fcol, faccol in (
-            (f"stg_{self.table}", "stg_file_name", "stg_datim_id"),
-            (f"stg_{self.table}_bad_dates", "stg_file_name", "stg_datim_id"),
-            (INGESTION_LOG, "file_name", "facility_id"),
-        ):
-            if not self.store.exists(store_table):
-                continue
-            cur = self.store.read(store_table)
-            if store_table == INGESTION_LOG:
-                scoped = cur.filter(F.col("table_name") == f"stg_{self.table}")
-                # rows of OTHER tables are never purge candidates
-                keep_always = cur.filter(F.col("table_name") != f"stg_{self.table}")
-            else:
-                scoped = cur
-                keep_always = None
-            # qualify both sides: the audit log's own columns are also
-            # named file_name/facility_id
-            on = (scoped[fcol] == pairs["file_name"]) & (
-                scoped[faccol] == pairs["facility_id"]
-            )
-            if scoped.join(F.broadcast(pairs), on, "left_semi").limit(1).count() == 0:
-                continue
-            remaining = scoped.join(F.broadcast(pairs), on, "left_anti")
-            if keep_always is not None:
-                remaining = remaining.unionByName(keep_always)
-            if remaining.limit(1).count() == 0:
-                self.store.drop(store_table)
-            else:
-                parts = self.partition_cols if store_table != INGESTION_LOG else ()
-                self.store.overwrite(store_table, remaining, parts)
+    def _audit(self, files: dict[Pair, FileCounts], now: datetime) -> None:
+        rows = audit_rows(self.table, files, now)
+        if rows:
+            self.store.append(INGESTION_LOG, log_frame(self.spark, rows))
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """The per-micro-batch sink: same pipeline as the batch engine,
-        plus per-file audit rows computed from the batch itself.
+        """The per-micro-batch sink: the batch engine's
+        :func:`land_files` and :func:`audit_rows` over the batch.
 
         Idempotent under foreachBatch's at-least-once contract: a
         batch_id already in ``_stream_commits`` is a replay of a fully
         committed batch → skip; a replay WITHOUT a marker means the
-        previous attempt crashed mid-append → purge that attempt's
-        partial rows (keyed on the batch's files) and redo.
+        previous attempt crashed mid-append → landing purges every file
+        of the batch (staging, quarantine and this table's audit rows)
+        before it appends, so the redo replaces instead of adding — the
+        file source assigns each file to exactly one batch_id, so the
+        key is exact.
         """
         if self._is_committed(batch_id):
             return
-        batch = batch.persist()
-        valid = bad = None
-        try:
-            self._purge_batch_rows(
-                [
-                    (r["_src_file"], r["_src_facility"])
-                    for r in batch.select("_src_file", "_src_facility")
-                    .distinct()
-                    .collect()
-                ]
-            )
-            valid, bad, date_cols, flagged = cleanse_and_split(
-                self.table, batch, self.transforms
-            )
-            valid = valid.persist()
-            bad = bad.persist()
-            if not valid.isEmpty():
-                self.store.append(
-                    f"stg_{self.table}",
-                    finalize_lineage(valid, date_cols, cast_dates=True),
-                    self.partition_cols,
-                )
-            if not bad.isEmpty():
-                self.store.append(
-                    f"stg_{self.table}_bad_dates",
-                    finalize_lineage(bad, date_cols, cast_dates=False),
-                    self.partition_cols,
-                )
-
-            # audit: one row per file in this micro-batch (G6); ALL
-            # per-file counts come from ONE pass over the row-preserving
-            # flagged frame — no join of two aggregations. A ZERO-ROW
-            # file produces no rows, hence no group, hence no audit row
-            # HERE — run_available_now reconciles those after the stream
-            # drains (G4 parity with the batch engine's 'JSON file is
-            # empty' row).
-            key = ["_src_file", "_src_facility"]
-            is_live = ~F.col("_is_corrupt") & ~F.col("_all_null")
-            stats = flagged.groupBy(*key).agg(
-                F.count("*").alias("n_raw"),
-                F.count(F.when(F.col("_is_corrupt"), 1)).alias("n_corrupt"),
-                F.count(F.when(is_live & ~F.col("_bad_date"), 1)).alias("n_valid"),
-                F.count(F.when(F.col("_bad_date"), 1)).alias("n_bad"),
-            )
-            from ..functions.naming import batch_of
-
-            # status/message branches MIRROR the batch engine's
-            # _audit_rows exactly (G6 parity): a non-empty file whose
-            # every row dropped as all-null is FAILED with the same
-            # triage message, not silently 'success'
-            all_null = (
-                (F.col("n_corrupt") == 0)
-                & (F.col("n_valid") + F.col("n_bad") == 0)
-                & (F.col("n_raw") > 0)
-            )
-            audit = stats.select(
-                F.col("_src_file").alias("file_name"),
-                F.col("_src_facility").alias("facility_id"),
-                F.lit(f"stg_{self.table}").alias("table_name"),
-                batch_of(F.col("_src_file")).alias("batch_id"),
-                F.when(F.col("n_corrupt") > 0, "failed")
-                .when(all_null, "failed")
-                .when(F.col("n_bad") > 0, "failed")
-                .otherwise("success")
-                .alias("status"),
-                F.col("n_valid").cast("long").alias("json_rec_count"),
-                F.col("n_bad").cast("long").alias("bad_rec_count"),
-                F.when(F.col("n_corrupt") > 0, "malformed JSON")
-                .when(all_null, "all rows null after cleansing")
-                .when(
-                    F.col("n_bad") > 0,
-                    F.concat(
-                        F.col("n_bad").cast("string"),
-                        F.lit(" record(s) failed date validation (quarantined)"),
-                    ),
-                )
-                .alias("error_message"),
-                F.current_timestamp().alias("load_start_time"),
-                F.current_timestamp().alias("load_end_time"),
-            )
-            # one audit file per micro-batch, not one per shuffle slice
-            self.store.append(INGESTION_LOG, audit.coalesce(1))
-            # marker LAST: anything before a crash lands pre-marker and
-            # is repaired by the purge on replay
-            self._mark_committed(batch_id)
-        finally:
-            for df in (bad, valid):
-                if df is not None:
-                    df.unpersist()
-            batch.unpersist()
+        now = datetime.now()
+        counts = land_files(
+            self.store, self.table, batch, self.transforms, purge_pairs=None
+        )
+        self._audit(counts, now)
+        # marker LAST: anything before a crash lands pre-marker and
+        # is repaired by the purge on replay
+        self._mark_committed(batch_id)
 
     # ------------------------------------------------------------------
 
-    def _audit_empty_files(self, snapshot: list[tuple[str, str]]) -> int:
+    def _audit_empty_files(self, snapshot: list[Pair], now: datetime) -> None:
         """G4 parity: files that parse to ZERO rows (``[]`` / empty
         payload) never appear in any micro-batch, so the row-driven sink
         can't audit them. After the stream drains, any snapshot file
-        with no INGESTION_LOG row for this table gets the batch engine's
-        'failed / JSON file is empty' row — once (later runs see the
-        row). ``snapshot`` is listed BEFORE the stream starts so a file
-        arriving mid-run is left for the next tick, not misflagged.
-
-        Driver-side file METADATA only (same bounded listing the file
-        source itself performs); returns the number of rows added."""
+        with no INGESTION_LOG row for this table is audited with zero
+        counts — the verdict law's empty-file row (G4) — once
+        (later runs see the row). ``snapshot`` is listed BEFORE the
+        stream starts so a file arriving mid-run is left for the next
+        tick, not misflagged. Only file METADATA reaches the driver."""
         if not snapshot:
-            return 0
-        from ..functions.naming import batch_of
-
-        disk = local_df(
-            self.spark, sorted(set(snapshot)), "file_name string, facility_id string"
-        )
+            return
+        missing = local_df(self.spark, sorted(set(snapshot)), PAIR_DDL)
         if self.store.exists(INGESTION_LOG):
             seen = (
                 self.store.read(INGESTION_LOG)
                 .filter(F.col("table_name") == f"stg_{self.table}")
                 .select("file_name", "facility_id")
             )
-            missing = disk.join(seen, ["file_name", "facility_id"], "left_anti")
-        else:
-            missing = disk
-        audit = missing.select(
-            "file_name",
-            "facility_id",
-            F.lit(f"stg_{self.table}").alias("table_name"),
-            batch_of(F.col("file_name")).alias("batch_id"),
-            F.lit("failed").alias("status"),
-            F.lit(0).cast("long").alias("json_rec_count"),
-            F.lit(0).cast("long").alias("bad_rec_count"),
-            F.lit("JSON file is empty").alias("error_message"),
-            F.current_timestamp().alias("load_start_time"),
-            F.current_timestamp().alias("load_end_time"),
+            missing = missing.join(seen, ["file_name", "facility_id"], "left_anti")
+        self._audit(
+            {(r["file_name"], r["facility_id"]): FileCounts() for r in missing.collect()},
+            now,
         )
-        rows = audit.coalesce(1).persist()
-        try:
-            n = rows.count()
-            if n:
-                self.store.append(INGESTION_LOG, rows)
-            return n
-        finally:
-            rows.unpersist()
-
-    def _snapshot_files(self) -> list[tuple[str, str]]:
-        import glob
-
-        return [
-            (os.path.basename(p), os.path.basename(os.path.dirname(p)))
-            for p in glob.glob(
-                os.path.join(self.root, "*", f"{self.table}_*.json")
-            )
-        ]
 
     def run_available_now(self) -> None:
         """One cron tick: ingest every pending file, then stop (G7 —
@@ -394,9 +232,13 @@ class StreamingIngestion:
         files arrived). Afterwards: audit zero-row files the sink never
         saw, and compact the commit-marker table if fragmented."""
         self._committed = None  # fresh view of the marker table per run
-        snapshot = self._snapshot_files()
+        now = datetime.now()
+        snapshot = [
+            (os.path.basename(p), os.path.basename(os.path.dirname(p)))
+            for p in glob.glob(self.pattern)
+        ]
         drain(self._source(), self._process_batch, self.checkpoint)
-        self._audit_empty_files(snapshot)
+        self._audit_empty_files(snapshot, now)
         # imported here: operators.maintenance registers queries, and
         # importing it from the streaming package would move them ahead
         # of earlier-imported operator modules in registration order

@@ -95,6 +95,27 @@ def test_bench_compare_usage_and_empty_history(tmp_path):
     assert "vacuously PASS" in p.stdout
 
 
+def test_amp_ab_rejects_bad_argv_before_building_the_corpus(tmp_path):
+    """tools/amp_ab.py checks argv and ROTATIONS >= 1 before it
+    materializes the amplified corpus: a bad invocation is a usage
+    error (exit 2) without any JVM start — with JAVA_HOME pointing
+    nowhere, a corpus build would fail differently."""
+    import os
+
+    env = dict(os.environ, JAVA_HOME=str(tmp_path / "no-jvm"))
+    out = tmp_path / "out.json"
+    for args in ((), (str(out),), (str(out), "0"), (str(out), "-1"),
+                 (str(out), "two")):
+        p = subprocess.run(
+            [sys.executable, f"{TOOLS}/amp_ab.py", *args],
+            capture_output=True, text=True, env=env, timeout=60,
+        )
+        assert p.returncode == 2, (args, p.stdout, p.stderr)
+        assert "usage:" in p.stderr
+        assert "amplified corpus" not in p.stdout
+    assert not out.exists()
+
+
 def test_staleness_helper_deps_sees_streaming_and_siblings(tmp_path):
     """ADVICE r07: helper_deps must see `from ..streaming.x import`
     (the attribution.py blind spot), sibling `from .x import`, and

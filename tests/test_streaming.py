@@ -7,7 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import INGESTION_LOG
+from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
+    INGESTION_LOG,
+    IngestionEngine,
+)
 from data_ingestion_from_multiple_directories_linux_spark.streaming import StreamingIngestion
 from tests.test_ingest_engine import patient, write_json
 
@@ -478,6 +481,64 @@ def test_all_null_file_audited_failed_like_batch_engine(spark, tmp_path, uploads
     assert log[0]["status"] == "failed"
     assert log[0]["error_message"] == "all rows null after cleansing"
     assert log[0]["json_rec_count"] == 0 and log[0]["bad_rec_count"] == 0
+
+
+def test_batch_and_stream_land_identical_rows(spark, tmp_path, uploads):
+    """Batch and streaming ingest share one sink and one verdict law: an
+    upload tree with one file of each verdict lands the same audit,
+    staging and quarantine rows through IngestionEngine.run as through
+    StreamingIngestion.run_available_now."""
+    keys = ("id", "uuid", "match_type", "match_person_uuid",
+            "match_biometric_id", "date_enrollment", "template")
+
+    def bio(i: int, date: str = "2024-01-01") -> dict:
+        return dict(zip(keys, (i, f"u{i}", "m", "p", "b", date, f"T{i}")))
+
+    write_json(uploads, "FAC001", "biometric_0_20250103141949.json",
+               [bio(1), bio(2)])
+    write_json(uploads, "FAC001", "biometric_1_20250103141950.json",
+               [bio(3), bio(4, "not-a-date")])
+    write_json(uploads, "FAC001", "biometric_2_20250103141951.json",
+               "{this is [ not json")
+    write_json(uploads, "FAC002", "biometric_3_20250103141952.json", [])
+    write_json(uploads, "FAC002", "biometric_4_20250103141953.json",
+               [{k: None for k in keys}] * 2)
+    # space and '+' come back percent-encoded from input_file_name()
+    write_json(uploads, "FAC 05+x", "biometric_5_20250103141954.json",
+               [bio(5)])
+
+    eng = IngestionEngine(spark, str(tmp_path / "wh_batch"))
+    eng.run(uploads)
+    stream = StreamingIngestion(spark, str(tmp_path / "wh_stream"), uploads,
+                                "biometric")
+    stream.run_available_now()
+
+    def rows(store, name, *ignored):
+        df = store.read(name).drop(*ignored)
+        return sorted(
+            (tuple(r) for r in df.select(sorted(df.columns)).collect()), key=repr
+        )
+
+    log = rows(eng.store, INGESTION_LOG, "load_start_time", "load_end_time")
+    assert log == rows(stream.store, INGESTION_LOG, "load_start_time",
+                       "load_end_time")
+    verdicts = {
+        (r["facility_id"], r["status"], r["error_message"])
+        for r in eng.store.read(INGESTION_LOG).collect()
+    }
+    assert verdicts == {
+        ("FAC001", "success", None),
+        ("FAC001", "failed", "1 record(s) failed date validation (quarantined)"),
+        ("FAC001", "failed", "malformed JSON"),
+        ("FAC002", "failed", "JSON file is empty"),
+        ("FAC002", "failed", "all rows null after cleansing"),
+        ("FAC 05+x", "success", None),
+    }
+    for name in ("stg_biometric", "stg_biometric_bad_dates"):
+        landed = rows(eng.store, name, "stg_load_time")
+        assert landed == rows(stream.store, name, "stg_load_time")
+    assert len(rows(eng.store, "stg_biometric")) == 4
+    assert len(rows(eng.store, "stg_biometric_bad_dates")) == 1
 
 
 def test_commit_marker_table_stays_compact(spark, tmp_path, uploads):

@@ -101,7 +101,14 @@ def _run(script: str, env_delta: dict, marker: str) -> dict | str:
     )
 
 
+USAGE = "usage: python tools/amp_ab.py out.json ROTATIONS [query ...] (ROTATIONS >= 1)"
+
+
 def main() -> None:
+    # validate before the expensive corpus build, not after it
+    if len(sys.argv) < 3 or not sys.argv[2].isdigit() or int(sys.argv[2]) < 1:
+        print(USAGE, file=sys.stderr)
+        raise SystemExit(2)
     out_path = sys.argv[1]
     rotations = int(sys.argv[2])
     names = sys.argv[3:] or DEFAULT_OPS

@@ -11,36 +11,30 @@ the cost IVF pays for scanning O(corpus/K_cells) candidates — show up
 as recall < 1000; raising nprobe recovers them, and this is the
 operator that tells you whether you need to.
 
-Scale shape: anchors are a FIXED COUNT (anchors.ANCHOR_COUNT md5-rank
-sampled ids — not a corpus fraction), so the exact ground-truth arm is
-O(ANCHOR_COUNT · corpus): it broadcasts the bounded anchor-query frame
-onto one corpus scan (cosine_topk shape — the audit a 100 TB
-deployment actually runs, its cost constant in corpus size); the IVF
-arm joins cell-mates only; both rankings are per-query windows with
-unique tiebreaks, compared by a left join on (query, neighbor) —
-K-sized frames per query, never corpus-sized.
-
-Recall denominator: per-query exact-arm count, not the constant K —
-on a corpus smaller than K+1 the exact arm yields fewer than K
-neighbors and dividing by K would under-report recall (round-11
-advice); at any real scale the two are identical.
+Scale shape: one caller of the recall law (operators/anchors.py). The
+fixed-count anchor rows broadcast onto one corpus scan (the
+cosine_topk shape, O(ANCHOR_COUNT · corpus) at any scale); every pair
+carries its exact quantized cosine, and the IVF score is that same
+cosine where the two vectors share a probed cell — one
+``arrays_overlap`` over per-vector cell sets, no cell self-join.
 
 Reference parity: none; SURVEY §2.12a additive (L170).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_q, dot_q, sql_cosine_q, sql_dot_q
-from .anchors import anchor_vec_ids, sql_anchor_cte
+from .anchors import anchor_pairs, recall_at_k, sql_anchor_cte, sql_recall_tail
 from .registry import query
 from .similarity import (
     LLOYD_ROUNDS,
     TOPK_NEIGHBORS,
     _assign_cells,
     _ivf_train_assign_ctes,
+    _sql_assign,
     _trained_centroids,
     _vec_corpus,
 )
@@ -54,210 +48,73 @@ def ivf_recall_frame(
 ) -> DataFrame:
     """recall@K of IVF search at any probe width — the shared
     implementation behind the two registered queries (nprobe 1 and
-    {NPROBE_RECOVER}) and bench.py's ``ann_recall_curve`` section,
+    NPROBE_RECOVER) and bench.py's ``ann_recall_curve`` section,
     which records the recall/cost curve over nprobe 1..4 every round
     so the production knob has a measured curve, not two samples.
 
     (query_id, n_overlap, recall_permille) per fixed-count md5-rank
-    anchor; the IVF arm joins probed cell-mates (pairs sharing several
-    probed cells dedupe before ranking), the exact arm broadcasts the
-    anchor frame onto one corpus scan; recall divides by the per-query
-    exact-arm count."""
+    anchor. Each vector carries the set of its ``nprobe`` probed cells,
+    left-joined so an empty index still ranks the exact arm (recall
+    0); a pair sharing several probed cells scores once."""
     corpus = _vec_corpus(spark, sf_dir)
-    centroids = _trained_centroids(spark, sf_dir)
-    probed = _assign_cells(
-        corpus, centroids, nprobe=nprobe
-    ).localCheckpoint(eager=True)
-    # ≤ANCHOR_COUNT rows, consumed by both arms — pin once
-    anchors = anchor_vec_ids(corpus).localCheckpoint(eager=True)
-
-    q = probed.join(F.broadcast(anchors), "vec_id").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qn"),
-        "cell",
+    cells = (
+        _assign_cells(corpus, _trained_centroids(spark, sf_dir), nprobe=nprobe)
+        .groupBy("vec_id")
+        .agg(F.collect_set("cell").alias("cells"))
     )
-    c = probed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv_"),
-        F.col("nv").alias("cn"),
-        F.col("cell").alias("cell_c"),
-    )
-    cos = cosine_q(dot_q("qv", "cv_"), F.col("qn"), F.col("cn"))
-    rnk = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    )
-    ivf = q.join(
-        c,
-        (F.col("cell") == F.col("cell_c"))
-        & (F.col("neighbor_id") != F.col("query_id")),
-    ).select("query_id", "neighbor_id", cos.alias("cosine"))
-    if nprobe > 1:
-        # a pair sharing several probed cells scores once
-        ivf = ivf.distinct()
-    ivf = (
-        ivf.withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= TOPK_NEIGHBORS)
-        .select("query_id", "neighbor_id")
-    )
-
-    eq = corpus.join(F.broadcast(anchors), "vec_id").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qn"),
-    )
-    ec = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("v").alias("cv_"),
-        F.col("nv").alias("cn"),
-    )
-    exact = (
-        F.broadcast(eq)
-        .crossJoin(ec)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= TOPK_NEIGHBORS)
-        .select("query_id", "neighbor_id")
-    )
-    hit = F.when(F.col("_hit").isNotNull(), 1).otherwise(0)
-    return (
-        exact.join(
-            ivf.withColumn("_hit", F.lit(1)),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.sum(hit).cast("long").alias("n_overlap"),
-            # exact-arm size: == K at any real scale, < K only on a
-            # corpus smaller than K+1 (per-query denominator, r11 advice)
-            F.count("*").cast("long").alias("n_exact"),
-        )
-        .select(
+    # both pair sides and the anchor sample read it — pin once
+    vecs = corpus.join(cells, "vec_id", "left").localCheckpoint(eager=True)
+    exact = cosine_q(dot_q("q_v", "v"), F.col("q_nv"), F.col("nv"))
+    return recall_at_k(
+        anchor_pairs(vecs).select(
             "query_id",
-            "n_overlap",
-            F.expr("CAST((1000 * n_overlap) DIV n_exact AS BIGINT)").alias(
-                "recall_permille"
-            ),
-        )
+            "neighbor_id",
+            exact.alias("exact"),
+            F.when(F.arrays_overlap("q_cells", "cells"), exact).alias("approx"),
+        ),
+        TOPK_NEIGHBORS,
     )
 
 
-def _recall_oracle_sql() -> str:
+def _recall_oracle_sql(nprobe: int) -> str:
     cos = sql_cosine_q(sql_dot_q("q.v", "c.v"), "q.nv", "c.nv")
+    # ground truth reads CORPUS, not the assignment: on a corpus whose
+    # training sample is empty (single-row sweep) the index is empty
+    # but the exact arm still ranks — recall 0, not "no rows"
     return f"""
     {_ivf_train_assign_ctes()},
     anchors AS ({sql_anchor_cte('corpus')}),
-    ivf AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                      ORDER BY {cos} DESC, c.vec_id) AS rnk
-            FROM assigned q JOIN assigned c
-              ON q.cell = c.cell AND c.vec_id != q.vec_id
-            WHERE q.vec_id IN (SELECT vec_id FROM anchors)
-        ) WHERE rnk <= {TOPK_NEIGHBORS}
-    ),
-    exact AS (
-        -- ground truth reads CORPUS, not the assignment: on a corpus
-        -- whose training sample is empty (single-row sweep) the index
-        -- is empty but the exact arm still ranks — recall 0, not "no
-        -- rows" (matches the Spark arm and the nprobe2 twin)
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                      ORDER BY {cos} DESC, c.vec_id) AS rnk
-            FROM corpus q JOIN corpus c ON c.vec_id != q.vec_id
-            WHERE q.vec_id IN (SELECT vec_id FROM anchors)
-        ) WHERE rnk <= {TOPK_NEIGHBORS}
-    )
-    SELECT e.query_id,
-           CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_overlap,
-           CAST((1000 * SUM(CASE WHEN i.neighbor_id IS NOT NULL
-                                 THEN 1 ELSE 0 END)) // COUNT(*)
-                AS BIGINT) AS recall_permille
-    FROM exact e LEFT JOIN ivf i
-      ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-    GROUP BY e.query_id
-    """
-
-
-@query("ivf_recall_eval", oracle=_recall_oracle_sql())
-def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, n_overlap, recall_permille) — recall@{TOPK_NEIGHBORS}
-    of the trained-IVF cell-pruned search against exact brute-force
-    cosine ground truth, per anchor query. The IVF arm and the trained
-    assignment are byte-identical to ``ivf_topk_neighbors``; the exact
-    arm is the ``cosine_topk`` shape over the same query set, so this
-    measures ONLY the index's cell-boundary loss. Anchors are the
-    fixed-count md5-rank sample (anchors.py) — audit cost is
-    O(ANCHOR_COUNT · corpus) at any scale."""
-    return ivf_recall_frame(spark, sf_dir, nprobe=1)
-
-
-def _recall_nprobe2_oracle_sql() -> str:
-    cos = sql_cosine_q(sql_dot_q("q.v", "c.v"), "q.nv", "c.nv")
-    assign_cos = sql_cosine_q(
-        sql_dot_q("corpus.v", "k.cv"), "corpus.nv", "k.ncv"
-    )
-    return f"""
-    {_ivf_train_assign_ctes()},
-    anchors AS ({sql_anchor_cte('corpus')}),
-    probed AS (
-        SELECT vec_id, v, nv, cell FROM (
-            SELECT corpus.vec_id, corpus.v, corpus.nv, k.cid AS cell,
-                   ROW_NUMBER() OVER (PARTITION BY corpus.vec_id
-                                      ORDER BY {assign_cos} DESC, k.cid)
-                       AS rn
-            FROM corpus, cent{LLOYD_ROUNDS} k)
-        WHERE rn <= {NPROBE_RECOVER}
-    ),
-    cand AS (
+    {_sql_assign(f'cent{LLOYD_ROUNDS}', 'corpus', 'probed', nprobe)},
+    approx AS (
         SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               {cos} AS cosine
+               {cos} AS approx
         FROM probed q JOIN probed c
           ON q.cell = c.cell AND c.vec_id != q.vec_id
         WHERE q.vec_id IN (SELECT vec_id FROM anchors)
     ),
-    ivf AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY cosine DESC, neighbor_id)
-                       AS rnk
-            FROM cand
-        ) WHERE rnk <= {TOPK_NEIGHBORS}
-    ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                      ORDER BY {cos} DESC, c.vec_id) AS rnk
-            FROM corpus q JOIN corpus c ON c.vec_id != q.vec_id
-            WHERE q.vec_id IN (SELECT vec_id FROM anchors)
-        ) WHERE rnk <= {TOPK_NEIGHBORS}
-    )
-    SELECT e.query_id,
-           CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_overlap,
-           CAST((1000 * SUM(CASE WHEN i.neighbor_id IS NOT NULL
-                                 THEN 1 ELSE 0 END)) // COUNT(*)
-                AS BIGINT) AS recall_permille
-    FROM exact e LEFT JOIN ivf i
-      ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
-    GROUP BY e.query_id
-    """
+    {sql_recall_tail('corpus', cos, TOPK_NEIGHBORS)}"""
 
 
-@query("ivf_recall_eval_nprobe2", oracle=_recall_nprobe2_oracle_sql())
+@query("ivf_recall_eval", oracle=_recall_oracle_sql(1))
+def ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, n_overlap, recall_permille) — recall@TOPK_NEIGHBORS
+    of the trained-IVF cell-pruned search against exact brute-force
+    cosine ground truth, per anchor query. The trained assignment is
+    ``ivf_topk_neighbors``'s; the exact arm is the ``cosine_topk``
+    shape over the same query set, so this measures ONLY the index's
+    cell-boundary loss. Anchors are the fixed-count md5-rank sample
+    (anchors.py) — audit cost is O(ANCHOR_COUNT · corpus) at any
+    scale."""
+    return ivf_recall_frame(spark, sf_dir, nprobe=1)
+
+
+@query("ivf_recall_eval_nprobe2", oracle=_recall_oracle_sql(NPROBE_RECOVER))
 def ivf_recall_eval_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The recovery twin of ``ivf_recall_eval``: the same recall@K
-    measurement with each vector probed into its {NPROBE_RECOVER} best
-    cells (``_assign_cells(nprobe=2)`` — vectors near a Voronoi face
-    meet their neighbors across it). Candidate (query, neighbor) pairs
-    that share both probed cells are deduplicated before ranking.
-    Read next to ``ivf_recall_eval``: the recall lift between the two
-    rows IS the measured boundary-loss recovery nprobe buys, at ~2×
-    pair-stage cost — the knob a production deployment tunes."""
+    measurement with each vector probed into its NPROBE_RECOVER best
+    cells (``_assign_cells(nprobe=NPROBE_RECOVER)`` — vectors near a
+    Voronoi face meet their neighbors across it). Read next to
+    ``ivf_recall_eval``: the recall lift between the two rows IS the
+    measured boundary-loss recovery nprobe buys — the knob a
+    production deployment tunes."""
     return ivf_recall_frame(spark, sf_dir, nprobe=NPROBE_RECOVER)

@@ -9,18 +9,15 @@ full ranking finds. That "if" is an empirical, corpus-specific number
 between the full-dim cosine top-K and the prefix-dim cosine top-K
 (recall@K of truncated search against the full-dim ground truth).
 
-One pass: the bounded anchor-query frame — a FIXED-count md5-rank
-sample (anchors.py), so the eval costs O(ANCHOR_COUNT · corpus) at
-any scale — broadcasts onto the corpus scan (the cosine_topk shape:
-queries ≪ corpus, corpus never shuffles), both quantized cosines are
-computed per pair from the same row, and two per-query ranking
-windows produce the two top-K sets side by side; overlap is a
-conditional count, no second scan and no join between the rankings.
-The recall denominator is the per-query full-dim top-K count (== K
-except on a corpus smaller than K+1; round-11 advice).
+One pass, as a caller of the recall law (operators/anchors.py): the
+fixed-count anchor rows broadcast onto the corpus scan (the
+cosine_topk shape — O(ANCHOR_COUNT · corpus) at any scale, the corpus
+never shuffles), and both quantized cosines are computed per pair from
+the same row: the full-dim one is ``exact``, the prefix one
+``approx``.
 
 Determinism: quantized integer cosines (functions/vectors), unique
-vec_id tiebreaks in both windows, truncation is an exact list prefix
+vec_id tiebreaks in both rankings, truncation is an exact list prefix
 — both engines slice identically.
 
 Reference parity: none; SURVEY §2.12a additive (L168).
@@ -28,7 +25,7 @@ Reference parity: none; SURVEY §2.12a additive (L168).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import (
@@ -40,7 +37,7 @@ from ..functions.vectors import (
     sql_norm_sq_q,
     to_double_array,
 )
-from .anchors import anchor_vec_ids, sql_anchor_cte
+from .anchors import anchor_pairs, recall_at_k, sql_anchor_cte, sql_recall_tail
 from .registry import query
 from .similarity import E_SQL, load_embeddings
 
@@ -50,105 +47,44 @@ MRL_K = 10
 MRL_TRUNC_DIM = 16
 
 
+def _sql_cos(a: str, b: str) -> str:
+    return sql_cosine_q(sql_dot_q(a, b), sql_norm_sq_q(a), sql_norm_sq_q(b))
+
+
 @query(
     "matryoshka_recall_eval",
     oracle=f"""
     WITH e AS ({E_SQL}),
     anchors AS ({sql_anchor_cte('e')}),
-    q AS (
-        SELECT vec_id AS qid, v AS qv, list_slice(v, 1, {MRL_TRUNC_DIM}) AS qt
-        FROM e WHERE vec_id IN (SELECT vec_id FROM anchors)
+    approx AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+               {_sql_cos(f'list_slice(c.v, 1, {MRL_TRUNC_DIM})',
+                         f'list_slice(q.v, 1, {MRL_TRUNC_DIM})')} AS approx
+        FROM e q JOIN e c ON c.vec_id != q.vec_id
+        WHERE q.vec_id IN (SELECT vec_id FROM anchors)
     ),
-    pair AS (
-        SELECT q.qid, e.vec_id,
-               {sql_cosine_q(sql_dot_q('e.v', 'q.qv'),
-                             sql_norm_sq_q('e.v'),
-                             sql_norm_sq_q('q.qv'))} AS cos_full,
-               {sql_cosine_q(
-                   sql_dot_q(f'list_slice(e.v, 1, {MRL_TRUNC_DIM})', 'q.qt'),
-                   sql_norm_sq_q(f'list_slice(e.v, 1, {MRL_TRUNC_DIM})'),
-                   sql_norm_sq_q('q.qt'))} AS cos_trunc
-        FROM e, q WHERE e.vec_id <> q.qid
-    ),
-    ranked AS (
-        SELECT qid, vec_id,
-               row_number() OVER (PARTITION BY qid
-                                  ORDER BY cos_full DESC, vec_id) AS rn_full,
-               row_number() OVER (PARTITION BY qid
-                                  ORDER BY cos_trunc DESC, vec_id) AS rn_trunc
-        FROM pair
-    )
-    SELECT qid AS query_id,
-           CAST(SUM(CASE WHEN rn_full <= {MRL_K} AND rn_trunc <= {MRL_K}
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_overlap,
-           CAST((1000 * SUM(CASE WHEN rn_full <= {MRL_K}
-                                  AND rn_trunc <= {MRL_K}
-                            THEN 1 ELSE 0 END))
-                // SUM(CASE WHEN rn_full <= {MRL_K} THEN 1 ELSE 0 END)
-                AS BIGINT)
-               AS recall_permille
-    FROM ranked GROUP BY qid
-    """,
+    {sql_recall_tail('e', _sql_cos('c.v', 'q.v'), MRL_K)}""",
 )
 def matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(query_id, n_overlap, recall_permille) per anchor query: how
-    many of the full-dim cosine top-{MRL_K} neighbors the
-    {MRL_TRUNC_DIM}-dim prefix ("matryoshka") ranking also puts in its
-    top-{MRL_K} — recall@{MRL_K} of truncated search vs the full-dim
+    many of the full-dim cosine top-MRL_K neighbors the
+    MRL_TRUNC_DIM-dim prefix ("matryoshka") ranking also puts in its
+    top-MRL_K — recall@MRL_K of truncated search vs the full-dim
     ground truth, the number that decides whether a 4×-smaller index
     is safe to serve."""
     e = load_embeddings(spark, sf_dir).select(
         "vec_id", to_double_array("embedding").alias("v")
     )
     e = e.select("vec_id", "v", F.slice("v", 1, MRL_TRUNC_DIM).alias("vt"))
-    q = (
-        e.join(F.broadcast(anchor_vec_ids(e)), "vec_id")
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("vt").alias("qt"),
-            norm_sq_q("v").alias("nqv"),
-            norm_sq_q("vt").alias("nqt"),
-        )
-    )
-    pair = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            cosine_q(dot_q("v", "qv"), norm_sq_q("v"), F.col("nqv")).alias(
-                "cos_full"
-            ),
-            cosine_q(dot_q("vt", "qt"), norm_sq_q("vt"), F.col("nqt")).alias(
-                "cos_trunc"
-            ),
-        )
-    )
-    rn_full = F.row_number().over(
-        W.partitionBy("qid").orderBy(F.desc("cos_full"), F.asc("vec_id"))
-    )
-    rn_trunc = F.row_number().over(
-        W.partitionBy("qid").orderBy(F.desc("cos_trunc"), F.asc("vec_id"))
-    )
-    hit = (rn_full <= MRL_K) & (rn_trunc <= MRL_K)
-    return (
-        pair.select(
-            "qid",
-            F.when(hit, 1).otherwise(0).alias("_hit"),
-            # full-dim top-K size — the per-query recall denominator
-            F.when(rn_full <= MRL_K, 1).otherwise(0).alias("_ex"),
-        )
-        .groupBy(F.col("qid").alias("query_id"))
-        .agg(
-            F.sum("_hit").cast("long").alias("n_overlap"),
-            F.sum("_ex").cast("long").alias("n_exact"),
-        )
-        .select(
+    e = e.select("*", norm_sq_q("v").alias("nv"), norm_sq_q("vt").alias("nvt"))
+    return recall_at_k(
+        anchor_pairs(e).select(
             "query_id",
-            "n_overlap",
-            F.expr("CAST((1000 * n_overlap) DIV n_exact AS BIGINT)").alias(
-                "recall_permille"
+            "neighbor_id",
+            cosine_q(dot_q("v", "q_v"), F.col("nv"), F.col("q_nv")).alias("exact"),
+            cosine_q(dot_q("vt", "q_vt"), F.col("nvt"), F.col("q_nvt")).alias(
+                "approx"
             ),
-        )
+        ),
+        MRL_K,
     )

@@ -11,183 +11,71 @@ the family for the two COMPRESSION losses the engine ships:
   exact quantized-dot ranking. What the 256×-smaller code corpus costs
   in ranking fidelity, per anchor query.
 * **SQ8** (L175, ``sq8_recall_eval``) — recall@K of the int8 scalar-
-  quantized dot ranking (``sq8_quantized_topk``'s pipeline: global
-  per-dimension scales, symmetric codes) against the same exact
-  ranking. The 8×-compression loss — far milder than PQ's but NOT
-  free on this near-orthogonal corpus (measured ~750 permille vs
-  PQ's ~100 at the demo code sizes): top-K membership among near-tie
-  dots is exactly where one code step per dimension bites, which is
-  why the number must be measured rather than assumed.
+  quantized dot ranking (``sq8_quantized_topk``'s quantizer,
+  ``similarity.sq8_codes``) against the same exact ranking. The
+  8×-compression loss — far milder than PQ's but NOT free on this
+  near-orthogonal corpus (measured ~750 permille vs PQ's ~100 at the
+  demo code sizes): top-K membership among near-tie dots is exactly
+  where one code step per dimension bites, which is why the number
+  must be measured rather than assumed.
 
-Both anchors are the FIXED-COUNT md5-rank sample (operators/anchors) —
-the audits cost O(ANCHOR_COUNT · corpus) at any scale: the approximate
-arm probes codes (bytes per vector), the exact arm broadcasts the
-anchor frame onto one corpus scan, and the overlap join is K-sized per
-query. Recall divides by the per-query exact-arm count (the annrecall
-denominator convention).
+Both are callers of the recall law (operators/anchors.py): the
+fixed-count anchor rows broadcast onto one corpus scan, every pair
+scored by the exact quantized dot and by the compressed score, both
+ranked per query in one pass — O(ANCHOR_COUNT · corpus) at any scale.
 
-Oracle note: the PQ training/encoding CTE prefix mirrors
-``similarity._pq_oracle_sql`` (seeding, the Lloyd round, corpus
-encoding) — the Spark side runs the SHARED ``_trained_pq_codebooks`` /
-``_pq_assign``, so any drift between the two pipelines fails the
-hash-compare loudly rather than silently diverging.
+Oracle note: the PQ oracle trains and encodes through the same SQL
+builder as ``pq_topk_adc``'s (``similarity._sql_pq_ctes``) and ranks
+by the M×K lookup-table join — an independent form of the Spark side's
+decoded-vector dot, so any drift between the two fails the hash-compare
+loudly rather than silently diverging.
 
 Reference parity: none; SURVEY §2.12a additive (L174/L175).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_q, sql_dot_q, to_double_array
-from .anchors import anchor_vec_ids, sql_anchor_cte
+from .anchors import (
+    anchor_pairs,
+    anchor_vec_ids,
+    recall_at_k,
+    sql_anchor_cte,
+    sql_recall_tail,
+)
 from .registry import query
 from .similarity import (
     E_SQL,
-    PQ_K,
-    PQ_M,
-    PQ_SUBDIM,
-    SQ_LEVELS,
     TOPK_NEIGHBORS,
-    TRAIN_SAMPLE_BELOW,
     _pq_assign,
     _pq_slices,
+    _sql_pq_ctes,
+    _sql_sq8_ctes,
+    _sql_sq8_dot,
     _trained_pq_codebooks,
     load_embeddings,
+    sq8_codes,
+    sq8_dot,
 )
 
-#: DuckDB twin of the PQ train+encode prefix (see module docstring) —
-#: produces CTEs e/base/ms/bsl/seedv/cent0/assign0/cent1/csl/codes.
-_SL = f"list_slice(v, m * {PQ_SUBDIM} + 1, m * {PQ_SUBDIM} + {PQ_SUBDIM})"
+#: the exact arm both oracles share: quantized dot over the corpus
+_SQL_EXACT_DOT = sql_dot_q("q.v", "c.v")
 
 
-def _sql_pq_dist(sv: str, cv: str) -> str:
-    return (
-        f"{sql_dot_q(sv, sv)} + {sql_dot_q(cv, cv)}"
-        f" - 2 * ({sql_dot_q(sv, cv)})"
-    )
-
-
-def _pq_prefix_ctes() -> str:
-    assign = f"""
-        SELECT vec_id, m, sv, cell FROM (
-            SELECT s.vec_id, s.m, s.sv, c.cid AS cell,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-                       ORDER BY {_sql_pq_dist('s.sv', 'c.cv')} ASC, c.cid)
-                       AS rn
-            FROM {{src}} s JOIN {{cent}} c ON c.m = s.m)
-        WHERE rn = 1
-    """
-    return f"""
-    WITH e AS ({E_SQL}),
-    base AS (
-        SELECT vec_id, v FROM e
-        WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
-              < '{TRAIN_SAMPLE_BELOW}'
-    ),
-    ms AS (SELECT unnest(range({PQ_M})) AS m),
-    bsl AS (SELECT vec_id, m, {_SL} AS sv FROM base, ms),
-    seedv AS (
-        SELECT rn - 1 AS cid, v FROM (
-            SELECT v, ROW_NUMBER() OVER (
-                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-            FROM base)
-        WHERE rn <= {PQ_K}
-    ),
-    cent0 AS (SELECT m, cid, {_SL} AS cv
-              FROM (SELECT cid, v FROM seedv), ms),
-    assign0 AS ({assign.format(src='bsl', cent='cent0')}),
-    cent1 AS (
-        SELECT m, cell AS cid, list(mean ORDER BY i) AS cv FROM (
-            SELECT m, cell, i,
-                   CAST(CAST(SUM(CAST(floor(sv[i+1] * 1e9) AS BIGINT))
-                             AS BIGINT) AS DOUBLE)
-                   / (1000000000.0 * COUNT(*)) AS mean
-            FROM assign0, (SELECT unnest(range({PQ_SUBDIM})) AS i) t
-            GROUP BY m, cell, i)
-        GROUP BY m, cell
-    ),
-    csl AS (SELECT vec_id, m, {_SL} AS sv FROM e, ms),
-    codes AS ({assign.format(src='csl', cent='cent1')})"""
-
-
-#: shared final projection: overlap counts + per-query-denominator
-#: recall (the annrecall convention).
-_SQL_OVERLAP = f"""
-    SELECT e2.query_id,
-           CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_overlap,
-           CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL
-                                 THEN 1 ELSE 0 END)) // COUNT(*)
-                AS BIGINT) AS recall_permille
-    FROM exact e2 LEFT JOIN approx a
-      ON e2.query_id = a.query_id AND e2.neighbor_id = a.neighbor_id
-    GROUP BY e2.query_id
-"""
-
-_SQL_EXACT_ARM = f"""
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                       ORDER BY {sql_dot_q('q.v', 'c.v')} DESC, c.vec_id)
-                       AS rnk
-            FROM e q JOIN e c ON c.vec_id != q.vec_id
-            WHERE q.vec_id IN (SELECT vec_id FROM anchors)
-        ) WHERE rnk <= {TOPK_NEIGHBORS}
-    )"""
-
-
-def _overlap(exact: DataFrame, approx: DataFrame) -> DataFrame:
-    """(query_id, n_overlap, recall_permille) from two (query_id,
-    neighbor_id) top-K frames — K-sized per query, never corpus-sized."""
-    hit = F.when(F.col("_hit").isNotNull(), 1).otherwise(0)
-    return (
-        exact.join(
-            approx.withColumn("_hit", F.lit(1)),
-            ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.sum(hit).cast("long").alias("n_overlap"),
-            F.count("*").cast("long").alias("n_exact"),
-        )
-        .select(
-            "query_id",
-            "n_overlap",
-            F.expr("CAST((1000 * n_overlap) DIV n_exact AS BIGINT)").alias(
-                "recall_permille"
-            ),
-        )
-    )
-
-
-def _exact_arm(e: DataFrame, anchors: DataFrame) -> DataFrame:
-    """Exact quantized-dot top-K per anchor: broadcast the bounded
-    anchor frame onto one corpus scan (the cosine_topk shape)."""
-    q = e.join(F.broadcast(anchors), "vec_id").select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    rnk = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.desc("xdot"), "neighbor_id")
-    )
-    return (
-        F.broadcast(q)
-        .crossJoin(e.select(F.col("vec_id").alias("neighbor_id"), "v"))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", dot_q("qv", "v").alias("xdot"))
-        .withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= TOPK_NEIGHBORS)
-        .select("query_id", "neighbor_id")
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_embeddings(spark, sf_dir).select(
+        "vec_id", to_double_array("embedding").alias("v")
     )
 
 
 @query(
     "pq_recall_eval",
     oracle=f"""
-    {_pq_prefix_ctes()},
+    WITH e AS ({E_SQL}),
+    {_sql_pq_ctes('', 'e', 'e')},
     anchors AS ({sql_anchor_cte('e')}),
     qtab AS (
         SELECT q.vec_id AS query_id, c.m, c.cid,
@@ -195,65 +83,46 @@ def _exact_arm(e: DataFrame, anchors: DataFrame) -> DataFrame:
         FROM csl q JOIN cent1 c ON c.m = q.m
         WHERE q.vec_id IN (SELECT vec_id FROM anchors)
     ),
-    adc AS (
+    approx AS (
         SELECT t.query_id, k.vec_id AS neighbor_id,
-               CAST(SUM(t.pdot) AS BIGINT) AS adc_dot
+               CAST(SUM(t.pdot) AS BIGINT) AS approx
         FROM codes k
         JOIN qtab t ON t.m = k.m AND t.cid = k.cell
                     AND k.vec_id != t.query_id
         GROUP BY t.query_id, k.vec_id
     ),
-    approx AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY adc_dot DESC, neighbor_id) AS rnk
-            FROM adc
-        ) WHERE rnk <= {TOPK_NEIGHBORS}
-    ),
-    {_SQL_EXACT_ARM}
-    {_SQL_OVERLAP}
-    """,
+    {sql_recall_tail('e', _SQL_EXACT_DOT, TOPK_NEIGHBORS)}""",
 )
 def pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, n_overlap, recall_permille) — recall@{TOPK_NEIGHBORS}
+    """(query_id, n_overlap, recall_permille) — recall@TOPK_NEIGHBORS
     of the PQ-ADC ranking against the exact quantized-dot ranking, per
-    fixed-count anchor. Codebooks and encoder are byte-identical to
-    ``pq_topk_adc`` (shared ``_trained_pq_codebooks``/``_pq_assign``),
-    so this measures ONLY the quantization loss of the 256×-smaller
-    code corpus."""
-    e = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("v")
-    )
+    fixed-count anchor. Codebooks and encoder are ``pq_topk_adc``'s
+    (shared ``_trained_pq_codebooks``/``_pq_assign``), so this
+    measures ONLY the quantization loss of the 256×-smaller code
+    corpus. The ADC score Σ_m dot(q_m, centroid[m][code_m]) is one
+    quantized dot of the query with the neighbor's decoded code
+    centroids — dot_q is an elementwise BIGINT sum, so it equals the
+    M×K lookup-table sum exactly."""
+    e = _vectors(spark, sf_dir)
     cent = _trained_pq_codebooks(spark, sf_dir)
-    csl = _pq_slices(e.select("vec_id", "v"), ["vec_id"])
-    codes = _pq_assign(csl, cent).select("vec_id", "m", "cell")
-    anchors = anchor_vec_ids(e).localCheckpoint(eager=True)
-
-    # per-anchor M×K lookup tables — ≤ ANCHOR_COUNT·PQ_M·PQ_K rows
-    qtab = (
-        csl.join(F.broadcast(anchors), "vec_id")
-        .select(F.col("vec_id").alias("query_id"), "m", "sv")
-        .join(F.broadcast(cent), "m")
-        .select("query_id", "m", "cid", dot_q("sv", "cv").alias("pdot"))
+    decoded = (
+        _pq_assign(_pq_slices(e, ["vec_id"]), cent)
+        .join(F.broadcast(cent.withColumnRenamed("cid", "cell")), ["m", "cell"])
+        .groupBy("vec_id")
+        .agg(F.array_sort(F.collect_list(F.struct("m", "cv"))).alias("mc"))
+        .select("vec_id", F.flatten(F.transform("mc", lambda s: s["cv"])).alias("pq"))
     )
-    rnk = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.desc("adc_dot"), "neighbor_id")
+    # left join: an empty codebook leaves pq NULL — recall 0, not no rows
+    pairs = anchor_pairs(e.join(decoded, "vec_id", "left"), anchor_vec_ids(e))
+    return recall_at_k(
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            dot_q("q_v", "v").alias("exact"),
+            dot_q("q_v", "pq").alias("approx"),
+        ),
+        TOPK_NEIGHBORS,
     )
-    adc = (
-        codes.join(
-            F.broadcast(qtab),
-            (codes["m"] == qtab["m"])
-            & (codes["cell"] == qtab["cid"])
-            & (codes["vec_id"] != qtab["query_id"]),
-        )
-        .groupBy("query_id", codes["vec_id"].alias("neighbor_id"))
-        .agg(F.sum("pdot").cast("long").alias("adc_dot"))
-        .withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= TOPK_NEIGHBORS)
-        .select("query_id", "neighbor_id")
-    )
-    return _overlap(_exact_arm(e, anchors), adc)
 
 
 @query(
@@ -261,93 +130,30 @@ def pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH e AS ({E_SQL}),
     anchors AS ({sql_anchor_cte('e')}),
-    ex AS (
-        SELECT vec_id, generate_subscripts(v, 1) AS pos, unnest(v) AS x
-        FROM e
-    ),
-    sc AS (
-        SELECT list(s ORDER BY pos) AS scales
-        FROM (SELECT pos, max(abs(x)) AS s FROM ex GROUP BY pos)
-    ),
-    qe AS (
-        SELECT vec_id,
-               list_transform(range(len(v)), i ->
-                   CASE WHEN scales[i+1] > 0
-                        THEN CAST(floor((v[i+1] * {SQ_LEVELS}.0)
-                                        / scales[i+1]) AS BIGINT)
-                        ELSE 0 END) AS q
-        FROM e, sc
-    ),
-    qdots AS (
+    {_sql_sq8_ctes('vec_id')},
+    approx AS (
         SELECT a.vec_id AS query_id, c.vec_id AS neighbor_id,
-               CAST(list_sum(list_transform(range(len(a.q)),
-                    i -> a.q[i+1] * c.q[i+1])) AS BIGINT) AS qdot
+               {_sql_sq8_dot('a.q', 'c.q')} AS approx
         FROM qe a JOIN qe c ON c.vec_id != a.vec_id
         WHERE a.vec_id IN (SELECT vec_id FROM anchors)
     ),
-    approx AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   ROW_NUMBER() OVER (PARTITION BY query_id
-                       ORDER BY qdot DESC, neighbor_id) AS rnk
-            FROM qdots
-        ) WHERE rnk <= {TOPK_NEIGHBORS}
-    ),
-    {_SQL_EXACT_ARM}
-    {_SQL_OVERLAP}
-    """,
+    {sql_recall_tail('e', _SQL_EXACT_DOT, TOPK_NEIGHBORS)}""",
 )
 def sq8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, n_overlap, recall_permille) — recall@{TOPK_NEIGHBORS}
+    """(query_id, n_overlap, recall_permille) — recall@TOPK_NEIGHBORS
     of the int8 scalar-quantized dot ranking against the exact
     quantized-dot ranking, per fixed-count anchor. Scales and codes are
-    the ``sq8_quantized_topk`` pipeline verbatim; the measured number
-    is what 8× compression costs in ranking fidelity (vs PQ's 256× —
-    read the two evals together)."""
-    e = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array("embedding").alias("v")
+    ``sq8_quantized_topk``'s quantizer (``sq8_codes``); the measured
+    number is what 8× compression costs in ranking fidelity (vs PQ's
+    256× — read the two evals together)."""
+    e = _vectors(spark, sf_dir)
+    pairs = anchor_pairs(sq8_codes(e, "vec_id", "v"), anchor_vec_ids(e))
+    return recall_at_k(
+        pairs.select(
+            "query_id",
+            "neighbor_id",
+            dot_q("q_v", "v").alias("exact"),
+            sq8_dot("q_q", "q").alias("approx"),
+        ),
+        TOPK_NEIGHBORS,
     )
-    anchors = anchor_vec_ids(e).localCheckpoint(eager=True)
-    scales = (
-        e.select(F.posexplode("v").alias("pos", "x"))
-        .groupBy("pos")
-        .agg(F.max(F.abs(F.col("x"))).alias("s"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "s"))),
-                lambda kv: kv.getField("s"),
-            ).alias("scales")
-        )
-    )
-    quantize = lambda vec: F.zip_with(  # noqa: E731
-        vec,
-        F.col("scales"),
-        lambda x, s: F.when(
-            s > F.lit(0.0),
-            F.floor((x * F.lit(float(SQ_LEVELS))) / s).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-    qe = e.crossJoin(F.broadcast(scales)).select(
-        "vec_id", quantize(F.col("v")).alias("q")
-    )
-    aq = qe.join(F.broadcast(anchors), "vec_id").select(
-        F.col("vec_id").alias("query_id"), F.col("q").alias("aq")
-    )
-    idot = F.aggregate(
-        F.zip_with(F.col("aq"), F.col("q"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    rnk = F.row_number().over(
-        W.partitionBy("query_id").orderBy(F.desc("qdot"), "neighbor_id")
-    )
-    approx = (
-        F.broadcast(aq)
-        .crossJoin(qe.select(F.col("vec_id").alias("neighbor_id"), "q"))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", idot.alias("qdot"))
-        .withColumn("rnk", rnk)
-        .filter(F.col("rnk") <= TOPK_NEIGHBORS)
-        .select("query_id", "neighbor_id")
-    )
-    return _overlap(_exact_arm(e, anchors), approx)

@@ -23,7 +23,7 @@ vec_id % 5 == 0 → a perturbed copy at vec_id + 10000
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -367,8 +367,9 @@ def _assign_cells(
     )
 
 
-def _sql_assign(cent: str, src: str, out: str) -> str:
-    """CTE: assign ``src`` rows to nearest centroid in ``cent``."""
+def _sql_assign(cent: str, src: str, out: str, nprobe: int = 1) -> str:
+    """CTE: assign ``src`` rows to their ``nprobe`` nearest centroids in
+    ``cent`` (one row per probed cell, as :func:`_assign_cells`)."""
     cos = sql_cosine_q(sql_dot_q(f"{src}.v", "c.cv"), f"{src}.nv", "c.ncv")
     return f"""
     {out} AS (
@@ -377,7 +378,7 @@ def _sql_assign(cent: str, src: str, out: str) -> str:
                    ROW_NUMBER() OVER (PARTITION BY {src}.vec_id
                                       ORDER BY {cos} DESC, c.cid) AS rn
             FROM {src}, {cent} c)
-        WHERE rn = 1
+        WHERE rn <= {nprobe}
     )"""
 
 
@@ -781,62 +782,14 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQ_LEVELS = 127  #: int8 symmetric range: codes in [-127, 127]
 
 
-@query(
-    "sq8_quantized_topk",
-    oracle=f"""
-    WITH e AS ({E_SQL}),
-    ex AS (
-        SELECT vec_id, generate_subscripts(v, 1) AS pos, unnest(v) AS x
-        FROM e
-    ),
-    sc AS (
-        SELECT list(s ORDER BY pos) AS scales
-        FROM (SELECT pos, max(abs(x)) AS s FROM ex GROUP BY pos)
-    ),
-    qe AS (
-        SELECT vec_id, label,
-               list_transform(range(len(v)), i ->
-                   CASE WHEN scales[i+1] > 0
-                        THEN CAST(floor((v[i+1] * 127.0) / scales[i+1]) AS BIGINT)
-                        ELSE 0 END) AS q
-        FROM e, sc
-    ),
-    qq AS (SELECT q AS qv FROM qe WHERE vec_id = {QUERY_VEC_ID})
-    SELECT qe.vec_id, qe.label,
-           CAST(list_sum(list_transform(range(len(q)), i -> q[i+1] * qv[i+1]))
-                AS BIGINT) AS qdot
-    FROM qe, qq
-    WHERE qe.vec_id <> {QUERY_VEC_ID}
-    ORDER BY qdot DESC, qe.vec_id
-    LIMIT {TOP_K}
-    """,
-)
-def sq8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k by int8 scalar-quantized dot product — the SQ8 compressed
-    index of FAISS/Lucene as DataFrame ops: per-dimension symmetric
-    quantization ``code = floor(x·127 / max_d|x|)`` shrinks the corpus
-    8x vs float64 math (the 100 TB win: the scan reads 1 byte/dim and
-    the dot is integer SIMD), at a ranking error bounded by one code
-    step per dimension.
-
-    Two passes: (1) per-dimension scales — posexplode → 64-group
-    partial-agg MAX(ABS(x)) → one array row broadcast back (at 100 TB
-    scales train on a sample, like the IVF centroids); (2) quantize
-    both sides with codegen'd zip_with, integer-dot against the
-    broadcast query codes, TakeOrderedAndProject. Determinism: MAX is
-    order-independent, ``(x·127.0)/s`` is one IEEE expression written
-    identically in both engines, floor is exact, and the integer dot
-    sum is order-independent — the same contract as functions.vectors.
-
-    Exactness vs cosine_topk: ranking by unnormalized quantized dot —
-    the oracle replicates the FULL quantization pipeline, so the check
-    certifies codes, not only the winner set."""
-    # spread=False: posexplode→partial-agg is the whole pre-shuffle map
-    # work; the rebalance exchange is a measured net tax here (module
-    # docstring of load_embeddings)
-    e = load_embeddings(spark, sf_dir, spread=False).select(
-        "vec_id", "label", to_double_array("embedding").alias("v")
-    )
+def sq8_codes(e: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, q) — the SQ8 quantizer over ``e``'s ``v``: per-dimension
+    scales ``s = max|x|`` (posexplode → 64-group partial-agg MAX → one
+    array row broadcast back; at 100 TB scales train on a sample, like
+    the IVF centroids) and symmetric codes ``floor(x·SQ_LEVELS / s)``
+    (0 where s = 0) by codegen'd zip_with. MAX is order-independent
+    and ``(x·SQ_LEVELS)/s`` is one IEEE expression written identically
+    in :func:`_sql_sq8_ctes`, so both engines derive the same codes."""
     scales = (
         e.select(F.posexplode("v").alias("pos", "x"))
         .groupBy("pos")
@@ -848,28 +801,100 @@ def sq8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("scales")
         )
     )
-    quantize = lambda vec: F.zip_with(  # noqa: E731
-        vec,
-        F.col("scales"),
+    codes = F.zip_with(
+        "v",
+        "scales",
         lambda x, s: F.when(
-            s > F.lit(0.0), F.floor((x * F.lit(127.0)) / s).cast("long")
+            s > F.lit(0.0),
+            F.floor((x * F.lit(float(SQ_LEVELS))) / s).cast("long"),
         ).otherwise(F.lit(0).cast("long")),
     )
-    qe = e.crossJoin(F.broadcast(scales)).select(
-        "vec_id", "label", quantize(F.col("v")).alias("q")
-    )
-    qv = qe.filter(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("q").alias("qv")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("q"), F.col("qv"), lambda a, b: a * b),
+    return e.crossJoin(F.broadcast(scales)).select(*keep, codes.alias("q"))
+
+
+def sq8_dot(a: str, b: str) -> Column:
+    """Exact integer dot of two SQ8 code arrays."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
+    )
+
+
+def _sql_sq8_ctes(keep: str) -> str:
+    """DuckDB twin of :func:`sq8_codes` over CTE ``e``: CTEs ``ex``,
+    ``sc`` (the scales row) and ``qe`` (``keep`` columns + codes ``q``)."""
+    return f"""
+    ex AS (
+        SELECT vec_id, generate_subscripts(v, 1) AS pos, unnest(v) AS x
+        FROM e
+    ),
+    sc AS (
+        SELECT list(s ORDER BY pos) AS scales
+        FROM (SELECT pos, max(abs(x)) AS s FROM ex GROUP BY pos)
+    ),
+    qe AS (
+        SELECT {keep},
+               list_transform(range(len(v)), i ->
+                   CASE WHEN scales[i+1] > 0
+                        THEN CAST(floor((v[i+1] * {SQ_LEVELS}.0)
+                                        / scales[i+1]) AS BIGINT)
+                        ELSE 0 END) AS q
+        FROM e, sc
+    )"""
+
+
+def _sql_sq8_dot(a: str, b: str) -> str:
+    """DuckDB twin of :func:`sq8_dot`."""
+    return (
+        f"CAST(list_sum(list_transform(range(len({a})), "
+        f"i -> {a}[i+1] * {b}[i+1])) AS BIGINT)"
+    )
+
+
+@query(
+    "sq8_quantized_topk",
+    oracle=f"""
+    WITH e AS ({E_SQL}),
+    {_sql_sq8_ctes('vec_id, label')},
+    qq AS (SELECT q AS qv FROM qe WHERE vec_id = {QUERY_VEC_ID})
+    SELECT qe.vec_id, qe.label, {_sql_sq8_dot('q', 'qv')} AS qdot
+    FROM qe, qq
+    WHERE qe.vec_id <> {QUERY_VEC_ID}
+    ORDER BY qdot DESC, qe.vec_id
+    LIMIT {TOP_K}
+    """,
+)
+def sq8_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-k by int8 scalar-quantized dot product — the SQ8 compressed
+    index of FAISS/Lucene as DataFrame ops: per-dimension symmetric
+    quantization ``code = floor(x·SQ_LEVELS / max_d|x|)``
+    (:func:`sq8_codes`) shrinks the corpus 8x vs float64 math (the
+    100 TB win: the scan reads 1 byte/dim and the dot is integer SIMD),
+    at a ranking error bounded by one code step per dimension.
+
+    Two passes: (1) the per-dimension scales; (2) quantize both sides,
+    integer-dot against the broadcast query codes,
+    TakeOrderedAndProject. The integer dot sum is order-independent —
+    the same contract as functions.vectors.
+
+    Exactness vs cosine_topk: ranking by unnormalized quantized dot —
+    the oracle replicates the FULL quantization pipeline, so the check
+    certifies codes, not only the winner set."""
+    # spread=False: posexplode→partial-agg is the whole pre-shuffle map
+    # work; the rebalance exchange is a measured net tax here (module
+    # docstring of load_embeddings)
+    e = load_embeddings(spark, sf_dir, spread=False).select(
+        "vec_id", "label", to_double_array("embedding").alias("v")
+    )
+    qe = sq8_codes(e, "vec_id", "label")
+    qv = qe.filter(F.col("vec_id") == QUERY_VEC_ID).select(
+        F.col("q").alias("qv")
     )
     return (
         qe.filter(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(qv))
-        .select("vec_id", "label", dot.alias("qdot"))
+        .select("vec_id", "label", sq8_dot("q", "qv").alias("qdot"))
         .orderBy(F.desc("qdot"), F.asc("vec_id"))
         .limit(TOP_K)
     )
@@ -1025,52 +1050,65 @@ def _sql_pq_dist(sv: str, cv: str) -> str:
     )
 
 
-def _pq_oracle_sql() -> str:
-    """DuckDB twin of the WHOLE PQ pipeline: seeding, the Lloyd round
-    per subspace, corpus encoding, and the ADC top-k — the compressed
-    search is value-certified end to end, training included (the IVF
-    oracle contract, per subspace)."""
+def _sql_pq_ctes(p: str, train: str, src: str) -> str:
+    """DuckDB twin of :func:`train_pq_codebooks` + :func:`_pq_assign` as
+    CTEs (no ``WITH``), every name prefixed ``p`` so the list can sit
+    beside another pipeline's CTEs: md5-sampled ``{p}base`` from
+    ``train`` (vec_id, v), seeding, the Lloyd round per subspace
+    (codebooks ``{p}cent1``), and the encoding of ``src`` — slices
+    ``{p}csl`` and codes ``{p}codes`` (vec_id, m, sv, cell)."""
     sl = f"list_slice(v, m * {PQ_SUBDIM} + 1, m * {PQ_SUBDIM} + {PQ_SUBDIM})"
-    assign = f"""
+
+    def assign(slices: str, cent: str) -> str:
+        return f"""
         SELECT vec_id, m, sv, cell FROM (
             SELECT s.vec_id, s.m, s.sv, c.cid AS cell,
                    ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
                        ORDER BY {_sql_pq_dist('s.sv', 'c.cv')} ASC, c.cid)
                        AS rn
-            FROM {{src}} s JOIN {{cent}} c ON c.m = s.m)
-        WHERE rn = 1
-    """
+            FROM {slices} s JOIN {cent} c ON c.m = s.m)
+        WHERE rn = 1"""
+
     return f"""
-    WITH e AS ({E_SQL}),
-    base AS (
-        SELECT vec_id, v FROM e
+    {p}base AS (
+        SELECT vec_id, v FROM {train}
         WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)
               < '{TRAIN_SAMPLE_BELOW}'
     ),
-    ms AS (SELECT unnest(range({PQ_M})) AS m),
-    bsl AS (SELECT vec_id, m, {sl} AS sv FROM base, ms),
-    seedv AS (
+    {p}ms AS (SELECT unnest(range({PQ_M})) AS m),
+    {p}bsl AS (SELECT vec_id, m, {sl} AS sv FROM {p}base, {p}ms),
+    {p}seedv AS (
         SELECT rn - 1 AS cid, v FROM (
             SELECT v, ROW_NUMBER() OVER (
                 ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-            FROM base)
+            FROM {p}base)
         WHERE rn <= {PQ_K}
     ),
-    cent0 AS (SELECT m, cid, {sl} AS cv
-              FROM (SELECT cid, v FROM seedv), ms),
-    assign0 AS ({assign.format(src='bsl', cent='cent0')}),
-    cent1 AS (
+    {p}cent0 AS (SELECT m, cid, {sl} AS cv
+                 FROM (SELECT cid, v FROM {p}seedv), {p}ms),
+    {p}assign0 AS ({assign(f'{p}bsl', f'{p}cent0')}),
+    {p}cent1 AS (
         SELECT m, cell AS cid, list(mean ORDER BY i) AS cv FROM (
             SELECT m, cell, i,
                    CAST(CAST(SUM(CAST(floor(sv[i+1] * 1e9) AS BIGINT))
                              AS BIGINT) AS DOUBLE)
                    / (1000000000.0 * COUNT(*)) AS mean
-            FROM assign0, (SELECT unnest(range({PQ_SUBDIM})) AS i) t
+            FROM {p}assign0, (SELECT unnest(range({PQ_SUBDIM})) AS i) t
             GROUP BY m, cell, i)
         GROUP BY m, cell
     ),
-    csl AS (SELECT vec_id, m, {sl} AS sv FROM e, ms),
-    codes AS ({assign.format(src='csl', cent='cent1')}),
+    {p}csl AS (SELECT vec_id, m, {sl} AS sv FROM {src}, {p}ms),
+    {p}codes AS ({assign(f'{p}csl', f'{p}cent1')})"""
+
+
+def _pq_oracle_sql() -> str:
+    """DuckDB twin of the WHOLE PQ pipeline: seeding, the Lloyd round
+    per subspace, corpus encoding, and the ADC top-k — the compressed
+    search is value-certified end to end, training included (the IVF
+    oracle contract, per subspace)."""
+    return f"""
+    WITH e AS ({E_SQL}),
+    {_sql_pq_ctes('', 'e', 'e')},
     qtab AS (
         SELECT c.m, c.cid, {sql_dot_q('q.sv', 'c.cv')} AS pdot
         FROM csl q JOIN cent1 c ON c.m = q.m
@@ -1091,9 +1129,9 @@ def _pq_oracle_sql() -> str:
 def pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization top-k with asymmetric distance computation
     (Jégou '11; the FAISS IVFPQ code path minus the IVF stage, which
-    `embedding_near_dup_ivf` already covers): {PQ_M} codebooks of
-    {PQ_K} centroids trained per 16-dim subspace, every corpus vector
-    stored as {PQ_M} small codes (3 bits each here — 256x smaller than
+    `embedding_near_dup_ivf` already covers): PQ_M codebooks of
+    PQ_K centroids trained per 16-dim subspace, every corpus vector
+    stored as PQ_M small codes (3 bits each here — 256x smaller than
     the float32 vector; 8-bit codes at production K), and the query
     scored against the CODEBOOKS once (an M×K lookup table) instead of
     against every vector.
@@ -1252,42 +1290,9 @@ def _ivfpq_oracle_sql() -> str:
     """IVF train/assign CTEs + PQ train/encode CTEs (p-prefixed to
     avoid name collisions; both train on the SAME md5-sampled base) +
     in-cell ADC ranking — the full IVFPQ pipeline replayed."""
-    sl = f"list_slice(v, m * {PQ_SUBDIM} + 1, m * {PQ_SUBDIM} + {PQ_SUBDIM})"
-    passign = f"""
-        SELECT vec_id, m, sv, cell FROM (
-            SELECT s.vec_id, s.m, s.sv, c.cid AS cell,
-                   ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-                       ORDER BY {_sql_pq_dist('s.sv', 'c.cv')} ASC, c.cid)
-                       AS rn
-            FROM {{src}} s JOIN {{cent}} c ON c.m = s.m)
-        WHERE rn = 1
-    """
     return f"""
     {_ivf_train_assign_ctes()},
-    pms AS (SELECT unnest(range({PQ_M})) AS m),
-    pbsl AS (SELECT vec_id, m, {sl} AS sv FROM base, pms),
-    pseedv AS (
-        SELECT rn - 1 AS cid, v FROM (
-            SELECT v, ROW_NUMBER() OVER (
-                ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn
-            FROM base)
-        WHERE rn <= {PQ_K}
-    ),
-    pcent0 AS (SELECT m, cid, {sl} AS cv
-               FROM (SELECT cid, v FROM pseedv), pms),
-    passign0 AS ({passign.format(src='pbsl', cent='pcent0')}),
-    pcent1 AS (
-        SELECT m, cell AS cid, list(mean ORDER BY i) AS cv FROM (
-            SELECT m, cell, i,
-                   CAST(CAST(SUM(CAST(floor(sv[i+1] * 1e9) AS BIGINT))
-                             AS BIGINT) AS DOUBLE)
-                   / (1000000000.0 * COUNT(*)) AS mean
-            FROM passign0, (SELECT unnest(range({PQ_SUBDIM})) AS i) t
-            GROUP BY m, cell, i)
-        GROUP BY m, cell
-    ),
-    pcsl AS (SELECT vec_id, m, {sl} AS sv FROM corpus, pms),
-    pcodes AS ({passign.format(src='pcsl', cent='pcent1')}),
+    {_sql_pq_ctes('p', 'base', 'corpus')},
     qtab AS (
         SELECT q.vec_id AS query_id, c.m, c.cid,
                {sql_dot_q('q.sv', 'c.cv')} AS pdot

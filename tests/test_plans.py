@@ -184,11 +184,11 @@ def test_no_accidental_cartesian_products(spark, query_plans):
         # bounded anchor-query frame broadcast onto the corpus scan —
         # the cosine_topk pattern (full-dim + truncated cosines per row)
         "matryoshka_recall_eval",
-        # same: the exact ground-truth arm broadcasts the anchor frame
+        # same anchor-frame broadcast onto the corpus scan
         "ivf_recall_eval",
         "ivf_recall_eval_nprobe2",
-        # anchor-frame broadcast exact arm + (pq) the A·M·K lookup-table
-        # broadcast / (sq8) the 1-row scales scalar broadcast
+        # the same anchor-frame broadcast (the recall law's pair frame)
+        # + (sq8) the 1-row scales scalar broadcast
         "pq_recall_eval",
         "sq8_recall_eval",
     }
@@ -233,6 +233,23 @@ def test_similarity_cross_joins_are_broadcast(spark, queries):
         plan = plan_of(queries[name](spark, SF_SMALL))
         assert "BroadcastNestedLoopJoin" in plan, name
         assert "CartesianProduct" not in plan, name
+
+
+def test_recall_evals_rank_one_pair_frame(spark, queries):
+    """The recall law (operators/anchors.py) ranks the exact and the
+    approximate score as two windows over ONE anchor-pair frame — no
+    recall eval may join two top-K rankings back on (query_id,
+    neighbor_id)."""
+    import re
+
+    for name in ("ivf_recall_eval", "ivf_recall_eval_nprobe2",
+                 "pq_recall_eval", "sq8_recall_eval",
+                 "matryoshka_recall_eval"):
+        plan = plan_of(queries[name](spark, SF_SMALL))
+        for keys in re.findall(r"Join \[([^\]]*)\]", plan):
+            assert not ("query_id" in keys and "neighbor_id" in keys), (
+                f"{name}: join keyed on {keys}"
+            )
 
 
 def test_dedup_window_single_shuffle(spark, queries):

@@ -3,9 +3,9 @@
 Same compare as driver_sim.py (rows + columns + normalized value multiset)
 but only for the named queries — the fast loop while building an operator.
 """
-import sys, time
+import os, sys, time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 spark = (

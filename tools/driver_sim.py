@@ -1,7 +1,7 @@
-"""Simulate the correctness driver against /root/repo/__spark_entry__.py."""
+"""Simulate the correctness driver against this checkout's __spark_entry__.py."""
 import os, sys, time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 spark = (

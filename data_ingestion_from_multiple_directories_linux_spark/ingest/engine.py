@@ -8,8 +8,8 @@ Reproduces the observable semantics of the reference pipeline
 * idempotency as a left-anti join of the discovered-file catalog against
   the success log (G1, file_loader.py:312-369) — previously failed files
   retry automatically on the next run (file_loader.py:413-420
-  ``is_loaded_failed → 'attempting to reload'``), after their prior
-  partial rows are purged from staging so the retry cannot duplicate;
+  ``is_loaded_failed → 'attempting to reload'``); the retry's staging
+  write drops their prior partial rows, so it cannot duplicate;
 * per-table transform dispatch (G2, file_loader.py:597-621): PII masking,
   column exclusion, struct masking;
 * cleansing: null-sentinel normalization (F7), drop all-null rows (F6),
@@ -23,17 +23,23 @@ Reproduces the observable semantics of the reference pipeline
   file_loader.py:83-90, :648-651; file_ingestion_process.py:24-37).
 
 Scale notes: staging tables are written partitioned by facility
-(``stg_datim_id``) so per-facility reads prune partitions; audit writes are
-append-only; the only driver-side collect is file-level *metadata* (the
-same information Spark's own FileIndex holds), never row data.
+(``stg_datim_id``) so per-facility reads prune partitions, and a retry
+rewrites only the facility partitions that held the retried files' rows:
+each staging table gets one write per run, new rows appended and those
+partitions swapped in (:func:`land_files`), never a whole-table rewrite.
+Audit writes are append-only; the only driver-side collect is file-level
+*metadata* (the same information Spark's own FileIndex holds), never row
+data.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime
 from functools import partial
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -90,6 +96,9 @@ STAGING_PARTITION = ("stg_datim_id",)
 #: file_loader.py:328-336
 Pair = tuple[str, str]
 PAIR_DDL = "file_name string, facility_id string"
+#: a work item's key columns in staging
+STAGING_KEY = ("stg_file_name", "stg_datim_id")
+STAGING_KEY_DDL = "stg_file_name string, stg_datim_id string"
 
 _INTERNAL_COLS = ("_src_file", "_src_facility", CORRUPT_COL)
 
@@ -185,7 +194,7 @@ def land_files(
     raw: DataFrame,
     transforms: dict[str, list],
     purge_pairs: set[Pair] | None,
-    purge: Callable[[str, set[Pair]], None] | None = None,
+    purge: Callable[[str, set[Pair]], dict[str, int]] | None = None,
 ) -> dict[Pair, FileCounts]:
     """Land one table's files — the one sink of the batch engine and of
     the streaming foreachBatch.
@@ -194,17 +203,22 @@ def land_files(
     _src_file/_src_facility lineage columns. It is persisted once,
     cleansed (:func:`cleanse_and_split`) and counted per file in ONE
     aggregation job (raw/corrupt/valid/bad — one scan of the cached
-    data). The ``purge_pairs`` then lose the rows an earlier attempt
-    appended to staging and quarantine, so a retry is exactly-once.
-    ``None`` purges every file in ``raw``, this table's ingestion-log
-    rows for them included: a micro-batch replayed after a crash
-    re-lands and re-audits all of its files. ``purge(store_table,
-    pairs)`` defaults to :func:`purge_file_pairs`. Valid and quarantine
-    rows are appended only when the counts say they exist.
+    data). Staging and quarantine then get ONE write each: the
+    ``purge_pairs`` lose the rows an earlier attempt landed, so a retry
+    is exactly-once. ``purge(store_table, pairs)`` (default
+    :func:`probe_file_pairs`) finds the facility partitions holding
+    those rows; the write is the new rows plus those partitions' other
+    rows, swapped in for just those partitions, while every other
+    partition takes the new rows as an append
+    (``TableStore.append(replace=)``). ``None`` purges every file in
+    ``raw``, this table's ingestion-log rows for them included: a
+    micro-batch replayed after a crash re-lands and re-audits all of
+    its files. A table with neither new rows nor hit partitions is not
+    written.
 
     Returns the counts of every file with at least one row; a file
     that parses to zero rows has no entry."""
-    purge = purge or partial(purge_file_pairs, store)
+    purge = purge or partial(probe_file_pairs, store)
     # Persist BEFORE any query touching the corrupt column: Spark
     # forbids queries whose JSON-scan schema is only _corrupt_record
     # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) unless the
@@ -230,60 +244,91 @@ def land_files(
         }
         if purge_pairs is None:
             purge_pairs = set(counts)
-            purge_file_pairs(store, INGESTION_LOG, purge_pairs, f"stg_{table}")
-        if purge_pairs:
-            purge(f"stg_{table}", purge_pairs)
-            purge(f"stg_{table}_bad_dates", purge_pairs)
-        if any(c.valid for c in counts.values()):
-            store.append(
-                f"stg_{table}",
-                finalize_lineage(valid, date_cols, cast_dates=True),
-                STAGING_PARTITION,
-            )
-        if any(c.bad for c in counts.values()):
-            # quarantine keeps raw (uncast) values for review
-            store.append(
-                f"stg_{table}_bad_dates",
-                finalize_lineage(bad, date_cols, cast_dates=False),
-                STAGING_PARTITION,
-            )
+            purge_file_pairs(store, purge_pairs, f"stg_{table}")
+        # quarantine keeps raw (uncast) values for review
+        for name, rows, landed in (
+            (f"stg_{table}", finalize_lineage(valid, date_cols, cast_dates=True),
+             any(c.valid for c in counts.values())),
+            (f"stg_{table}_bad_dates", finalize_lineage(bad, date_cols, cast_dates=False),
+             any(c.bad for c in counts.values())),
+        ):
+            hits = purge(name, purge_pairs) if purge_pairs else {}
+            kept = sorted(d for d, n in hits.items() if n)
+            if kept:
+                old = store.read(name, rows.schema, kept).filter(
+                    ~pair_in(STAGING_KEY, purge_pairs)
+                )
+                rows = rows.unionByName(old) if landed else old
+            elif not landed:
+                rows = None
+            if rows is not None or hits:
+                store.append(name, rows, STAGING_PARTITION, replace=hits)
     finally:
         raw.unpersist()
     return counts
 
 
-def purge_file_pairs(
-    store: TableStore, name: str, pairs: set[Pair], table_name: str | None = None
-) -> None:
-    """Remove the rows of the (file, facility) ``pairs`` from ``name`` via
-    read-filter-overwrite: a staging table is keyed on its lineage pair
-    stg_file_name/stg_datim_id, the ingestion log on file_name/facility_id
-    within ``table_name``'s rows (other tables' rows are never purged).
+def pair_in(cols: tuple[str, str], pairs: set[Pair]) -> Column:
+    """``cols`` (file, facility) is one of the ``pairs``: an ``isin`` over a
+    ``file/facility`` key (neither name can hold a '/'), which Catalyst
+    plans as an InSet hash probe — no broadcast job, and no OR-chain
+    (a 50k-pair requeue would fold into a 50k-term expression tree)."""
+    return F.concat_ws("/", *cols).isin(sorted(f"{fn}/{fac}" for fn, fac in pairs))
 
-    The pair list joins as a broadcast frame, NOT an OR-chain
-    predicate: a 50k-pair requeue (max_files_per_run) would otherwise
-    fold into a 50k-term binary expression tree that Catalyst
-    re-analyzes per table — driver minutes / StackOverflow territory.
-    The anti-join is linear and the probe stays a hash lookup per row."""
+
+def probe_file_pairs(store: TableStore, name: str, pairs: set[Pair]) -> dict[str, int]:
+    """The retry purge's scoped probe: which facility partitions of the
+    staging table ``name`` hold rows of the (file, facility) ``pairs``,
+    and how many of their rows are not the pairs'.
+
+    Lists the live ``stg_datim_id=`` leaf dirs — Spark escapes ``%``,
+    ``:`` and similar characters in those names, so they are unescaped
+    before matching the pairs' facilities — then runs ONE job over only
+    the matching dirs, reading just the two key columns with a declared
+    schema (no footer-inference job, column-pruned I/O). Returns
+    ``{leaf dir: rows kept}`` for every partition holding a pair's row;
+    no job runs when no dir matches."""
     if not pairs or not store.exists(name):
+        return {}
+    facilities = {fac for _, fac in pairs}
+    key = STAGING_PARTITION[0]
+    dirs = {}
+    for d in os.listdir(store.path(name)):
+        col, sep, value = d.partition("=")
+        if sep and col == key and (fac := unquote(value)) in facilities:
+            dirs[fac] = d
+    if not dirs:
+        return {}
+    hit = pair_in(STAGING_KEY, pairs)
+    probe = (
+        store.read(name, STAGING_KEY_DDL, sorted(dirs.values()))
+        .groupBy(key)
+        .agg(F.count(F.when(hit, 1)).alias("hit"), F.count("*").alias("n"))
+        .filter("hit > 0")
+    )
+    return {dirs[r[key]]: r["n"] - r["hit"] for r in probe.collect()}
+
+
+def purge_file_pairs(store: TableStore, pairs: set[Pair], table_name: str) -> None:
+    """Remove ``table_name``'s ingestion-log rows of the (file, facility)
+    ``pairs`` (other tables' rows are never purged): one aggregate
+    counts the hit and the remaining rows, then a read-filter-overwrite
+    (the log is not partitioned) — or a drop, when nothing remains."""
+    if not pairs or not store.exists(INGESTION_LOG):
         return
-    cur = store.read(name)
-    pdf = local_df(store.spark, sorted(pairs), PAIR_DDL)
-    log = name == INGESTION_LOG
-    fcol, faccol = ("file_name", "facility_id") if log else ("stg_file_name", "stg_datim_id")
-    # qualify both sides: the log's own columns are also named
-    # file_name/facility_id
-    on = (cur[fcol] == pdf["file_name"]) & (cur[faccol] == pdf["facility_id"])
-    if log:
-        on = on & (cur["table_name"] == table_name)
-    if cur.join(F.broadcast(pdf), on, "left_semi").limit(1).count() == 0:
+    log = store.read(INGESTION_LOG, INGESTION_LOG_DDL)
+    mine = F.col("table_name") == table_name
+    hit = F.coalesce(mine & pair_in(("file_name", "facility_id"), pairs), F.lit(False))
+    n_hit, n_left = log.agg(
+        F.count(F.when(hit, 1)), F.count(F.when(~hit, 1))
+    ).first()
+    if not n_hit:
         return
-    remaining = cur.join(F.broadcast(pdf), on, "left_anti")
-    if remaining.limit(1).count() == 0:
-        # an empty parquet dir is unreadable (no footer) — drop instead
-        store.drop(name)
+    if n_left:
+        store.overwrite(INGESTION_LOG, log.filter(~hit))
     else:
-        store.overwrite(name, remaining, () if log else STAGING_PARTITION)
+        # an empty parquet dir is unreadable (no footer) — drop instead
+        store.drop(INGESTION_LOG)
 
 
 def audit_rows(
@@ -438,7 +483,7 @@ class IngestionEngine:
 
         Returns (selected, n_skipped, retry_pairs) where retry_pairs is
         the subset of selected pairs with a prior 'failed'/'requeued'
-        row — their partial staging rows must be purged before re-append
+        row — the re-landing write must purge their partial staging rows
         (a G3 quarantine run ingests the valid rows and still logs the
         file failed; blind re-append would duplicate them).
         """
@@ -460,7 +505,8 @@ class IngestionEngine:
             return selected, len(metas) - len(selected), set()
 
         cat = catalog_df(self.spark, metas)
-        prior = self.store.read(INGESTION_LOG)
+        # declared schema: no footer-inference job on every tick
+        prior = self.store.read(INGESTION_LOG, INGESTION_LOG_DDL)
         # latest status per work item decides; one window over the
         # (bounded, file-level) log — never row data
         latest = (
@@ -489,15 +535,15 @@ class IngestionEngine:
                 # truncated, so a file re-uploaded moments after the
                 # failing attempt started could land just below the
                 # attempt timestamp and be terminally skipped. An
-                # occasional extra retry is idempotent (purge-before-
-                # re-append), a terminal skip is data loss.
+                # occasional extra retry is idempotent (the re-landing
+                # write purges), a terminal skip is data loss.
                 (F.col("_status") == "failed")
                 & (F.col("mtime") > F.col("_attempt_ts").cast("double") - F.lit(2.0))
             )
         )
         # retry hygiene applies to files failed OR bulk-requeued: either
         # way prior partial rows may exist in staging and must be purged
-        # before the re-append (blind re-append would duplicate them)
+        # by the re-landing write (blind re-append would duplicate them)
         todo = (
             joined.filter(selectable)
             .withColumn("_retry", F.col("_status").isin("failed", "requeued"))
@@ -568,8 +614,8 @@ class IngestionEngine:
                 table,
                 read_table_files(self.spark, table, [m.path for m in group]),
                 self.transforms,
-                # retry hygiene: purge any prior partial rows of
-                # re-attempted files before appending
+                # retry hygiene: a re-attempted file's prior partial
+                # rows are purged in the same staging write
                 retry_pairs & set(pairs),
                 self._purge_file_rows,
             )
@@ -580,10 +626,10 @@ class IngestionEngine:
             table, {k: counts.get(k, FileCounts()) for k in pairs}, now
         )
 
-    def _purge_file_rows(self, store_table: str, pairs: set[Pair]) -> None:
-        """Remove a retried file's previously-appended staging rows
-        (:func:`purge_file_pairs`)."""
-        purge_file_pairs(self.store, store_table, pairs)
+    def _purge_file_rows(self, store_table: str, pairs: set[Pair]) -> dict[str, int]:
+        """The staging partitions holding a retried file's earlier rows
+        (:func:`probe_file_pairs`); :func:`land_files` rewrites them."""
+        return probe_file_pairs(self.store, store_table, pairs)
 
     # ------------------------------------------------------------------
     # run (§3.1 lifecycle)

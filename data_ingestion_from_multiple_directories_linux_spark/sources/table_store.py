@@ -17,8 +17,10 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Collection, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 class TableStore:
@@ -35,23 +37,73 @@ class TableStore:
     def exists(self, name: str) -> bool:
         return os.path.isdir(self.path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(
+        self,
+        name: str,
+        schema: str | T.StructType | None = None,
+        partitions: Sequence[str] = (),
+    ) -> DataFrame:
+        """Read a table. A declared ``schema`` (DDL or struct) skips the
+        footer-inference job. ``partitions`` (leaf dir paths relative to
+        the table, as listed) reads only those dirs; ``basePath`` keeps
+        their partition columns.
+
+        Hive partition values come back as the strings they were
+        written from: type inference would read ``stg_datim_id=007``
+        as the integer 7, so an inferred non-string partition column is
+        re-read declared ``string`` (no second inference job)."""
         if not self.exists(name):
             raise FileNotFoundError(f"table {name!r} not found under {self.root}")
-        return self.spark.read.parquet(self.path(name))
+        live = self.path(name)
+        paths = [os.path.join(live, p) for p in partitions] or [live]
+        reader = self.spark.read.option("basePath", live)
+        if schema is not None:
+            return reader.schema(schema).parquet(*paths)
+        df = reader.parquet(*paths)
+        parts = self.partition_columns(name)
+        if any(f.name in parts and f.dataType != T.StringType() for f in df.schema):
+            typed = T.StructType(
+                [T.StructField(f.name, T.StringType()) if f.name in parts else f
+                 for f in df.schema]
+            )
+            df = reader.schema(typed).parquet(*paths)
+        return df
 
     def read_or_empty(self, name: str, schema: str) -> DataFrame:
         """Read, or produce an empty frame with the given DDL schema —
         lets first-run logic treat missing audit tables as zero rows."""
         if self.exists(name):
-            return self.spark.read.parquet(self.path(name))
+            return self.read(name)
         return self.spark.createDataFrame([], schema)
 
-    def append(self, name: str, df: DataFrame, partition_by: tuple[str, ...] = ()) -> None:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(name))
+    def append(
+        self,
+        name: str,
+        df: DataFrame | None,
+        partition_by: tuple[str, ...] = (),
+        replace: Collection[str] = (),
+    ) -> None:
+        """Append ``df`` (a plain Spark append).
+
+        ``replace`` names live leaf partitions (relative dir paths, as
+        listed) whose rows ``df`` carries in full — the rows to keep
+        plus the new ones. Then ``df`` is written ONCE into scratch:
+        each replaced partition is swapped for ``df``'s rows of it
+        (parked and removed when ``df`` has none; ``df=None`` means no
+        rows at all), and ``df``'s other partitions take its files as an
+        append. The swap shares :meth:`overwrite_partitions`' park and
+        rename loop, so :meth:`repair` covers a crash inside it. A table
+        left with no partition is dropped."""
+        if not replace:
+            w = df.write.mode("append")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(self.path(name))
+            return
+        tmp = self.path(f".{name}.dpo-{uuid.uuid4().hex}")
+        if df is not None:
+            df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
+        self._swap_in(name, tmp, len(partition_by), set(replace))
 
     def overwrite(
         self,
@@ -168,33 +220,51 @@ class TableStore:
             raise ValueError("overwrite_partitions needs partition columns")
         tmp = self.path(f".{name}.dpo-{uuid.uuid4().hex}")
         df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
+        return self._swap_in(name, tmp, len(partition_by))
+
+    def _swap_in(
+        self, name: str, tmp: str, depth: int, replace: set[str] | None = None
+    ) -> list[str]:
+        """Move the leaf partitions written under ``tmp`` into the live
+        table; returns their relative paths. A leaf in ``replace``
+        (default: every written leaf) is swapped — the live copy is
+        parked under ``.{name}.dpo-old-*`` first, and stays gone when
+        ``tmp`` has no rows for it; any other leaf's files join the
+        live leaf (an append)."""
         live = self.path(name)
-        if not os.path.isdir(live):
-            os.rename(tmp, live)
-            return sorted(
-                os.path.join(*parts)
-                for parts, _d in self._leaf_partitions(live, len(partition_by))
-            )
+        written = (
+            {os.path.join(*parts): src for parts, src in self._leaf_partitions(tmp, depth)}
+            if os.path.isdir(tmp)
+            else {}
+        )
+        swap = set(written) if replace is None else replace
         trash = self.path(f".{name}.dpo-old-{uuid.uuid4().hex}")
-        replaced = []
-        for parts, src in self._leaf_partitions(tmp, len(partition_by)):
-            rel = os.path.join(*parts)
+        for rel in sorted(swap | set(written)):
             dst = os.path.join(live, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if os.path.isdir(dst):
+            if rel in swap and os.path.isdir(dst):
                 parked = os.path.join(trash, rel)
                 os.makedirs(os.path.dirname(parked), exist_ok=True)
                 os.rename(dst, parked)
-            os.rename(src, dst)
-            replaced.append(rel)
+            src = written.get(rel)
+            if src is None:
+                continue
+            if os.path.isdir(dst):
+                for f in os.listdir(src):
+                    os.rename(os.path.join(src, f), os.path.join(dst, f))
+            else:
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.rename(src, dst)
         shutil.rmtree(trash, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
-        return sorted(replaced)
+        if os.path.isdir(live) and not any(self._leaf_partitions(live, depth)):
+            # an empty parquet dir is unreadable (no footer)
+            self.drop(name)
+        return sorted(written)
 
     def repair(self, name: str) -> dict[str, list[str]]:
-        """Crash-recovery scan for :meth:`overwrite_partitions` AND
-        :meth:`overwrite` residue — run at startup, like a table
-        format's orphan-file cleanup.
+        """Crash-recovery scan for :meth:`overwrite_partitions` (and
+        ``append(replace=)``) AND :meth:`overwrite` residue — run at
+        startup, like a table format's orphan-file cleanup.
 
         Two restore rules, applied NEWEST trash first (mtime order —
         when two crashed calls both parked a copy, the later call's

@@ -23,9 +23,11 @@ Mapping to the reference's operating model:
   on the same checkpoint is refused by the streaming engine;
 * ``foreachBatch`` — lands the micro-batch through the batch engine's
   own sink (``ingest.engine.land_files``: one persist, one per-file
-  count job, one purge, staging + quarantine appends) and audits it by
-  the same verdict law (``ingest.engine.audit_rows``), so both modes
-  write the same staging, quarantine and audit rows for the same files;
+  count job, one ingestion-log purge, one staging and one quarantine
+  write that replace only the facility partitions a replay hit) and
+  audits it by the same verdict law (``ingest.engine.audit_rows``), so
+  both modes write the same staging, quarantine and audit rows for the
+  same files;
 * ``maxFilesPerTrigger`` — the batch-size throttle (O2, LIMIT 50000).
 
 Scale: the file source lists and tracks files on the driver exactly like

@@ -126,6 +126,111 @@ def test_failed_file_auto_retries_without_duplicates(engine, uploads):
     assert not engine.store.exists("stg_patient_person_bad_dates")
 
 
+def _partition_files(store, name) -> dict[str, dict[str, int]]:
+    """{partition dir: {file name: mtime_ns}} of a partitioned table."""
+    root = store.path(name)
+    return {
+        d: {f: os.stat(os.path.join(root, d, f)).st_mtime_ns
+            for f in os.listdir(os.path.join(root, d))}
+        for d in os.listdir(root) if "=" in d
+    }
+
+
+def _landed(store, name) -> list[tuple]:
+    df = store.read(name).drop("stg_load_time")
+    return sorted((tuple(r) for r in df.select(sorted(df.columns)).collect()), key=repr)
+
+
+def test_retry_rewrites_only_its_facility_partitions(spark, engine, uploads, tmp_path):
+    """A retried file rewrites only the facility partitions that held its
+    rows: every other partition's parquet files keep their names and
+    mtimes, a partition left empty is removed, and staging and
+    quarantine end up row-equal to a clean one-shot load."""
+    fn = "patient_person_0_20250103141949.json"
+    write_json(uploads, "FAC001", fn, [patient(0), patient(1), patient(2, dob="bad")])
+    # quarantined too, but never fixed: stays terminal, its partitions
+    # must not be touched
+    old = write_json(uploads, "FAC002", fn, [patient(10), patient(11, dob="bad")])
+    os.utime(old, (1_000_000_000, 1_000_000_000))
+    write_json(uploads, "FAC003", "patient_person_1_20250103141950.json", [patient(20)])
+    engine.run(uploads)
+    stg, bad = "stg_patient_person", "stg_patient_person_bad_dates"
+    before = {t: _partition_files(engine.store, t) for t in (stg, bad)}
+
+    write_json(uploads, "FAC001", fn, [patient(i) for i in range(3)])
+    rep = engine.run(uploads)
+    assert (rep.files_ingested, rep.files_failed, rep.files_skipped) == (1, 0, 2)
+    after = {t: _partition_files(engine.store, t) for t in (stg, bad)}
+    for d in ("stg_datim_id=FAC002", "stg_datim_id=FAC003"):
+        assert after[stg][d] == before[stg][d]
+    assert after[stg]["stg_datim_id=FAC001"] != before[stg]["stg_datim_id=FAC001"]
+    # FAC001's quarantine partition emptied and removed; FAC002's kept
+    assert after[bad] == {"stg_datim_id=FAC002": before[bad]["stg_datim_id=FAC002"]}
+
+    clean = IngestionEngine(spark, str(tmp_path / "wh_clean"))
+    clean.run(uploads)
+    for t in (stg, bad):
+        assert _landed(engine.store, t) == _landed(clean.store, t)
+
+
+def test_retry_crash_mid_swap_repairs_and_converges(engine, uploads, monkeypatch):
+    """Crash window of the partition swap: the retry dies after parking
+    the old partition and before moving the new one in. repair()
+    restores the parked partition, and the re-run converges to the
+    clean rows with no residue."""
+    fn = "patient_person_0_20250103141949.json"
+    write_json(uploads, "FAC001", fn, [patient(0), patient(1), patient(2, dob="bad")])
+    write_json(uploads, "FAC002", "patient_person_1_20250103141950.json", [patient(20)])
+    engine.run(uploads)
+    stg = "stg_patient_person"
+
+    rename = os.rename
+
+    def crash_on_move_in(src, dst):
+        if ".dpo-" in src and ".dpo-old-" not in src:
+            raise OSError("killed mid-swap")
+        rename(src, dst)
+
+    write_json(uploads, "FAC001", fn, [patient(i) for i in range(3)])
+    monkeypatch.setattr(os, "rename", crash_on_move_in)
+    rep = engine.run(uploads)
+    monkeypatch.setattr(os, "rename", rename)
+    assert "killed mid-swap" in rep.errors[f"FAC001/{fn}"]
+    assert set(_partition_files(engine.store, stg)) == {"stg_datim_id=FAC002"}
+
+    assert engine.store.repair(stg)["restored"] == ["stg_datim_id=FAC001"]
+    assert engine.store.read(stg).count() == 3  # the pre-retry rows
+    # re-uploaded after the crashed attempt → re-selected
+    write_json(uploads, "FAC001", fn, [patient(i) for i in range(3)])
+    rep = engine.run(uploads)
+    assert rep.files_ingested == 1 and rep.files_failed == 0
+    got = sorted((r["stg_datim_id"], r["id"]) for r in engine.store.read(stg).collect())
+    assert got == [("FAC001", 0), ("FAC001", 1), ("FAC001", 2), ("FAC002", 20)]
+    assert not engine.store.exists("stg_patient_person_bad_dates")
+    assert not [d for d in os.listdir(engine.store.root) if d.startswith(".stg_")]
+
+
+def test_numeric_facility_round_trips_and_retries_alone(engine, uploads):
+    """Partition type inference would read ``stg_datim_id=007`` back as
+    the integer 7, colliding with facility ``7``: staging keeps the
+    facility string, and a retry in ``007`` purges only its own rows."""
+    fn = "patient_person_0_20250103141949.json"
+    write_json(uploads, "007", fn, [patient(0), patient(1), patient(2, dob="bad")])
+    write_json(uploads, "7", fn, [patient(5), patient(6)])
+    engine.run(uploads)
+    stg = engine.store.read("stg_patient_person")
+    assert dict(stg.dtypes)["stg_datim_id"] == "string"
+    assert {r["stg_datim_id"] for r in stg.collect()} == {"007", "7"}
+
+    write_json(uploads, "007", fn, [patient(i) for i in range(3)])
+    engine.run(uploads)
+    got = sorted(
+        (r["stg_datim_id"], r["id"])
+        for r in engine.store.read("stg_patient_person").collect()
+    )
+    assert got == [("007", 0), ("007", 1), ("007", 2), ("7", 5), ("7", 6)]
+
+
 def test_same_filename_two_facilities_distinct_audit(engine, uploads):
     """(file_name, facility_id) keying: identical filenames uploaded by two
     facilities are two work items with per-facility counts
@@ -453,6 +558,31 @@ def test_encoded_names_audit_and_lineage_match(spark, tmp_path):
     rep2 = eng.run(root)
     assert rep2.files_ingested == 0 and rep2.files_skipped == 1
     assert eng.store.read("stg_patient_person").count() == 3
+
+
+def test_retry_in_escaped_facility_dirs_leaves_no_duplicates(spark, tmp_path):
+    """Spark escapes '%' and ':' in partition dir names
+    (``stg_datim_id=F%253A%3A9``); the retry probe unescapes them, so a
+    retry there purges its earlier rows like anywhere else."""
+    root = str(tmp_path / "esc")
+    fn = "patient_person_0_20250103141949.json"
+    facs = ("F%3A:9", "FAC 01+x")
+    for fac in facs:
+        write_json(root, fac, fn, [patient(0), patient(1), patient(2, dob="bad")])
+    eng = IngestionEngine(spark, str(tmp_path / "escwh"))
+    eng.run(root)
+    assert "stg_datim_id=F%253A%3A9" in os.listdir(eng.store.path("stg_patient_person"))
+
+    for fac in facs:
+        write_json(root, fac, fn, [patient(i) for i in range(3)])
+    rep = eng.run(root)
+    assert rep.files_ingested == 2 and rep.files_failed == 0
+    got = sorted(
+        (r["stg_datim_id"], r["id"])
+        for r in eng.store.read("stg_patient_person").collect()
+    )
+    assert got == sorted((fac, i) for fac in facs for i in range(3))
+    assert not eng.store.exists("stg_patient_person_bad_dates")
 
 
 def test_serial_submission_equals_concurrent(spark, tmp_path):

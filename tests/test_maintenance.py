@@ -621,6 +621,35 @@ def test_dynamic_partition_overwrite_two_levels(spark, tmp_path):
     assert got == [(2, "A", "d2"), (3, "B", "d1"), (10, "A", "d1")]
 
 
+def test_append_replace_swaps_named_partitions_and_appends_the_rest(spark, tmp_path):
+    """append(replace=): one write swaps each named partition for the
+    frame's rows of it, removes a named partition the frame has no rows
+    for, lands the frame's other partitions beside the live files, and
+    drops a table left with no partition."""
+    import os
+
+    from data_ingestion_from_multiple_directories_linux_spark.sources.table_store import (
+        TableStore,
+    )
+
+    store = TableStore(spark, str(tmp_path / "wha"))
+    seed = spark.createDataFrame([(1, "A"), (2, "B"), (3, "C")], "id bigint, fac string")
+    store.overwrite("t", seed, ("fac",))
+    live = store.path("t")
+    b_before = set(os.listdir(os.path.join(live, "fac=B")))
+
+    new = spark.createDataFrame([(10, "A"), (20, "B")], "id bigint, fac string")
+    store.append("t", new, ("fac",), replace={"fac=A", "fac=C"})
+    got = sorted((r["id"], r["fac"]) for r in store.read("t").collect())
+    assert got == [(2, "B"), (10, "A"), (20, "B")]
+    assert sorted(d for d in os.listdir(live) if "=" in d) == ["fac=A", "fac=B"]
+    assert b_before < set(os.listdir(os.path.join(live, "fac=B")))
+    assert not [d for d in os.listdir(store.root) if d.startswith(".t.")]
+
+    store.append("t", None, ("fac",), replace={"fac=A", "fac=B"})
+    assert not store.exists("t")
+
+
 def test_repair_restores_partition_lost_mid_swap(spark, tmp_path):
     """Crash-window recovery: simulate dying between 'old partition
     moved to trash' and 'new partition moved in' — the live tree is

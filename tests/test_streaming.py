@@ -541,6 +541,44 @@ def test_batch_and_stream_land_identical_rows(spark, tmp_path, uploads):
     assert len(rows(eng.store, "stg_biometric_bad_dates")) == 1
 
 
+def test_replayed_micro_batch_rewrites_only_its_partitions(spark, tmp_path, uploads):
+    """A micro-batch replayed after a crash (no commit marker) re-lands
+    its files by rewriting only the facility partitions they hit; the
+    other facility's partition keeps its parquet files."""
+    import os
+    import shutil
+
+    fn = "patient_person_0_20250103141949.json"
+    write_json(uploads, "FAC001", fn, [patient(i) for i in range(3)])
+    write_json(uploads, "FAC002", fn, [patient(i) for i in range(10, 12)])
+    s = _stream(spark, tmp_path, uploads)
+    s.run_available_now()
+
+    def files(fac):
+        d = os.path.join(s.store.path("stg_patient_person"), f"stg_datim_id={fac}")
+        return {f: os.stat(os.path.join(d, f)).st_mtime_ns for f in os.listdir(d)}
+
+    before = {fac: files(fac) for fac in ("FAC001", "FAC002")}
+    batch = (
+        spark.read.format("json").schema(s.schema).option("multiLine", "true")
+        .load(os.path.join(uploads, "FAC001", fn))
+        .withColumn("_src_file", F.lit(fn))
+        .withColumn("_src_facility", F.lit("FAC001"))
+    )
+    shutil.rmtree(s.store.path(s.COMMITS))
+    s._committed = None  # a restarted process sees no marker
+    s._process_batch(batch, 0)
+    assert files("FAC002") == before["FAC002"]
+    assert files("FAC001") != before["FAC001"]
+    got = sorted(
+        (r["stg_datim_id"], r["id"])
+        for r in s.store.read("stg_patient_person").collect()
+    )
+    assert got == [("FAC001", 0), ("FAC001", 1), ("FAC001", 2),
+                   ("FAC002", 10), ("FAC002", 11)]
+    assert s.store.read(INGESTION_LOG).count() == 2
+
+
 def test_commit_marker_table_stays_compact(spark, tmp_path, uploads):
     """The marker table appends one tiny file per micro-batch; once it
     fragments past COMMITS_COMPACT_FILES it is rewritten, so startup

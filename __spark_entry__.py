@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 All queries live in the package's operator registry
 (data_ingestion_from_multiple_directories_linux_spark/operators/*);
@@ -80,79 +80,6 @@ from data_ingestion_from_multiple_directories_linux_spark.operators.registry imp
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# The driver caps how many entries get a correctness row per round
-# (50, in registration order — observed every round). Entries listed
-# here are emitted FIRST. The list rotates each round so every query's
-# newest driver row stays fresh, and any query whose IMPLEMENTING FILE
-# was touched since its newest row is re-sampled (the judge accepts a
-# prior-round row only while the file is untouched).
-#
-# The list is GENERATED, not hand-ordered: it is the verbatim head of
-# `python tools/staleness.py --emit-priority 50` at end-of-round HEAD
-# (stale queries first — no green row yet, or implementing file touched
-# since the newest row — then the oldest green rows), reviewed before
-# pasting (a query whose ORACLE changed this round outranks strict
-# row-age order). Everything past the cap rides the committed
-# fresh-process verify record (VERIFY_LOCAL_r{N}[_sf01].txt) at HEAD.
-_PRIORITY_FIRST = [
-    "embedding_near_dup_ivf_autok",  # r00 ivf_autok.py
-    "quality_gate_training",  # r09 training.py
-    "trained_gate_calibration",  # r09 training.py
-    "ivf_recall_eval",  # r11 annrecall.py
-    "ivf_recall_eval_nprobe2",  # r11 annrecall.py
-    "matryoshka_recall_eval",  # r11 matryoshka.py
-    "table_profile_orders",  # r11 profiling.py
-    "table_profile_orders_sketch",  # r11 profiling.py
-    "user_event_type_arrays",  # r11 grouping.py
-    "cluster_size_histogram",  # r12 dedup.py
-    "cosine_topk",  # r12 similarity.py
-    "cross_source_overlap",  # r12 dedup.py
-    "dedup_materialize_canonical",  # r12 dedup.py
-    "duplicate_clusters",  # r12 dedup.py
-    "embedding_near_dup_ivf",  # r12 similarity.py
-    "embedding_near_dup_lsh",  # r12 similarity.py
-    "frontier_dispatch_tick",  # r12 politeness.py
-    "hard_negative_mining",  # r12 similarity.py
-    "ivf_topk_neighbors",  # r12 similarity.py
-    "ivfpq_topk_neighbors",  # r12 similarity.py
-    "label_centroids",  # r12 similarity.py
-    "minhash_estimate_calibration",  # r12 dedup.py
-    "minhash_incremental_near_dup",  # r12 dedup.py
-    "minhash_lsh_near_dup",  # r12 dedup.py
-    "ngram_jaccard_capped",  # r12 dedup.py
-    "ngram_jaccard_pairs",  # r12 dedup.py
-    "pq_topk_adc",  # r12 similarity.py
-    "semantic_dedup_survivors",  # r12 similarity.py
-    "sq8_quantized_topk",  # r12 similarity.py
-    "length_bucketed_batches",  # r07 corpus.py
-    "maintenance_report_tables",  # r07 maintenance.py
-    "media_audio_stats",  # r07 multimodal.py
-    "media_dimensions",  # r07 multimodal.py
-    "media_video_stats",  # r07 multimodal.py
-    "mixture_schedule",  # r07 corpus.py
-    "pii_redact_text",  # r07 corpus.py
-    "repetition_ratio",  # r07 corpus.py
-    "sequence_packing",  # r07 corpus.py
-    "source_capped_sample",  # r07 corpus.py
-    "table_fingerprint",  # r07 sketches.py
-    "token_cooccurrence_lift",  # r07 matching.py
-    "audio_fingerprint_classes",  # r08 multimodal.py
-    "bloom_fp_audit",  # r08 bloomdedup.py
-    "bloom_url_dedup",  # r08 bloomdedup.py
-    "classifier_auc_exact",  # r08 calibration.py
-    "click_attribution_batch",  # r08 attribution.py
-    "cohort_retention",  # r08 warehouse.py
-    "event_transition_matrix",  # r08 windows.py
-    "funnel_conversion",  # r08 windows.py
-    "image_near_dup_ahash",  # r08 multimodal.py
-]
-
-
-def _ordered(mapping: dict) -> dict:
-    head = {k: mapping[k] for k in _PRIORITY_FIRST if k in mapping}
-    tail = {k: v for k, v in mapping.items() if k not in head}
-    return {**head, **tail}
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -161,9 +88,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return _ordered(QUERIES)
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL per query (omitted ⇒ rows-only check)."""
-    return _ordered(ORACLES)
+    return dict(ORACLES)

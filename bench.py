@@ -696,15 +696,13 @@ def main() -> None:
             }
         )
     )
-    # The driver parses the FINAL stdout line for its round-over-round
-    # per-query comparison and 8-vs-32-core scaling block; round 11's
-    # final line lacked the per-query map, so PERF_r12 had n_common=0
-    # and an empty scaling block (VERDICT r12 item 2). The final line
-    # therefore carries the FULL ``queries`` map — the declared bench
-    # contract — rounded to 10 ms and dumped with compact separators so
-    # the line stays small (~8 KB); the 4-decimal figures plus the full
-    # scale/skew/shuffle diagnostics ride the line above and
-    # BENCH_LOCAL_r{N}.json, unchanged from previous rounds.
+    # The driver parses the FINAL stdout line for its per-query
+    # comparison and 8-vs-32-core scaling block; a final line without
+    # the per-query map leaves both empty. The final line therefore
+    # carries the FULL ``queries`` map — the declared bench contract —
+    # rounded to 10 ms and dumped with compact separators so the line
+    # stays small (~8 KB); the 4-decimal figures plus the full
+    # scale/skew/shuffle diagnostics ride the line above.
     slowest = dict(
         sorted(queries.items(), key=lambda kv: -kv[1])[:5]
     )

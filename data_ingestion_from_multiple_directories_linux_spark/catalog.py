@@ -35,9 +35,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 #: tables below this size are broadcast-side dimensions — rebalancing
 #: them only adds an exchange in front of a broadcast build
-_REBALANCE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_REBALANCE_MIN_BYTES", str(64 * 1024))
-)
+#: (OPTIMIZATION_r12.md)
+_REBALANCE_MIN_BYTES = 64 * 1024
 
 
 def table_path(sf_dir: str, name: str) -> str:

@@ -59,6 +59,7 @@ from ..sources.json_dir import (
     read_table_files,
 )
 from ..functions.naming import TS_RE, derive_batch_id
+from ..sources.schemas import schema_for_table
 from ..sources.table_store import TableStore
 
 INGESTION_LOG = "ingestion_log"
@@ -245,6 +246,11 @@ def land_files(
         if purge_pairs is None:
             purge_pairs = set(counts)
             purge_file_pairs(store, purge_pairs, f"stg_{table}")
+        # An unregistered table's schema is inferred per batch, so a
+        # retry's rows may lack columns the kept rows hold: read those
+        # with the partitions' own schema and union by name. A
+        # registered table reads them declared (no inference job).
+        registered = schema_for_table(table) is not None
         # quarantine keeps raw (uncast) values for review
         for name, rows, landed in (
             (f"stg_{table}", finalize_lineage(valid, date_cols, cast_dates=True),
@@ -255,10 +261,9 @@ def land_files(
             hits = purge(name, purge_pairs) if purge_pairs else {}
             kept = sorted(d for d, n in hits.items() if n)
             if kept:
-                old = store.read(name, rows.schema, kept).filter(
-                    ~pair_in(STAGING_KEY, purge_pairs)
-                )
-                rows = rows.unionByName(old) if landed else old
+                old = store.read(name, rows.schema if registered else None, kept)
+                old = old.filter(~pair_in(STAGING_KEY, purge_pairs))
+                rows = rows.unionByName(old, allowMissingColumns=True) if landed else old
             elif not landed:
                 rows = None
             if rows is not None or hits:

@@ -1209,7 +1209,7 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached-plan re-planning coalesces the kilobyte-scale frame to a
     # handful of partitions and the hash work serializes (measured
     # 3.4→8.3 s depending on the coalesce floor; decomposition in
-    # plans/r12/subset_ab_decomposition.json).
+    # OPTIMIZATION_r12.md).
     sh = _shingle_sets(corpus, CAL_SHINGLE_N, pin_width=True).persist()
     ex = _explode_shingles(sh.select("doc_id", "sh"), [])
     sig = (

@@ -1381,7 +1381,7 @@ def _ivfpq_search(
     # per vec_id carrying the identical v, so the row set equals
     # _vec_corpus — the rewrite drops two parquet scans + two
     # mutant-union subtrees from the plan (3 corpus constructions → 1;
-    # guide §2.4, plan diff in plans/r13/ivfpq_topk_neighbors_*.txt)
+    # guide §2.4, OPTIMIZATION_r13.md)
     corpus = assigned.select("vec_id", "v")
 
     codes = _pq_assign(

@@ -52,12 +52,10 @@ def get_spark(
         # reading it — measured 500+ tasks per persist-heavy query on
         # megabyte inputs where AQE coalescing elsewhere yields 1-3.
         # Cluster-safe: output partitioning of a cached plan may change,
-        # which only affects exchange reuse, not results. Env-gated so
-        # the two global levers can be A/B'd independently.
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHED_REPLAN", "true"),
-        )
+        # which only affects exchange reuse, not results. Interleaved
+        # A/B of this and the coalesce floor below, alone and together:
+        # OPTIMIZATION_r12.md / r13.md.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # AQE coalescing is SIZE-based and compute-blind: with the 1m
         # default a small-bytes/heavy-compute frame (IVF cell codes,
         # shingle keys) coalesces to bytes/1MB ≈ 1-3 partitions and its
@@ -66,10 +64,7 @@ def get_spark(
         # frames keep ~defaultParallelism partitions; at warehouse scale
         # bytes/parallelism >> 1MB decides, so this only changes
         # small-frame behavior.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_COALESCE_MIN_PART", "64k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bound Python-worker memory on the multimodal path: working set

@@ -9,6 +9,9 @@ REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO_DIR not in sys.path:
     sys.path.insert(0, REPO_DIR)
 
+#: head of a child-process test script: import this checkout's package
+CHILD_SYS_PATH = f"import sys\nsys.path.insert(0, {REPO_DIR!r})\n"
+
 from data_ingestion_from_multiple_directories_linux_spark.session import get_spark  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"

@@ -231,6 +231,42 @@ def test_numeric_facility_round_trips_and_retries_alone(engine, uploads):
     assert got == [("007", 0), ("007", 1), ("007", 2), ("7", 5), ("7", 6)]
 
 
+def test_unregistered_retry_keeps_columns_of_untouched_rows(spark, engine, uploads, tmp_path):
+    """An unregistered table infers each batch's schema. A retry whose
+    re-upload drops column ``b`` rewrites the partition it shares with
+    another file's rows: those kept rows (staged and quarantined) keep
+    their ``b``, and both tables equal a clean one-shot load."""
+    w1 = write_json(uploads, "FAC001", "widget_1_20250103141949.json", [
+        {"id": 1, "a": "x", "b": "keep-me", "visit_date": "2024-01-01"},
+        {"id": 4, "a": "q", "b": "keep-bad", "visit_date": "bad"},
+    ])
+    os.utime(w1, (1_000_000_000, 1_000_000_000))  # failed, never fixed
+    fn = "widget_2_20250103141950.json"
+    write_json(uploads, "FAC001", fn, [
+        {"id": 2, "a": "y", "b": "z", "visit_date": "2024-01-02"},
+        {"id": 3, "a": "w", "b": "v", "visit_date": "bad"},
+    ])
+    assert engine.run(uploads).files_failed == 2
+
+    write_json(uploads, "FAC001", fn, [
+        {"id": 2, "a": "y", "visit_date": "2024-01-02"},
+        {"id": 3, "a": "w", "visit_date": "2024-01-03"},
+    ])
+    rep = engine.run(uploads)
+    assert (rep.files_ingested, rep.files_failed, rep.files_skipped) == (1, 0, 1)
+    stg, bad = "stg_widget", "stg_widget_bad_dates"
+    got = sorted(tuple(r) for r in engine.store.read(stg).select("id", "a", "b").collect())
+    assert got == [(1, "x", "keep-me"), (2, "y", None), (3, "w", None)]
+    assert [tuple(r) for r in engine.store.read(bad).select("id", "b").collect()] == [
+        (4, "keep-bad")
+    ]
+
+    clean = IngestionEngine(spark, str(tmp_path / "wh_clean"))
+    clean.run(uploads)
+    for t in (stg, bad):
+        assert _landed(engine.store, t) == _landed(clean.store, t)
+
+
 def test_same_filename_two_facilities_distinct_audit(engine, uploads):
     """(file_name, facility_id) keying: identical filenames uploaded by two
     facilities are two work items with per-facility counts

@@ -18,7 +18,7 @@ from data_ingestion_from_multiple_directories_linux_spark.operators.multimodal i
     media_from_documents,
     real_decode,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import CHILD_SYS_PATH, SF_SMALL
 
 
 @pytest.fixture(scope="module")
@@ -604,9 +604,8 @@ def test_minhash_incremental_index_roundtrip(spark, tmp_path):
     assert got == full and got  # identical pair set, non-empty
 
 
-_MINHASH_SERVE_SCRIPT = r"""
+_MINHASH_SERVE_SCRIPT = CHILD_SYS_PATH + r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession, functions as F
 
 wh, out, sf = sys.argv[1], sys.argv[2], sys.argv[3]
@@ -1088,9 +1087,8 @@ def test_ivf_centroids_persist_and_reload_identically(spark, tmp_path):
     assert got == want and got
 
 
-_SERVE_SCRIPT = r"""
+_SERVE_SCRIPT = CHILD_SYS_PATH + r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 
 wh, out = sys.argv[1], sys.argv[2]
@@ -1420,9 +1418,8 @@ def test_quality_threshold_metrics_confusion_partitions(spark):
         prev_recall = r["recall_milli"]
 
 
-_BLOOM_SERVE_SCRIPT = r"""
+_BLOOM_SERVE_SCRIPT = CHILD_SYS_PATH + r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession, functions as F
 
 wh, out, sf = sys.argv[1], sys.argv[2], sys.argv[3]
@@ -2181,9 +2178,8 @@ def test_repeated_window_spans_occ_cap_guard(spark):
     assert same == uncapped
 
 
-_GATE_SERVE_SCRIPT = """
+_GATE_SERVE_SCRIPT = CHILD_SYS_PATH + """
 import json, sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 
 wh, out, sf = sys.argv[1], sys.argv[2], sys.argv[3]

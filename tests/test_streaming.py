@@ -12,6 +12,7 @@ from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
     IngestionEngine,
 )
 from data_ingestion_from_multiple_directories_linux_spark.streaming import StreamingIngestion
+from tests.conftest import CHILD_SYS_PATH
 from tests.test_ingest_engine import patient, write_json
 
 
@@ -66,9 +67,8 @@ def test_checkpoint_exactly_once_across_runs(spark, tmp_path, uploads):
     assert s2.store.read(INGESTION_LOG).count() == 2
 
 
-_RESUME_SCRIPT = r"""
+_RESUME_SCRIPT = CHILD_SYS_PATH + r"""
 import sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 
 wh, uploads, table = sys.argv[1], sys.argv[2], sys.argv[3]
@@ -1509,9 +1509,8 @@ def test_streaming_crawl_frontier_replay_idempotent(spark, tmp_path):
     assert once == twice and len(once) == 8
 
 
-_FRONTIER_RESUME_SCRIPT = """
+_FRONTIER_RESUME_SCRIPT = CHILD_SYS_PATH + """
 import json, sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 
 src, ckpt, wh, out = sys.argv[1:5]

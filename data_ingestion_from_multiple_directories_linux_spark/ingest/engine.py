@@ -27,9 +27,12 @@ Scale notes: staging tables are written partitioned by facility
 rewrites only the facility partitions that held the retried files' rows:
 each staging table gets one write per run, new rows appended and those
 partitions swapped in (:func:`land_files`), never a whole-table rewrite.
-Audit writes are append-only; the only driver-side collect is file-level
-*metadata* (the same information Spark's own FileIndex holds), never row
-data.
+Audit writes are append-only rows the driver already holds, written as
+one parquet file per table per run with no Spark job
+(``TableStore.append_rows``); the engine's own audit tables are read with
+their declared DDL, never by footer inference. The only driver-side
+collect is file-level *metadata* (the same information Spark's own
+FileIndex holds), never row data.
 """
 
 from __future__ import annotations
@@ -105,14 +108,14 @@ _INTERNAL_COLS = ("_src_file", "_src_facility", CORRUPT_COL)
 
 
 def local_df(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
-    """Single-partition DataFrame from driver-local rows (audit frames).
+    """Single-partition DataFrame from driver-local rows, for a local
+    frame that joins Spark data (rows that only need storing go through
+    ``TableStore.append_rows``, which runs no job).
 
-    ``createDataFrame(rows)`` slices into defaultParallelism partitions —
-    one tiny output file per slice on append, and ``coalesce(1)`` on such
-    a local relation measures ~10× slower than building the single
-    partition up front (it funnels every python slice through one task).
-    Audit frames are bounded by the per-run file cap, so one partition —
-    and therefore exactly one parquet file per run — is the right shape.
+    ``createDataFrame(rows)`` slices into defaultParallelism partitions,
+    and ``coalesce(1)`` on such a local relation measures ~10× slower
+    than building the single partition up front (it funnels every python
+    slice through one task).
     """
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), ddl)
 
@@ -378,12 +381,6 @@ def audit_rows(
     return rows
 
 
-def log_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    """:func:`audit_rows` output as one single-partition log frame."""
-    cols = [c.split()[0] for c in INGESTION_LOG_DDL.split(", ")]
-    return local_df(spark, [tuple(r[k] for k in cols) for r in rows], INGESTION_LOG_DDL)
-
-
 def _default_transforms() -> dict[str, list]:
     """Per-table transform dispatch table (G2, file_loader.py:597-621).
 
@@ -580,7 +577,7 @@ class IngestionEngine:
         through this requeue. Returns the number of rows requeued."""
         if not self.store.exists(INGESTION_LOG):
             return 0
-        log = self.store.read(INGESTION_LOG)
+        log = self.store.read(INGESTION_LOG, INGESTION_LOG_DDL)
         hit = F.col("status") == "failed"
         if like_pattern:
             hit = hit & F.lower(F.col("file_name")).like(like_pattern.lower())
@@ -725,31 +722,28 @@ class IngestionEngine:
             t = row["table_name"]
             report.tables[t] = report.tables.get(t, 0) + row["json_rec_count"]
 
-        if audit:
-            self.store.append(INGESTION_LOG, log_frame(self.spark, audit))
-            mon_df = local_df(
-                self.spark,
-                [
-                    (
-                        r["facility_id"], r["batch_id"], r["file_name"], r["table_name"],
-                        r["load_end_time"], r["json_rec_count"],
-                        "Y" if r["status"] == "success" else "F",
-                        r["error_message"],
-                    )
-                    for r in audit
-                ],
-                STG_MONITORING_DDL,
-            )
-            self.store.append(STG_MONITORING, mon_df)
-
+        # driver-held rows: one file per table, no Spark job
+        self.store.append_rows(INGESTION_LOG, audit, INGESTION_LOG_DDL)
+        self.store.append_rows(
+            STG_MONITORING,
+            [
+                (
+                    r["facility_id"], r["batch_id"], r["file_name"], r["table_name"],
+                    r["load_end_time"], r["json_rec_count"],
+                    "Y" if r["status"] == "success" else "F",
+                    r["error_message"],
+                )
+                for r in audit
+            ],
+            STG_MONITORING_DDL,
+        )
         end = datetime.now()
         status = "Job Passed" if report.files_failed == 0 else "Job Failed"
-        run_df = local_df(
-            self.spark,
+        self.store.append_rows(
+            PIPELINE_LOG,
             [(run_id, start, end, status, process_type, None, report.records_ingested)],
             PIPELINE_LOG_DDL,
         )
-        self.store.append(PIPELINE_LOG, run_df)
         return report
 
     # ------------------------------------------------------------------

@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from datetime import datetime
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -195,12 +196,10 @@ def delete_processed_files(
         rep.files_deleted += 1
         rep.records_counted += n
         rows.append((fn, fac, n, "deleted"))
-    if rows:
-        log_df = spark.createDataFrame(
-            [(*row, None) for row in rows],
-            FILE_DELETION_LOG_DDL,
-        ).withColumn("deleted_time", F.current_timestamp())
-        store.append(FILE_DELETION_LOG, log_df)
+    now = datetime.now()
+    store.append_rows(
+        FILE_DELETION_LOG, [(*row, now) for row in rows], FILE_DELETION_LOG_DDL
+    )
     return rep
 
 

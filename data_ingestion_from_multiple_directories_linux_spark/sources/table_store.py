@@ -6,9 +6,11 @@ object storage the engine expresses UPDATE/DELETE as read-modify-write with
 a write-temp-swap so readers never observe a half-written table (SURVEY.md
 §7 "mutable state on immutable storage").
 
-Append-only tables (audit logs, staging appends) use plain parquet appends —
-each Spark write job is atomic at the directory level. At cluster scale the
-same interface maps 1:1 onto a table format with real transactions (Delta /
+Append-only tables use plain parquet appends: a Spark write job for
+distributed frames (staging), and :meth:`TableStore.append_rows` for the
+few rows the driver already holds (audit rows, commit markers) — one
+parquet file renamed in, no Spark job. At cluster scale the same
+interface maps 1:1 onto a table format with real transactions (Delta /
 Iceberg MERGE); the swap trick is the dependency-free fallback.
 """
 
@@ -17,10 +19,13 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Collection, Sequence
+from collections.abc import Collection, Mapping, Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class TableStore:
@@ -48,9 +53,12 @@ class TableStore:
         the table, as listed) reads only those dirs; ``basePath`` keeps
         their partition columns.
 
-        Hive partition values come back as the strings they were
-        written from: type inference would read ``stg_datim_id=007``
-        as the integer 7, so an inferred non-string partition column is
+        Without a declared schema a partitioned table merges every
+        footer's schema (``mergeSchema``; still one inference job): a
+        later batch may land a column in another partition only. Hive
+        partition values come back as the strings they were written
+        from: type inference would read ``stg_datim_id=007`` as the
+        integer 7, so an inferred non-string partition column is
         re-read declared ``string`` (no second inference job)."""
         if not self.exists(name):
             raise FileNotFoundError(f"table {name!r} not found under {self.root}")
@@ -59,8 +67,10 @@ class TableStore:
         reader = self.spark.read.option("basePath", live)
         if schema is not None:
             return reader.schema(schema).parquet(*paths)
-        df = reader.parquet(*paths)
         parts = self.partition_columns(name)
+        if parts:
+            reader = reader.option("mergeSchema", "true")
+        df = reader.parquet(*paths)
         if any(f.name in parts and f.dataType != T.StringType() for f in df.schema):
             typed = T.StructType(
                 [T.StructField(f.name, T.StringType()) if f.name in parts else f
@@ -70,11 +80,52 @@ class TableStore:
         return df
 
     def read_or_empty(self, name: str, schema: str) -> DataFrame:
-        """Read, or produce an empty frame with the given DDL schema —
-        lets first-run logic treat missing audit tables as zero rows."""
+        """Read with the given DDL schema (no footer-inference job), or
+        produce an empty frame of it — lets first-run logic treat missing
+        audit tables as zero rows."""
         if self.exists(name):
-            return self.read(name)
+            return self.read(name, schema)
         return self.spark.createDataFrame([], schema)
+
+    def append_rows(
+        self, name: str, rows: Sequence[Sequence | Mapping], ddl: str
+    ) -> None:
+        """Append rows the driver already holds — tuples in ``ddl``
+        column order, or dicts keyed by column name — as ONE parquet
+        file written from the driver with pyarrow: no Spark job.
+
+        The Arrow schema is pyspark's own mapping of ``ddl``
+        (``to_arrow_schema``), and each value goes through its Spark
+        type's ``toInternal`` first, so naive datetimes are read as
+        local time and stored as UTC exactly as ``createDataFrame``
+        stores them. The file is written under a hidden temp name that
+        does not end in ``.parquet`` (no reader or file count sees it),
+        then renamed in; a new table is written as a ``.{name}.tmp-*``
+        dir renamed into place, so a crash never leaves an empty,
+        unreadable table dir (:meth:`repair` clears the residue)."""
+        if not rows:
+            return
+        schema = T.StructType.fromDDL(ddl)
+        arrow = to_arrow_schema(schema)
+        arrays = []
+        for i, (f, t) in enumerate(zip(schema.fields, arrow)):
+            col = [r[f.name] if isinstance(r, Mapping) else r[i] for r in rows]
+            if f.dataType.needConversion():
+                col = [f.dataType.toInternal(v) for v in col]
+            arrays.append(pa.array(col, type=t.type))
+        table = pa.Table.from_arrays(arrays, schema=arrow)
+        part = uuid.uuid4().hex
+        data = f"part-00000-{part}-c000.snappy.parquet"
+        live = self.path(name)
+        if self.exists(name):
+            tmp = os.path.join(live, f".part-{part}.tmp")
+            pq.write_table(table, tmp)
+            os.rename(tmp, os.path.join(live, data))
+        else:
+            tmp = self.path(f".{name}.tmp-{part}")
+            os.makedirs(tmp)
+            pq.write_table(table, os.path.join(tmp, data))
+            os.rename(tmp, live)
 
     def append(
         self,

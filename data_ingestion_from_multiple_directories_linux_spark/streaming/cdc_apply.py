@@ -36,6 +36,7 @@ from .segments import checkpoint_scope, drain, json_stream, scoped
 
 #: marker table: one row per applied (scope, batch)
 CDC_COMMITS = "cdc_commits"
+CDC_COMMITS_DDL = "checkpoint string, batch_id bigint"
 
 
 class StreamingCdcApply:
@@ -86,17 +87,11 @@ class StreamingCdcApply:
         return int(batch_id) in self._applied
 
     def _mark_applied(self, batch_id: int) -> None:
-        # single-slice local frame: a 1-row createDataFrame slices into
-        # defaultParallelism near-empty parquet appends otherwise (the
-        # measured pathology ingest.engine.local_df exists to avoid)
-        from ..ingest.engine import local_df
-
-        row = local_df(
-            self.spark,
+        self.store.append_rows(
+            CDC_COMMITS,
             [(checkpoint_scope(self.checkpoint_dir), int(batch_id))],
-            "checkpoint string, batch_id long",
+            CDC_COMMITS_DDL,
         )
-        self.store.append(CDC_COMMITS, row)
         if self._applied is None:
             self._applied = self._load_applied()
         self._applied.add(int(batch_id))

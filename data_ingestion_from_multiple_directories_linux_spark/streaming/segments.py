@@ -16,7 +16,8 @@ rules make the replay harmless:
   written before scopes were made absolute) still count as this scope.
 * **Replay = purge-then-write.** Writing batch ``b`` rewrites the table
   as every row except this scope's ``b`` segment, plus the new segment
-  (one read, one atomic overwrite). A replay replaces, never adds.
+  (one read with the declared ``ddl``, so no footer-inference job, and
+  one atomic overwrite). A replay replaces, never adds.
 * **Merge.** The served state is the fold of all segments of all
   scopes. Counting summaries (tf partials, count-min cells, drift
   cells) are mergeable: value columns SUM per key. Per-key facts (IVF
@@ -28,7 +29,7 @@ rules make the replay harmless:
   ``batch_id`` stays unfolded: it is the only batch that can still
   replay, and its replay repairs by purging its own segment, which a
   fold would have made a no-op (a double count). One ``max(batch_id)``
-  job and one overwrite per compaction.
+  job and one overwrite per compaction (the read is declared too).
 """
 
 from __future__ import annotations
@@ -59,7 +60,9 @@ class SegmentTable:
     ``keys`` identify a payload row; ``sums`` are value columns that
     merge by SUM per ``keys``. Without ``sums`` rows are per-key facts,
     merged by union. ``ddl`` (the full schema, ``checkpoint`` and
-    ``batch_id`` first) serves :meth:`merged` before the first write."""
+    ``batch_id`` first) is the schema every read declares, and serves
+    :meth:`merged` before the first write; a table without one infers
+    its schema from a footer on each read."""
 
     def __init__(
         self,
@@ -93,7 +96,7 @@ class SegmentTable:
         if not self.store.exists(self.name):
             return None
         own = self.owned & (F.col("batch_id") == int(batch_id))
-        return self.store.read(self.name).filter(~own)
+        return self.store.read(self.name, self.ddl).filter(~own)
 
     def write(self, segment: DataFrame, kept: DataFrame | None) -> None:
         """Overwrite the table with ``kept`` (from :meth:`without`) plus
@@ -123,7 +126,7 @@ class SegmentTable:
         keeping its highest segment and other scopes' rows as they are."""
         if not self.store.exists(self.name):
             return
-        cur = self.store.read(self.name)
+        cur = self.store.read(self.name, self.ddl)
         mine = cur.filter(self.owned)
         last = mine.agg(F.max("batch_id")).first()[0]
         if last is None:

@@ -27,7 +27,8 @@ Mapping to the reference's operating model:
   write that replace only the facility partitions a replay hit) and
   audits it by the same verdict law (``ingest.engine.audit_rows``), so
   both modes write the same staging, quarantine and audit rows for the
-  same files;
+  same files; the audit rows and the commit marker are driver rows,
+  stored by ``TableStore.append_rows`` with no Spark job;
 * ``maxFilesPerTrigger`` — the batch-size throttle (O2, LIMIT 50000).
 
 Scale: the file source lists and tracks files on the driver exactly like
@@ -48,6 +49,7 @@ from pyspark.sql import functions as F
 
 from ..ingest.engine import (
     INGESTION_LOG,
+    INGESTION_LOG_DDL,
     PAIR_DDL,
     FileCounts,
     Pair,
@@ -55,7 +57,6 @@ from ..ingest.engine import (
     audit_rows,
     land_files,
     local_df,
-    log_frame,
 )
 from ..sources.json_dir import json_reader, permissive_schema, with_source_lineage
 from ..sources.table_store import TableStore
@@ -113,6 +114,9 @@ class StreamingIngestion:
     #: the same table), so an unscoped (table, batch_id) marker would
     #: silently skip a genuinely NEW batch as a "replay" — data loss.
     COMMITS = "_stream_commits"
+    COMMITS_DDL = (
+        "table_name string, checkpoint string, batch_id bigint, committed_at timestamp"
+    )
 
     #: compact the marker table once it fragments past this many files
     #: (one tiny parquet file is appended per micro-batch)
@@ -131,11 +135,18 @@ class StreamingIngestion:
         batches — multi-batch data loss. The cost of ignoring them is
         bounded and safe: at most the last pre-upgrade batch replays
         once without a recognized marker, and the purge-before-append
-        repair makes that re-process idempotent."""
+        repair makes that re-process idempotent.
+
+        A pre-scoping table (no ``checkpoint`` column) is migrated here,
+        once, so later appends never mix parquet schemas (tiny: one row
+        per past micro-batch)."""
         if not self.store.exists(self.COMMITS):
             return set()
         df = self.store.read(self.COMMITS)
         if "checkpoint" not in df.columns:
+            self.store.overwrite(
+                self.COMMITS, df.withColumn("checkpoint", F.lit(None).cast("string"))
+            )
             return set()
         cond = (F.col("table_name") == f"stg_{self.table}") & scoped(
             self.checkpoint
@@ -151,32 +162,20 @@ class StreamingIngestion:
         return batch_id in self._committed
 
     def _mark_committed(self, batch_id: int) -> None:
-        if self.store.exists(self.COMMITS):
-            cur = self.store.read(self.COMMITS)
-            if "checkpoint" not in cur.columns:
-                # one-time migration of a pre-scoping marker table so
-                # appends never mix parquet schemas (tiny: one row per
-                # past micro-batch)
-                self.store.overwrite(
-                    self.COMMITS,
-                    cur.withColumn("checkpoint", F.lit(None).cast("string")),
-                )
-        # single-slice local frame: coalesce(1) on a local relation is
-        # the measured ~10x pathology local_df exists to avoid
-        row = local_df(
-            self.spark,
-            [(f"stg_{self.table}", checkpoint_scope(self.checkpoint), batch_id)],
-            "table_name string, checkpoint string, batch_id long",
-        ).withColumn("committed_at", F.current_timestamp())
-        self.store.append(self.COMMITS, row)
         if self._committed is None:
             self._committed = self._load_committed()
+        self.store.append_rows(
+            self.COMMITS,
+            [(f"stg_{self.table}", checkpoint_scope(self.checkpoint), batch_id,
+              datetime.now())],
+            self.COMMITS_DDL,
+        )
         self._committed.add(batch_id)
 
     def _audit(self, files: dict[Pair, FileCounts], now: datetime) -> None:
-        rows = audit_rows(self.table, files, now)
-        if rows:
-            self.store.append(INGESTION_LOG, log_frame(self.spark, rows))
+        self.store.append_rows(
+            INGESTION_LOG, audit_rows(self.table, files, now), INGESTION_LOG_DDL
+        )
 
     def _process_batch(self, batch: DataFrame, batch_id: int) -> None:
         """The per-micro-batch sink: the batch engine's
@@ -218,7 +217,7 @@ class StreamingIngestion:
         missing = local_df(self.spark, sorted(set(snapshot)), PAIR_DDL)
         if self.store.exists(INGESTION_LOG):
             seen = (
-                self.store.read(INGESTION_LOG)
+                self.store.read(INGESTION_LOG, INGESTION_LOG_DDL)
                 .filter(F.col("table_name") == f"stg_{self.table}")
                 .select("file_name", "facility_id")
             )

@@ -267,6 +267,23 @@ def test_unregistered_retry_keeps_columns_of_untouched_rows(spark, engine, uploa
         assert _landed(engine.store, t) == _landed(clean.store, t)
 
 
+def test_whole_table_read_keeps_a_column_a_later_partition_added(engine, uploads):
+    """An unregistered table infers each batch's schema: a later batch
+    that lands column ``c`` under another facility shows it in a
+    whole-table read, beside the earlier batch's ``b``."""
+    write_json(uploads, "FAC001", "widget_1_20250103141949.json",
+               [{"id": 1, "a": "x", "b": "y"}])
+    engine.run(uploads)
+    write_json(uploads, "FAC002", "widget_2_20250103141950.json",
+               [{"id": 2, "a": "p", "c": "q"}])
+    assert engine.run(uploads).files_ingested == 1
+    got = engine.store.read("stg_widget")
+    assert {"a", "b", "c"} <= set(got.columns)
+    assert sorted(tuple(r) for r in got.select("id", "a", "b", "c").collect()) == [
+        (1, "x", "y", None), (2, "p", None, "q")
+    ]
+
+
 def test_same_filename_two_facilities_distinct_audit(engine, uploads):
     """(file_name, facility_id) keying: identical filenames uploaded by two
     facilities are two work items with per-facility counts

@@ -2,7 +2,8 @@
 
 The reference cleanses every file in pandas before load:
 * empty/whitespace/'null' strings → NULL (file_loader.py:477-496);
-* drop rows that are entirely null (file_loader.py:629);
+* drop rows that are entirely null (file_loader.py:629; the engine flags
+  them inline, ``ingest.engine.cleanse_and_split``);
 * per-column date validation, collecting bad rows for quarantine
   (file_loader.py:498-521; dsd per-value variant dsd_loader.py:625-633).
 
@@ -35,19 +36,6 @@ def normalize_nulls(df: DataFrame, columns: list[str] | None = None) -> DataFram
             for c in df.columns
         ]
     )
-
-
-def drop_all_null_rows(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """``dropna(how='all')`` (file_loader.py:629) — Spark-native.
-
-    Pass ``columns`` to scope the check to the DATA columns: on the
-    engine's standard read shape the lineage columns (``_src_file`` /
-    ``_src_facility``) are never null, so an unscoped how='all' over
-    every column is a silent no-op (review finding). Defaults to all
-    non-underscore-prefixed columns, matching the engine's inline
-    all-null flag over its data columns."""
-    cols = columns or [c for c in df.columns if not c.startswith("_")]
-    return df.na.drop(how="all", subset=cols)
 
 
 def try_parse_timestamp(col: Column | str) -> Column:

@@ -67,12 +67,6 @@ def batch_of(file_name: Column | str) -> Column:
     return F.regexp_extract(c, BATCH_RE, 1)
 
 
-def file_ts_of(file_name: Column | str) -> Column:
-    """14-digit timestamp token of the filename."""
-    c = F.col(file_name) if isinstance(file_name, str) else file_name
-    return F.to_timestamp(F.regexp_extract(c, TS_RE, 1), "yyyyMMddHHmmss")
-
-
 def derive_table_name(file_name: str) -> str:
     """Driver-side twin of :func:`table_of` for routing a file list to
     per-table reads (the engine groups files by table before scanning)."""

@@ -5,11 +5,15 @@ Reproduces the observable semantics of the reference pipeline
 
 * one distributed JSON read per target table instead of a pandas loop per
   file (G5: facility parallelism comes from the scheduler, not threads);
-* idempotency as a left-anti join of the discovered-file catalog against
-  the success log (G1, file_loader.py:312-369) — previously failed files
-  retry automatically on the next run (file_loader.py:413-420
+* idempotency from each file's latest logged attempt (G1,
+  file_loader.py:312-369), read by one law (:func:`latest_attempts`,
+  :func:`file_status`) that work selection, the streaming empty-file
+  audit, the summary report and retention all share — previously failed
+  files retry automatically on the next run (file_loader.py:413-420
   ``is_loaded_failed → 'attempting to reload'``); the retry's staging
-  write drops their prior partial rows, so it cannot duplicate;
+  write drops their prior partial rows, so it cannot duplicate, and a
+  run's selected files are logged ``loading`` until its audit rows land,
+  so a run that dies in between is retried the same way;
 * per-table transform dispatch (G2, file_loader.py:597-621): PII masking,
   column exclusion, struct masking;
 * cleansing: null-sentinel normalization (F7), drop all-null rows (F6),
@@ -38,7 +42,9 @@ FileIndex holds), never row data.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+import re
+from collections.abc import Callable, Collection
+from contextlib import suppress
 from dataclasses import dataclass, field
 from datetime import datetime
 from functools import partial
@@ -57,7 +63,6 @@ from ..functions.masking import mask_columns, mask_struct_value_staged
 from ..sources.json_dir import (
     CORRUPT_COL,
     FileMeta,
-    catalog_df,
     discover_files,
     read_table_files,
 )
@@ -89,6 +94,14 @@ PIPELINE_LOG_DDL = (
     "process_type string, error_message string, records_processed bigint"
 )
 
+#: a selected file's status from the start of a run until its audit row
+#: lands: a run that dies in between leaves it, and the next run retries
+#: the file
+LOADING = "loading"
+#: latest statuses after which staging may hold rows of the file that an
+#: earlier attempt landed: re-selecting the file purges them
+RETRY_STATUSES = ("failed", "requeued", LOADING)
+
 #: Error-message storage cap (reference file_loader.py:189).
 ERROR_MSG_CAP = 10_000
 
@@ -118,6 +131,49 @@ def local_df(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
     slice through one task).
     """
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), ddl)
+
+
+def latest_attempts(log: DataFrame) -> DataFrame:
+    """The latest attempt per (file, facility) of an ingestion log: the
+    log keeps one row per attempt where the reference's sync_file keeps
+    one row per file (§1.1), so every reader of a file's state reduces
+    it with this one window. Latest is the highest ``load_end_time``,
+    then the highest ``status`` (of a tie, ``success`` wins). A log
+    without attempt times holds one row per file, as sync_file does, so
+    its rows are their own latest."""
+    ended = [F.desc("load_end_time")] if "load_end_time" in log.columns else []
+    w = Window.partitionBy("file_name", "facility_id").orderBy(*ended, F.desc("status"))
+    return log.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+
+def file_status(
+    store: TableStore, pairs: Collection[Pair], table_name: str | None = None
+) -> dict[Pair, tuple[str | None, float | None]]:
+    """The one reader of per-file status: ``{pair: (status, attempt
+    start in epoch seconds)}`` of each (file, facility) pair's latest
+    attempt (:func:`latest_attempts`), among ``table_name``'s log rows
+    when given. A pair with no log row is absent.
+
+    ONE collect: a local frame of the pairs joins the latest attempts of
+    the log, read with its declared DDL, and the start time is cast to
+    epoch seconds inside Spark (no Python timezone round-trip). It
+    returns one small row per pair that has a log row — file metadata,
+    never row data. No job runs when the log is missing or there are no
+    pairs."""
+    if not pairs or not store.exists(INGESTION_LOG):
+        return {}
+    log = store.read(INGESTION_LOG, INGESTION_LOG_DDL)
+    if table_name is not None:
+        log = log.filter(F.col("table_name") == table_name)
+    keys = local_df(store.spark, sorted(set(pairs)), PAIR_DDL)
+    rows = (
+        latest_attempts(log)
+        .join(keys, ["file_name", "facility_id"])
+        .select("file_name", "facility_id", "status",
+                F.col("load_start_time").cast("double"))
+        .collect()
+    )
+    return {(fn, fac): (status, start) for fn, fac, status, start in rows}
 
 
 def cleanse_and_split(
@@ -458,7 +514,7 @@ class IngestionEngine:
     def _select_work(
         self, metas: list[FileMeta]
     ) -> tuple[list[FileMeta], int, set[tuple[str, str]]]:
-        """Join discovered files against the latest log status per file.
+        """Pick this run's files by each file's latest logged attempt.
 
         Reference state machine (file_loader.py:247-278): the dequeue
         selects only pending files; failure sets processed=-2, which is
@@ -473,95 +529,57 @@ class IngestionEngine:
         ``UPDATE … SET processed=0`` requeue SQL.
 
         Decision per (file_name, facility_id) — keyed exactly as
-        file_loader.py:328-336 — based on the LATEST log row:
-        no row → select (new); 'requeued' → select; 'success' → skip;
-        'failed' → select only if mtime > that attempt's load_START_time
-        (start, not end: a file re-uploaded while the failing attempt was
-        mid-flight has mtime between start and end — comparing against
-        end would terminally skip content the attempt never read). Queue
-        fairness
+        file_loader.py:328-336 — based on the LATEST attempt
+        (:func:`file_status`): no row → select (new); 'requeued' →
+        select; 'loading' (a run died between its staging write and its
+        audit append) → select; 'success' → skip; 'failed' → select
+        only if mtime > that attempt's load_START_time (start, not end:
+        a file re-uploaded while the failing attempt was mid-flight has
+        mtime between start and end — comparing against end would
+        terminally skip content the attempt never read). Queue fairness
         orders by the filename's 14-digit timestamp then name (O1,
         file_loader.py:254), capped per run (O2, LIMIT 50000).
 
+        The rule runs here on the driver, over the ``metas`` it already
+        holds: :func:`file_status` collects at most one small row per
+        discovered file, the same order as the ``FileMeta`` list itself,
+        and submits no job on a first run (no log yet).
+
         Returns (selected, n_skipped, retry_pairs) where retry_pairs is
-        the subset of selected pairs with a prior 'failed'/'requeued'
-        row — the re-landing write must purge their partial staging rows
-        (a G3 quarantine run ingests the valid rows and still logs the
-        file failed; blind re-append would duplicate them).
+        the subset of selected pairs whose latest status is 'failed',
+        'requeued' or 'loading' — the re-landing write must purge their
+        partial staging rows (a G3 quarantine run ingests the valid rows
+        and still logs the file failed; blind re-append would duplicate
+        them).
         """
-        if not metas:
-            return [], 0, set()
+        status = file_status(self.store, [(m.file_name, m.facility_id) for m in metas])
 
-        def order_key(m: FileMeta) -> tuple[str, str, str]:
-            import re
+        def latest(m: FileMeta) -> tuple[str | None, float | None]:
+            return status.get((m.file_name, m.facility_id), (None, None))
 
-            ts = re.search(TS_RE, m.file_name)
-            return (ts.group(1) if ts else "", m.file_name, m.facility_id)
-
-        if not self.store.exists(INGESTION_LOG):
-            # first run: no log to join against — pure driver-side
-            # ordering over file METADATA (profiled: ~8s of Spark job
-            # overhead saved per cold run; identical semantics)
-            ordered = sorted(metas, key=order_key)
-            selected = ordered[: self.max_files_per_run]
-            return selected, len(metas) - len(selected), set()
-
-        cat = catalog_df(self.spark, metas)
-        # declared schema: no footer-inference job on every tick
-        prior = self.store.read(INGESTION_LOG, INGESTION_LOG_DDL)
-        # latest status per work item decides; one window over the
-        # (bounded, file-level) log — never row data
-        latest = (
-            prior.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("file_name", "facility_id").orderBy(
-                        F.desc("load_end_time"), F.desc("status")
-                    )
-                ),
-            )
-            .filter(F.col("_rn") == 1)
-            .select(
-                "file_name",
-                "facility_id",
-                F.col("status").alias("_status"),
-                F.col("load_start_time").alias("_attempt_ts"),
-            )
-        )
-        joined = cat.join(latest, ["file_name", "facility_id"], "left")
-        selectable = (
-            F.col("_status").isNull()
-            | (F.col("_status") == "requeued")
-            | (
+        def selectable(m: FileMeta) -> bool:
+            state, start = latest(m)
+            if state == "failed":
                 # 2s slack: filesystem mtimes are often whole-second
                 # truncated, so a file re-uploaded moments after the
                 # failing attempt started could land just below the
                 # attempt timestamp and be terminally skipped. An
                 # occasional extra retry is idempotent (the re-landing
                 # write purges), a terminal skip is data loss.
-                (F.col("_status") == "failed")
-                & (F.col("mtime") > F.col("_attempt_ts").cast("double") - F.lit(2.0))
-            )
-        )
-        # retry hygiene applies to files failed OR bulk-requeued: either
-        # way prior partial rows may exist in staging and must be purged
-        # by the re-landing write (blind re-append would duplicate them)
-        todo = (
-            joined.filter(selectable)
-            .withColumn("_retry", F.col("_status").isin("failed", "requeued"))
-            .orderBy(
-                F.regexp_extract("file_name", TS_RE, 1), "file_name", "facility_id"
-            )
-            .select("path", "file_name", "facility_id", "_retry")
-        )
-        if self.max_files_per_run is not None:
-            todo = todo.limit(self.max_files_per_run)
-        # ONE collect of file-level metadata (bounded by the 50k run
-        # cap), never row data; the retry flag rides along
-        rows = todo.collect()
-        keep = {r.path for r in rows}
-        retry_pairs = {(r.file_name, r.facility_id) for r in rows if r._retry}
-        selected = [m for m in metas if m.path in keep]
+                return start is not None and m.mtime > start - 2.0
+            return state in (None, "requeued", LOADING)
+
+        def order_key(m: FileMeta) -> tuple[str, str, str]:
+            ts = re.search(TS_RE, m.file_name)
+            return (ts.group(1) if ts else "", m.file_name, m.facility_id)
+
+        selected = sorted(filter(selectable, metas), key=order_key)
+        selected = selected[: self.max_files_per_run]
+        retry_pairs = {
+            (m.file_name, m.facility_id)
+            for m in selected
+            if latest(m)[0] in RETRY_STATUSES
+        }
         return selected, len(metas) - len(selected), retry_pairs
 
     def requeue_failed(self, like_pattern: str | None = None) -> int:
@@ -643,8 +661,6 @@ class IngestionEngine:
         orchestrate_file_ingestion.sh:16-26 — here an O_EXCL lock file in
         the warehouse; streaming mode gets this for free from the
         checkpoint). Raises :class:`ConcurrentRunError` if locked."""
-        import os
-
         lock_path = self.store.path(".run.lock")
         try:
             fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -672,6 +688,18 @@ class IngestionEngine:
         report.files_seen = len(metas)
         selected, skipped, retry_pairs = self._select_work(metas)
         report.files_skipped = skipped
+        # in-flight rows, removed once the audit rows land: a run that
+        # dies after its staging write leaves its files 'loading', and
+        # the next run re-lands them as retries instead of as new files
+        in_flight = self.store.append_rows(
+            INGESTION_LOG,
+            [
+                (m.file_name, m.facility_id, f"stg_{m.table_name}", m.batch_id,
+                 LOADING, None, None, None, start, start)
+                for m in selected
+            ],
+            INGESTION_LOG_DDL,
+        )
 
         groups: dict[str, list[FileMeta]] = {}
         for m in selected:
@@ -724,6 +752,12 @@ class IngestionEngine:
 
         # driver-held rows: one file per table, no Spark job
         self.store.append_rows(INGESTION_LOG, audit, INGESTION_LOG_DDL)
+        if in_flight:
+            # gone when another writer rewrote the log meanwhile
+            # (requeue_failed, the stream's purge); its 'loading' rows
+            # then stay, shadowed by the later audit rows
+            with suppress(FileNotFoundError):
+                os.remove(in_flight)
         self.store.append_rows(
             STG_MONITORING,
             [
@@ -760,17 +794,12 @@ class IngestionEngine:
         Buckets count FILES, not attempts: the log keeps one row per
         attempt (fail → requeue → success is three rows for one file),
         while the reference's sync_file holds one row per file — so the
-        summary reduces to the LATEST row per (file, facility) first,
-        or a retried file would inflate total_files and double-count
-        its earlier attempts' record tallies."""
-        log = self.store.read_or_empty(INGESTION_LOG, INGESTION_LOG_DDL)
-        latest = Window.partitionBy("file_name", "facility_id").orderBy(
-            F.desc("load_start_time"), F.desc("load_end_time")
-        )
-        log = (
-            log.withColumn("_rn", F.row_number().over(latest))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        summary reduces to the LATEST row per (file, facility) first
+        (:func:`latest_attempts`), or a retried file would inflate
+        total_files and double-count its earlier attempts' record
+        tallies."""
+        log = latest_attempts(
+            self.store.read_or_empty(INGESTION_LOG, INGESTION_LOG_DDL)
         )
 
         def bucket(status: str) -> Column:

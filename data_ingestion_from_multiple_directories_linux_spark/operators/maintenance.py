@@ -31,6 +31,7 @@ from datetime import datetime
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ingest.engine import latest_attempts
 from ..sources.table_store import TableStore
 from .registry import query
 
@@ -128,8 +129,11 @@ def delete_processed_files(
     batch_cap: int = DELETE_BATCH_CAP,
     distributed: bool = False,
 ) -> RetentionReport:
-    """Remove source files whose ingestion reached a terminal state and
-    that are not yet in the deletion log.
+    """Remove source files whose latest ingestion attempt
+    (``ingest.engine.latest_attempts``) reached a terminal state and
+    that are not yet in the deletion log: a file whose latest attempt
+    is still loading or requeued is kept, whatever its earlier attempts
+    ended in.
 
     Mirrors automate_file_delete.py:87-151: select sync_file rows with
     ``processed IN (2,-2)`` and NO matching row in file_deletion_log
@@ -150,9 +154,9 @@ def delete_processed_files(
     driver-side loop (fine at the reference's 13k cap; required when
     only the driver mounts the uploads root, e.g. local test trees).
     """
-    terminal = ingestion_log.filter(
+    terminal = latest_attempts(ingestion_log).filter(
         F.col("status").isin("success", "failed")
-    ).select("file_name", "facility_id").distinct()
+    ).select("file_name", "facility_id")
     prior = store.read_or_empty(FILE_DELETION_LOG, FILE_DELETION_LOG_DDL).select(
         "file_name", "facility_id"
     )

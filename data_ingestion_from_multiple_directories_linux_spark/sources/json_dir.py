@@ -72,26 +72,6 @@ def discover_files(root: str) -> list[FileMeta]:
     return out
 
 
-def catalog_df(spark: SparkSession, metas: list[FileMeta]) -> DataFrame:
-    """File catalog as a DataFrame — the work-queue the dequeue/idempotency
-    joins run against (≙ sync_file)."""
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType(), False),
-            T.StructField("file_name", T.StringType(), False),
-            T.StructField("facility_id", T.StringType(), False),
-            T.StructField("table_name", T.StringType(), False),
-            T.StructField("batch_id", T.StringType(), True),
-            T.StructField("mtime", T.DoubleType(), True),
-        ]
-    )
-    rows = [
-        (m.path, m.file_name, m.facility_id, m.table_name, m.batch_id, m.mtime)
-        for m in metas
-    ]
-    return spark.createDataFrame(rows, schema)
-
-
 def permissive_schema(table: str) -> T.StructType | None:
     """``table``'s registered schema plus the ``_corrupt_record`` column
     PERMISSIVE mode fills for a malformed file (None if unregistered)."""

@@ -1,11 +1,11 @@
-"""Target-schema registry + PostgreSQL→Spark type mapping (SURVEY.md §1.2).
+"""Target-schema registry (SURVEY.md §1.2).
 
 The reference derives each staging table's schema at load time from
 ``information_schema.columns`` and maps PG types through a 15-entry dict
 (reference file_loader.py:45-58, :562-580). Here known tables register a
-StructType; unknown tables fall back to schema-on-read inference with
-unknown types collapsing to string — the same tolerance the reference's
-``else: String`` fallback (file_loader.py:580) provides.
+StructType; unknown tables fall back to schema-on-read inference — the
+tolerance the reference's ``else: String`` fallback (file_loader.py:580)
+provides.
 
 Date-bearing columns are registered as STRING so the validation/quarantine
 pass (functions.cleansing) sees the raw value; the engine casts them to
@@ -16,30 +16,6 @@ checks (file_loader.py:417, :498-521).
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-#: PostgreSQL type → Spark type (reference file_loader.py:562-580).
-PG_TO_SPARK: dict[str, T.DataType] = {
-    "integer": T.LongType(),
-    "bigint": T.LongType(),
-    "smallint": T.LongType(),
-    "character varying": T.StringType(),
-    "text": T.StringType(),
-    "numeric": T.DoubleType(),
-    "real": T.DoubleType(),
-    "double precision": T.DoubleType(),
-    "timestamp with time zone": T.TimestampType(),
-    "timestamp without time zone": T.TimestampType(),
-    "date": T.TimestampType(),
-    "boolean": T.BooleanType(),
-    "jsonb": T.StringType(),
-    "bytea": T.StringType(),
-    "uuid": T.StringType(),
-}
-
-
-def spark_type_for_pg(pg_type: str) -> T.DataType:
-    """Unknown → string fallback (file_loader.py:580)."""
-    return PG_TO_SPARK.get(pg_type.lower(), T.StringType())
 
 
 def _s(name: str) -> T.StructField:

@@ -89,7 +89,7 @@ class TableStore:
 
     def append_rows(
         self, name: str, rows: Sequence[Sequence | Mapping], ddl: str
-    ) -> None:
+    ) -> str | None:
         """Append rows the driver already holds — tuples in ``ddl``
         column order, or dicts keyed by column name — as ONE parquet
         file written from the driver with pyarrow: no Spark job.
@@ -102,9 +102,11 @@ class TableStore:
         does not end in ``.parquet`` (no reader or file count sees it),
         then renamed in; a new table is written as a ``.{name}.tmp-*``
         dir renamed into place, so a crash never leaves an empty,
-        unreadable table dir (:meth:`repair` clears the residue)."""
+        unreadable table dir (:meth:`repair` clears the residue).
+        Returns the path of the file written (None for no rows), so a
+        caller can take back rows it stored only for a while."""
         if not rows:
-            return
+            return None
         schema = T.StructType.fromDDL(ddl)
         arrow = to_arrow_schema(schema)
         arrays = []
@@ -126,6 +128,7 @@ class TableStore:
             os.makedirs(tmp)
             pq.write_table(table, os.path.join(tmp, data))
             os.rename(tmp, live)
+        return os.path.join(live, data)
 
     def append(
         self,

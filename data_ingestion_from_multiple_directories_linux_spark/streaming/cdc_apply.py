@@ -75,7 +75,7 @@ class StreamingCdcApply:
             return set()
         return {
             int(r["batch_id"])
-            for r in self.store.read(CDC_COMMITS)
+            for r in self.store.read(CDC_COMMITS, CDC_COMMITS_DDL)
             .filter(scoped(self.checkpoint_dir))
             .select("batch_id")
             .collect()

@@ -50,13 +50,12 @@ from pyspark.sql import functions as F
 from ..ingest.engine import (
     INGESTION_LOG,
     INGESTION_LOG_DDL,
-    PAIR_DDL,
     FileCounts,
     Pair,
     _default_transforms,
     audit_rows,
+    file_status,
     land_files,
-    local_df,
 )
 from ..sources.json_dir import json_reader, permissive_schema, with_source_lineage
 from ..sources.table_store import TableStore
@@ -207,24 +206,15 @@ class StreamingIngestion:
         """G4 parity: files that parse to ZERO rows (``[]`` / empty
         payload) never appear in any micro-batch, so the row-driven sink
         can't audit them. After the stream drains, any snapshot file
-        with no INGESTION_LOG row for this table is audited with zero
-        counts — the verdict law's empty-file row (G4) — once
-        (later runs see the row). ``snapshot`` is listed BEFORE the
-        stream starts so a file arriving mid-run is left for the next
-        tick, not misflagged. Only file METADATA reaches the driver."""
-        if not snapshot:
-            return
-        missing = local_df(self.spark, sorted(set(snapshot)), PAIR_DDL)
-        if self.store.exists(INGESTION_LOG):
-            seen = (
-                self.store.read(INGESTION_LOG, INGESTION_LOG_DDL)
-                .filter(F.col("table_name") == f"stg_{self.table}")
-                .select("file_name", "facility_id")
-            )
-            missing = missing.join(seen, ["file_name", "facility_id"], "left_anti")
+        with no INGESTION_LOG row for this table (:func:`file_status`)
+        is audited with zero counts — the verdict law's empty-file row
+        (G4) — once (later runs see the row). ``snapshot`` is listed
+        BEFORE the stream starts so a file arriving mid-run is left for
+        the next tick, not misflagged. Only file METADATA reaches the
+        driver."""
+        seen = file_status(self.store, snapshot, f"stg_{self.table}")
         self._audit(
-            {(r["file_name"], r["facility_id"]): FileCounts() for r in missing.collect()},
-            now,
+            {p: FileCounts() for p in sorted(set(snapshot)) if p not in seen}, now
         )
 
     def run_available_now(self) -> None:

@@ -30,6 +30,7 @@ from data_ingestion_from_multiple_directories_linux_spark.streaming import (
 )
 from data_ingestion_from_multiple_directories_linux_spark.streaming.cdc_apply import (
     CDC_COMMITS_DDL,
+    StreamingCdcApply,
 )
 from data_ingestion_from_multiple_directories_linux_spark.streaming.segments import (
     SegmentTable,
@@ -90,6 +91,9 @@ def test_driver_rows_and_state_reads_submit_no_job(spark, tmp_path, monkeypatch)
                        ddl=SEG_DDL)
     for b in range(3):
         seg.replace(b, local_df(spark, [("a", b + 1)], "k string, n bigint"))
+    cdc = StreamingCdcApply(spark, store, str(tmp_path / "feed"), str(tmp_path / "cdc_ck"),
+                            "op string, seq long, k string", "cdc_target", ["k"])
+    cdc._mark_applied(4)
     # every read the segment law makes, inside its real callers
     read_jobs = []
     read = store.read
@@ -104,8 +108,10 @@ def test_driver_rows_and_state_reads_submit_no_job(spark, tmp_path, monkeypatch)
     seg.compact()
     seg.replace(2, local_df(spark, [("a", 10)], "k string, n bigint"))
     assert sorted(tuple(r) for r in seg.merged().collect()) == [("a", 13)]
-    # without, compact, replace's without, merged's read_or_empty
-    assert read_jobs == [0, 0, 0, 0]
+    assert cdc._load_applied() == {4}
+    # without, compact, replace's without, merged's read_or_empty, the
+    # CDC markers
+    assert read_jobs == [0, 0, 0, 0, 0]
 
 
 def test_rerun_over_ingested_tree_submits_only_work_selection_jobs(spark, tmp_path):

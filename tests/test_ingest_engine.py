@@ -23,6 +23,7 @@ from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
     PIPELINE_LOG,
     STG_MONITORING,
     IngestionEngine,
+    file_status,
 )
 from data_ingestion_from_multiple_directories_linux_spark.sources.table_store import TableStore
 
@@ -208,6 +209,48 @@ def test_retry_crash_mid_swap_repairs_and_converges(engine, uploads, monkeypatch
     assert got == [("FAC001", 0), ("FAC001", 1), ("FAC001", 2), ("FAC002", 20)]
     assert not engine.store.exists("stg_patient_person_bad_dates")
     assert not [d for d in os.listdir(engine.store.root) if d.startswith(".stg_")]
+
+
+def test_run_killed_before_its_audit_append_reruns_like_a_clean_run(
+    spark, uploads, tmp_path, monkeypatch
+):
+    """Crash window between a run's staging write and its ingestion-log
+    append: the selected files stay logged 'loading', so the rerun
+    re-lands them as retries. Staging, quarantine and each file's latest
+    status then equal a clean run's, with no duplicated rows."""
+    write_json(uploads, "FAC001", "patient_person_0_20250103141949.json",
+               [patient(0), patient(1), patient(2, dob="bad")])
+    write_json(uploads, "FAC002", "patient_person_1_20250103141950.json", [patient(20)])
+    pairs = [("patient_person_0_20250103141949.json", "FAC001"),
+             ("patient_person_1_20250103141950.json", "FAC002")]
+    clean = IngestionEngine(spark, str(tmp_path / "clean"))
+    clean.run(uploads)
+
+    engine = IngestionEngine(spark, str(tmp_path / "wh"))
+    append_rows = engine.store.append_rows
+
+    def killed_before_audit(name, rows, ddl):
+        if name == INGESTION_LOG and rows and isinstance(rows[0], dict):  # audit rows
+            raise RuntimeError("killed before the audit append")
+        return append_rows(name, rows, ddl)
+
+    monkeypatch.setattr(engine.store, "append_rows", killed_before_audit)
+    with pytest.raises(RuntimeError, match="killed"):
+        engine.run(uploads)
+    monkeypatch.undo()
+    assert engine.store.read("stg_patient_person").count() == 3  # landed, unaudited
+
+    rep = engine.run(uploads)
+    assert (rep.files_ingested, rep.files_failed) == (1, 1)
+    for name in ("stg_patient_person", "stg_patient_person_bad_dates"):
+        assert _landed(engine.store, name) == _landed(clean.store, name)
+
+    def latest(store):
+        return {p: status for p, (status, _) in file_status(store, pairs).items()}
+
+    assert latest(engine.store) == latest(clean.store) == {
+        pairs[0]: "failed", pairs[1]: "success"
+    }
 
 
 def test_numeric_facility_round_trips_and_retries_alone(engine, uploads):

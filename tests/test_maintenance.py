@@ -7,11 +7,13 @@ import csv
 import glob
 import json
 import os
+from datetime import datetime
 
 from pyspark.sql import functions as F
 
 from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
     INGESTION_LOG,
+    INGESTION_LOG_DDL,
     IngestionEngine,
 )
 from data_ingestion_from_multiple_directories_linux_spark.operators.maintenance import (
@@ -92,6 +94,29 @@ def test_retention_deletes_processed_files_once(spark, tmp_path):
     rep2 = delete_processed_files(spark, eng.store, log, uploads)
     assert rep2.files_deleted == 0 and rep2.files_missing == 0
     assert eng.store.read(FILE_DELETION_LOG).count() == 2
+
+
+def test_retention_reads_each_files_latest_attempt(spark, tmp_path):
+    """Terminal means the LATEST attempt ended success/failed: a file
+    re-uploaded after its success, whose retry is still loading, keeps
+    its source file; a file whose failure was followed by a success is
+    deleted once."""
+    up = tmp_path / "up"
+    (up / "FAC001").mkdir(parents=True)
+    for fn in ("a.json", "b.json"):
+        (up / "FAC001" / fn).write_text("[]")
+    t0, t1 = datetime(2025, 1, 1), datetime(2025, 1, 2)
+    log = spark.createDataFrame(
+        [(fn, "FAC001", "stg_x", "0", status, 0, 0, None, t, t)
+         for fn, status, t in (("a.json", "success", t0), ("a.json", "loading", t1),
+                               ("b.json", "failed", t0), ("b.json", "success", t1))],
+        INGESTION_LOG_DDL,
+    )
+    store = TableStore(spark, str(tmp_path / "wh"))
+    rep = delete_processed_files(spark, store, log, str(up))
+    assert (rep.files_deleted, rep.files_missing) == (1, 0)
+    assert os.listdir(up / "FAC001") == ["a.json"]
+    assert store.read(FILE_DELETION_LOG).count() == 1
 
 
 def test_retention_logs_missing_files(spark, tmp_path):

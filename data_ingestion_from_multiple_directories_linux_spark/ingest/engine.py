@@ -112,7 +112,6 @@ STAGING_PARTITION = ("stg_datim_id",)
 #: one work item: (file_name, facility_id), keyed exactly as
 #: file_loader.py:328-336
 Pair = tuple[str, str]
-PAIR_DDL = "file_name string, facility_id string"
 #: a work item's key columns in staging
 STAGING_KEY = ("stg_file_name", "stg_datim_id")
 STAGING_KEY_DDL = "stg_file_name string, stg_datim_id string"
@@ -154,21 +153,23 @@ def file_status(
     attempt (:func:`latest_attempts`), among ``table_name``'s log rows
     when given. A pair with no log row is absent.
 
-    ONE collect: a local frame of the pairs joins the latest attempts of
-    the log, read with its declared DDL, and the start time is cast to
-    epoch seconds inside Spark (no Python timezone round-trip). It
+    ONE collect: the log, read with its declared DDL, is filtered to the
+    pairs (:func:`pair_in`, a hash probe, so no join and no shuffle of
+    the pairs) before the latest-attempt window, and the start time is
+    cast to epoch seconds inside Spark (no Python timezone round-trip).
+    The window's shuffle and the collect are the only two jobs. It
     returns one small row per pair that has a log row — file metadata,
     never row data. No job runs when the log is missing or there are no
     pairs."""
     if not pairs or not store.exists(INGESTION_LOG):
         return {}
-    log = store.read(INGESTION_LOG, INGESTION_LOG_DDL)
+    log = store.read(INGESTION_LOG, INGESTION_LOG_DDL).filter(
+        pair_in(("file_name", "facility_id"), set(pairs))
+    )
     if table_name is not None:
         log = log.filter(F.col("table_name") == table_name)
-    keys = local_df(store.spark, sorted(set(pairs)), PAIR_DDL)
     rows = (
         latest_attempts(log)
-        .join(keys, ["file_name", "facility_id"])
         .select("file_name", "facility_id", "status",
                 F.col("load_start_time").cast("double"))
         .collect()

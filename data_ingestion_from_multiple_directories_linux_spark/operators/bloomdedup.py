@@ -119,9 +119,8 @@ def bloom_bits(urls: DataFrame) -> DataFrame:
 
 def ingest_bloom_bits(store, urls: DataFrame) -> None:
     """Append one batch's bits to the persisted filter (a
-    :class:`~...sources.table_store.TableStore` table). Idempotence
-    across crash-replays rides the same commit-marker pattern as the
-    ingestion sink; a duplicate append is HARMLESS for probing (union
+    :class:`~...sources.table_store.TableStore` table). A crash-replay
+    needs no guard: a duplicate append is HARMLESS for probing (union
     of identical bits) — the filter can only over-approximate, never
     lose a key."""
     store.append(BLOOM_BITS_TABLE, bloom_bits(urls))

@@ -342,11 +342,13 @@ def incremental_dedup_batch(
     sets to the index — so every later batch dedups against all history
     without ever re-shingling it.
 
-    ``store`` is a :class:`~...sources.table_store.TableStore`. Exactly-
-    once across crash-replays needs the commit-marker pattern the
-    ingestion sink uses (streaming.stream_ingest._mark_committed) around
-    this body; the availableNow file source already assigns each file to
-    exactly one batch."""
+    ``store`` is a :class:`~...sources.table_store.TableStore`. This body
+    appends, so a crash-replayed batch would add its pairs and index rows
+    twice; exactly-once needs its writes keyed by batch and purged on
+    replay, as :class:`~...streaming.segments.SegmentTable` does (each
+    batch's rows keyed by (checkpoint, batch_id), purged then rewritten).
+    The availableNow file source already assigns each file to exactly
+    one batch."""
     new_bands, new_sh = minhash_band_index(batch_docs, n)
     new_bands = new_bands.persist()
     new_sh = new_sh.persist()

@@ -8,7 +8,7 @@ a write-temp-swap so readers never observe a half-written table (SURVEY.md
 
 Append-only tables use plain parquet appends: a Spark write job for
 distributed frames (staging), and :meth:`TableStore.append_rows` for the
-few rows the driver already holds (audit rows, commit markers) — one
+few rows the driver already holds (audit and in-flight rows) — one
 parquet file renamed in, no Spark job. At cluster scale the same
 interface maps 1:1 onto a table format with real transactions (Delta /
 Iceberg MERGE); the swap trick is the dependency-free fallback.

@@ -3,16 +3,15 @@
 
 A change-data-capture feed lands as files of change rows
 ``(op ∈ {upsert, delete}, key..., values...)``; this class folds each
-micro-batch into the target table with MERGE semantics and makes the
-fold IDEMPOTENT under foreachBatch's at-least-once contract: a batch
-that replays (crash after apply, before checkpoint commit) is detected
-by a (checkpoint-scope, batch_id) marker — scoped by the segment
-tables' stream-identity rule (streaming/segments.py) — and skipped
-instead of applied twice. Apply + marker cannot be one atomic
-write on a filesystem, so the order is apply-then-mark: a crash between
-the two replays the batch, and the replay re-applies the same changes —
-MERGE of the same change set is convergent (same final rows), so
-at-least-once collapses to effectively-once for the table state.
+micro-batch into the target table with MERGE semantics. The stream's
+checkpoint is its only commit record: Spark writes ``commits/<id>`` only
+after ``foreachBatch`` returns, so a crash after the apply and before
+that commit re-runs the one uncommitted batch, and the replay re-applies
+the same changes. MERGE of the same change set is convergent (same final
+rows), so at-least-once collapses to effectively-once for the table
+state without a marker table. A cleared checkpoint re-offers every file
+and re-applies it; with ``seq`` increasing across files, that converges
+to the same rows as well.
 
 Last-writer-wins within a batch: if one batch carries several changes
 for one key, the one with the highest ``seq`` applies (deterministic,
@@ -29,14 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.maintenance import compact_table
 from ..operators.warehouse import merge_upsert, src_col
 from ..sources.table_store import TableStore
-from .segments import checkpoint_scope, drain, json_stream, scoped
-
-#: marker table: one row per applied (scope, batch)
-CDC_COMMITS = "cdc_commits"
-CDC_COMMITS_DDL = "checkpoint string, batch_id bigint"
+from .segments import drain, json_stream
 
 
 class StreamingCdcApply:
@@ -62,43 +56,8 @@ class StreamingCdcApply:
         self.schema = schema
         self.target = target
         self.keys = keys
-        #: applied batch ids for this stream identity, loaded once per
-        #: run — per-batch checks are O(1) in-memory instead of a
-        #: marker-table scan per micro-batch (linear in stream lifetime)
-        self._applied: set[int] | None = None
-
-    #: compact the marker table once it fragments past this many files
-    COMMITS_COMPACT_FILES = 64
-
-    def _load_applied(self) -> set[int]:
-        if not self.store.exists(CDC_COMMITS):
-            return set()
-        return {
-            int(r["batch_id"])
-            for r in self.store.read(CDC_COMMITS, CDC_COMMITS_DDL)
-            .filter(scoped(self.checkpoint_dir))
-            .select("batch_id")
-            .collect()
-        }
-
-    def _is_applied(self, batch_id: int) -> bool:
-        if self._applied is None:
-            self._applied = self._load_applied()
-        return int(batch_id) in self._applied
-
-    def _mark_applied(self, batch_id: int) -> None:
-        self.store.append_rows(
-            CDC_COMMITS,
-            [(checkpoint_scope(self.checkpoint_dir), int(batch_id))],
-            CDC_COMMITS_DDL,
-        )
-        if self._applied is None:
-            self._applied = self._load_applied()
-        self._applied.add(int(batch_id))
 
     def _apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self._is_applied(batch_id):
-            return  # replay after crash-after-apply: skip
         # last-writer-wins per key within the batch (highest seq)
         w = Window.partitionBy(*self.keys).orderBy(F.desc("seq"))
         latest = (
@@ -121,15 +80,10 @@ class StreamingCdcApply:
                 delete_condition=src_col("op") == "delete",
                 carry_cols=["op"],  # drives deletion, never lands in the table
             )
-        self._mark_applied(batch_id)
 
     def run_available_now(self) -> None:
-        self._applied = None  # fresh view of the marker table per run
         drain(
             json_stream(self.spark, self.schema, self.source_dir),
             self._apply_batch,
             self.checkpoint_dir,
-        )
-        compact_table(
-            self.store, CDC_COMMITS, min_files=self.COMMITS_COMPACT_FILES + 1
         )

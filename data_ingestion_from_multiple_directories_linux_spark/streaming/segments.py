@@ -17,7 +17,11 @@ rules make the replay harmless:
 * **Replay = purge-then-write.** Writing batch ``b`` rewrites the table
   as every row except this scope's ``b`` segment, plus the new segment
   (one read with the declared ``ddl``, so no footer-inference job, and
-  one atomic overwrite). A replay replaces, never adds.
+  one atomic overwrite). A replay replaces, never adds. Batch 0 starts
+  the scope over: a fresh or cleared checkpoint re-offers every file
+  from batch 0, so writing batch 0 purges every row of this scope,
+  its compacted ``batch_id = -1`` fold included, and the rebuild
+  replaces the old state instead of counting it twice.
 * **Merge.** The served state is the fold of all segments of all
   scopes. Counting summaries (tf partials, count-min cells, drift
   cells) are mergeable: value columns SUM per key. Per-key facts (IVF
@@ -91,11 +95,14 @@ class SegmentTable:
         )
 
     def without(self, batch_id: int) -> DataFrame | None:
-        """Every row except this scope's ``batch_id`` segment; None
-        before the first write."""
+        """Every row except this scope's ``batch_id`` segment (every
+        row of this scope for batch 0, which starts the scope over);
+        None before the first write."""
         if not self.store.exists(self.name):
             return None
-        own = self.owned & (F.col("batch_id") == int(batch_id))
+        own = self.owned
+        if batch_id:
+            own &= F.col("batch_id") == int(batch_id)
         return self.store.read(self.name, self.ddl).filter(~own)
 
     def write(self, segment: DataFrame, kept: DataFrame | None) -> None:

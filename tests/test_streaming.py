@@ -267,9 +267,10 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
 
 
 def test_foreachbatch_replay_is_idempotent(spark, tmp_path, uploads):
-    """foreachBatch is at-least-once; the _stream_commits marker makes the
-    sink effectively-exactly-once. A replayed committed batch is a no-op;
-    an uncommitted (crashed-mid-append) batch is repaired by purge."""
+    """foreachBatch is at-least-once; the sink is exact under replay on
+    its own: landing a batch purges its files' staging, quarantine and
+    audit rows first, so a replay (of a landed or of a crashed-mid-append
+    batch) replaces them instead of adding."""
     write_json(uploads, "FAC001", "patient_person_0_20250103141949.json",
                [patient(i) for i in range(3)])
     s = _stream(spark, tmp_path, uploads)
@@ -277,7 +278,7 @@ def test_foreachbatch_replay_is_idempotent(spark, tmp_path, uploads):
     assert s.store.read("stg_patient_person").count() == 3
     assert s.store.read(INGESTION_LOG).count() == 1
 
-    # replay the same batch content with its committed batch_id → skip
+    # replay the same batch content with its batch_id → replaced
     batch = (
         spark.read.format("json").schema(s.schema)
         .option("multiLine", "true").load(uploads + "/*/*.json")
@@ -288,15 +289,10 @@ def test_foreachbatch_replay_is_idempotent(spark, tmp_path, uploads):
     assert s.store.read("stg_patient_person").count() == 3
     assert s.store.read(INGESTION_LOG).count() == 1
 
-    # crash-replay: marker missing but partial rows present → purged, redone
-    s.store.read(s.COMMITS)  # marker table exists
-    import shutil
-
-    shutil.rmtree(s.store.path(s.COMMITS))
+    # crash-replay: partial rows present → purged, redone
     s._process_batch(batch, 0)
     assert s.store.read("stg_patient_person").count() == 3  # not 6
     assert s.store.read(INGESTION_LOG).count() == 1
-    assert s._is_committed(0)
 
 
 def test_late_events_dropped_within_watermark_retained(spark, tmp_path):
@@ -418,11 +414,13 @@ def test_streaming_exact_dedup_within_watermark(spark, tmp_path):
 
 
 def test_new_checkpoint_identity_not_skipped_by_old_markers(spark, tmp_path, uploads):
-    """Commit markers are scoped by stream identity (checkpoint path):
-    after a checkpoint reset, batch ids restart at 0 — an unscoped
-    marker from the old identity must NOT cause the new batch 0 to be
-    skipped as a replay (that's silent data loss), and the purge path
-    keeps the re-offered files exactly-once."""
+    """After a checkpoint reset, batch ids restart at 0 and the source
+    re-offers every file — whether the new checkpoint is a new path or
+    the old path cleared and reused. The new batch 0 must land (skipping
+    it as a replay is silent data loss), and the purge path keeps the
+    re-offered files exactly-once."""
+    import shutil
+
     write_json(uploads, "FAC001", "patient_person_0_20250103141949.json",
                [patient(0), patient(1)])
     wh = str(tmp_path / "wh")
@@ -442,6 +440,29 @@ def test_new_checkpoint_identity_not_skipped_by_old_markers(spark, tmp_path, upl
     assert stg.count() == 3  # old file deduped by purge, new file ingested
     assert stg.filter(F.col("stg_file_name")
                       == "patient_person_1_20250103142050.json").count() == 1
+
+    # the SAME checkpoint path cleared and reused, plus a new file
+    shutil.rmtree(str(tmp_path / "cp2"))
+    write_json(uploads, "FAC002", "patient_person_2_20250103143000.json",
+               [patient(7), patient(8)])
+    s3 = StreamingIngestion(spark, wh, uploads, "patient_person",
+                            checkpoint_dir=str(tmp_path / "cp2"))
+    s3.run_available_now()
+    got = sorted(
+        (r["stg_file_name"], r["id"])
+        for r in s3.store.read("stg_patient_person").collect()
+    )
+    assert got == [("patient_person_0_20250103141949.json", 0),
+                   ("patient_person_0_20250103141949.json", 1),
+                   ("patient_person_1_20250103142050.json", 5),
+                   ("patient_person_2_20250103143000.json", 7),
+                   ("patient_person_2_20250103143000.json", 8)]
+    log = s3.store.read(INGESTION_LOG).collect()
+    assert sorted((r["file_name"], r["status"]) for r in log) == [
+        ("patient_person_0_20250103141949.json", "success"),
+        ("patient_person_1_20250103142050.json", "success"),
+        ("patient_person_2_20250103143000.json", "success"),
+    ]
 
 
 def test_zero_row_file_gets_empty_audit_row(spark, tmp_path, uploads):
@@ -542,11 +563,10 @@ def test_batch_and_stream_land_identical_rows(spark, tmp_path, uploads):
 
 
 def test_replayed_micro_batch_rewrites_only_its_partitions(spark, tmp_path, uploads):
-    """A micro-batch replayed after a crash (no commit marker) re-lands
-    its files by rewriting only the facility partitions they hit; the
-    other facility's partition keeps its parquet files."""
+    """A micro-batch replayed after a crash (before Spark's commit)
+    re-lands its files by rewriting only the facility partitions they
+    hit; the other facility's partition keeps its parquet files."""
     import os
-    import shutil
 
     fn = "patient_person_0_20250103141949.json"
     write_json(uploads, "FAC001", fn, [patient(i) for i in range(3)])
@@ -565,8 +585,6 @@ def test_replayed_micro_batch_rewrites_only_its_partitions(spark, tmp_path, uplo
         .withColumn("_src_file", F.lit(fn))
         .withColumn("_src_facility", F.lit("FAC001"))
     )
-    shutil.rmtree(s.store.path(s.COMMITS))
-    s._committed = None  # a restarted process sees no marker
     s._process_batch(batch, 0)
     assert files("FAC002") == before["FAC002"]
     assert files("FAC001") != before["FAC001"]
@@ -577,59 +595,6 @@ def test_replayed_micro_batch_rewrites_only_its_partitions(spark, tmp_path, uplo
     assert got == [("FAC001", 0), ("FAC001", 1), ("FAC001", 2),
                    ("FAC002", 10), ("FAC002", 11)]
     assert s.store.read(INGESTION_LOG).count() == 2
-
-
-def test_commit_marker_table_stays_compact(spark, tmp_path, uploads):
-    """The marker table appends one tiny file per micro-batch; once it
-    fragments past COMMITS_COMPACT_FILES it is rewritten, so startup
-    scans stay O(compacted) instead of O(stream lifetime)."""
-    import os as _os
-
-    s = _stream(spark, tmp_path, uploads)
-    s.COMMITS_COMPACT_FILES = 2
-    for i in range(4):
-        write_json(uploads, "FAC001",
-                   f"patient_person_{i}_2025010314194{i}.json", [patient(i)])
-        s.run_available_now()
-    commits_dir = s.store.path(s.COMMITS)
-    n_files = sum(1 for f in _os.listdir(commits_dir) if f.endswith(".parquet"))
-    assert n_files <= 2
-    # compaction must not forget history: rerun is still a no-op
-    s.run_available_now()
-    assert s.store.read("stg_patient_person").count() == 4
-
-
-def test_legacy_marker_table_migrates_to_scoped_schema(spark, tmp_path, uploads):
-    """A marker table written before checkpoint scoping (no 'checkpoint'
-    column) is migrated in place on the next commit. Its NULL-scope rows
-    are preserved as history but NOT honored as committed: a NULL scope
-    cannot prove which checkpoint committed the batch, and counting it
-    would silently skip a fresh checkpoint's restarted batch ids (the
-    review-found data-loss path) — the purge-before-append repair makes
-    the one possible post-upgrade replay idempotent instead."""
-    from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
-        local_df,
-    )
-
-    s = _stream(spark, tmp_path, uploads)
-    legacy = local_df(
-        spark, [("stg_patient_person", 99)], "table_name string, batch_id long"
-    ).withColumn("committed_at", F.current_timestamp())
-    s.store.append(s.COMMITS, legacy)
-
-    write_json(uploads, "FAC001", "patient_person_0_20250103141949.json",
-               [patient(0)])
-    s.run_available_now()
-    commits = s.store.read(s.COMMITS)
-    assert "checkpoint" in commits.columns
-    rows = {r["batch_id"]: r["checkpoint"] for r in commits.collect()}
-    assert rows[99] is None  # legacy row preserved, null scope
-    assert any(v is not None for v in rows.values())  # new row scoped
-    committed = s._load_committed()
-    assert 99 not in committed  # NULL scope is history, not a skip
-    assert committed  # this run's own scoped batch IS recognized
-    # and the data really landed despite the legacy batch-99 row
-    assert s.store.read("stg_patient_person").count() == 1
 
 
 def test_streaming_incremental_minhash_dedup(spark, tmp_path):
@@ -814,6 +779,14 @@ def test_streaming_count_min_matches_one_shot(spark, tmp_path):
     # batch AFTER compaction still replaces its own segment (it was not
     # folded away), so cells stay exactly the one-shot values
     cm._merge_batch(replay, b2_id)
+    assert cells_dict(cm.cells()) == oneshot
+
+    # a cleared checkpoint re-offers both files as batch 0, which starts
+    # the scope over: the -1 fold and the old segments are replaced
+    import shutil
+
+    shutil.rmtree(str(tmp_path / "ckpt"))
+    cm.run_available_now()
     assert cells_dict(cm.cells()) == oneshot
 
 
@@ -1082,12 +1055,28 @@ def test_streaming_cdc_apply_merges_batches_idempotently(spark, tmp_path):
     apply1.run_available_now()
     expect_final()
     # direct replay of an already-applied batch id (foreachBatch
-    # at-least-once): marker short-circuits it
+    # at-least-once): the MERGE re-applies and converges
     batch = (
         spark.read.format("json").schema(schema).load(str(feed / "c1.json"))
     )
     apply1._apply_batch(batch, 0)
     expect_final()
+
+    # the same checkpoint cleared and reused, plus a new change file: the
+    # source re-offers both files as batch 0, and the new changes apply
+    import shutil
+
+    shutil.rmtree(str(tmp_path / "ck1"))
+    _write_ndjson(
+        str(feed / "c2.json"),
+        [
+            {"op": "upsert", "seq": 20, "id": 4, "name": "d", "bal": 40},
+            {"op": "upsert", "seq": 21, "id": 3, "name": "C", "bal": 31},
+        ],
+    )
+    apply1.run_available_now()
+    got = {(r["id"], r["name"], r["bal"]) for r in store.read("dim_acct").collect()}
+    assert got == {(2, "B", 22), (3, "C", 31), (4, "d", 40)}, got
 
 
 def test_cdc_bootstrap_creates_missing_target(spark, tmp_path):

@@ -176,12 +176,20 @@ def load_table(
     globally it doubled every cheap scan→agg query (A/B matrix in
     OPTIMIZATION_r12.md) while only compute-dense queries won it back.
 
-    ``events.ts`` is stored as parquet TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects; ``get_spark`` sets
-    ``spark.sql.legacy.parquet.nanosAsLong`` session-wide, so it arrives as
-    long nanos and is truncated here to microsecond timestamps (identical
-    to DuckDB's ns→µs conversion, so the oracle sees the same values).
-    Integer ``div`` — double math would lose precision at ~1.7e18 ns.
+    ``events.ts`` arrives in one of two types, and each has a branch:
+
+    * ``timestamp_ntz``: the bundled test corpora (every SF dir) and
+      perfbench's generator store parquet TIMESTAMP(MICROS,
+      isAdjustedToUTC=false), written by pyarrow, which Spark reads as
+      ``timestamp_ntz``. The branch rebuilds the instant DuckDB sees
+      (naive ≙ UTC) without going through the session timezone.
+    * ``bigint``: a corpus stored as TIMESTAMP(NANOS) arrives as long
+      nanos under ``spark.sql.legacy.parquet.nanosAsLong`` (``get_spark``
+      sets it at build time; the guard below sets it in a foreign
+      session). Without the flag Spark cannot read such a file at all
+      (``PARQUET_TYPE_ILLEGAL``). The branch truncates to microsecond
+      timestamps (identical to DuckDB's ns→µs conversion); integer
+      ``div``, as double math would lose precision at ~1.7e18 ns.
     """
     if name not in TABLES:
         raise KeyError(f"unknown test table {name!r}; known: {TABLES}")
@@ -197,11 +205,10 @@ def load_table(
                 "ts", F.timestamp_micros(F.expr("ts div 1000"))
             )
         elif ts_type == "timestamp_ntz":
-            # Spark 4.1 ignores a RUNTIME nanosAsLong set (builder-time
-            # works) and reads TIMESTAMP(NANOS) as µs-truncated NTZ.
-            # Rebuild the same LTZ instant DuckDB sees (naive ≙ UTC)
-            # without going through the session timezone: µs since the
-            # NTZ epoch → timestamp_micros. A plain cast(ntz AS
+            # TIMESTAMP(MICROS, isAdjustedToUTC=false): the bundled
+            # corpora. Rebuild the same LTZ instant DuckDB sees (naive ≙
+            # UTC) without going through the session timezone: µs since
+            # the NTZ epoch → timestamp_micros. A plain cast(ntz AS
             # timestamp) would shift by the session tz offset.
             df = df.withColumn(
                 "ts",

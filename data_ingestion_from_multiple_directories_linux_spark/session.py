@@ -74,9 +74,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # events.ts is parquet TIMESTAMP(NANOS), which the vectorized reader
-        # rejects; read as long nanos session-wide (catalog.load_table
-        # truncates to microsecond timestamps).
+        # A parquet TIMESTAMP(NANOS) column is unreadable without this
+        # (PARQUET_TYPE_ILLEGAL); with it the column reads as long nanos,
+        # which catalog.load_table truncates to microsecond timestamps.
+        # The bundled corpora store events.ts as TIMESTAMP(MICROS,
+        # isAdjustedToUTC=false), read as timestamp_ntz either way.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():

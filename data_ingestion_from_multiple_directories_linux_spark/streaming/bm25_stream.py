@@ -30,6 +30,9 @@ bounded by query terms — never a corpus rescan).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -49,6 +52,14 @@ BM25_TF_DDL = (
 #: per-batch document-count cells (token-less docs included).
 BM25_DOC_PARTIALS = "bm25_doc_partials"
 BM25_DOC_DDL = "checkpoint string, batch_id bigint, n_docs bigint"
+
+
+def _side_by_side(*calls: Callable[[], None]) -> None:
+    """Run each call on its own thread; return (or raise the first
+    error) once every call has finished."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        for f in [pool.submit(c) for c in calls]:
+            f.result()
 
 
 class StreamingBM25Index:
@@ -79,12 +90,13 @@ class StreamingBM25Index:
         )
 
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Replace this batch's index segment + doc cell (idempotent)."""
-        self.tf_segments.replace(
-            batch_id, build_tf_index(batch_df.select("doc_id", "text"))
-        )
-        self.doc_segments.replace(
-            batch_id, batch_df.select(F.count("*").cast("long").alias("n_docs"))
+        """Replace this batch's index segment + doc cell (idempotent),
+        the two tables side by side."""
+        tf = build_tf_index(batch_df.select("doc_id", "text"))
+        docs = batch_df.select(F.count("*").cast("long").alias("n_docs"))
+        _side_by_side(
+            lambda: self.tf_segments.replace(batch_id, tf),
+            lambda: self.doc_segments.replace(batch_id, docs),
         )
 
     def run_available_now(self) -> None:
@@ -98,8 +110,7 @@ class StreamingBM25Index:
         """Fold settled index segments and doc cells (the SegmentTable
         compaction); :meth:`tf`, :meth:`n_docs` and serving are
         bit-identical before and after."""
-        self.tf_segments.compact()
-        self.doc_segments.compact()
+        _side_by_side(self.tf_segments.compact, self.doc_segments.compact)
 
     def tf(self) -> DataFrame:
         """Merged (doc_id, term, tf) index over everything ingested."""

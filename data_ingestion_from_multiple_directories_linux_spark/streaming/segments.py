@@ -29,11 +29,16 @@ rules make the replay harmless:
 * **Compaction.** ``compact()`` folds this scope's settled segments
   into one ``batch_id = -1`` segment by the same merge, so the served
   state is unchanged. Other scopes' rows are untouched: their replays
-  must still find their own segments. This scope's highest
-  ``batch_id`` stays unfolded: it is the only batch that can still
-  replay, and its replay repairs by purging its own segment, which a
-  fold would have made a no-op (a double count). One ``max(batch_id)``
-  job and one overwrite per compaction (the read is declared too).
+  must still find their own segments. The only batch that can still
+  replay is the newest entry of the stream's own offsets log
+  (``<checkpoint>/offsets/<id>``, written before the batch runs), so
+  segments at or above that id stay unfolded: a replay repairs by
+  purging its own segment, which a fold would have made a no-op (a
+  double count). The bound comes from a directory listing, so it costs
+  no job. Without an offsets log the stream has run no batch since its
+  checkpoint was made, and ``compact()`` is a no-op (rows of a cleared
+  checkpoint are purged by its next batch 0). The fold and one
+  overwrite are the only jobs (the read is declared too).
 """
 
 from __future__ import annotations
@@ -129,16 +134,17 @@ class SegmentTable:
         return self._fold(self.store.read_or_empty(self.name, self.ddl))
 
     def compact(self) -> None:
-        """Fold this scope's settled segments into ``batch_id = -1``,
-        keeping its highest segment and other scopes' rows as they are."""
-        if not self.store.exists(self.name):
+        """Fold this scope's segments below its replay bound
+        (:func:`_replay_bound`) into ``batch_id = -1``, keeping the rest
+        of its segments and other scopes' rows as they are. A no-op
+        when the stream has no offsets log (no job runs)."""
+        bound = _replay_bound(self.scope)
+        if bound is None or not self.store.exists(self.name):
             return
         cur = self.store.read(self.name, self.ddl)
         mine = cur.filter(self.owned)
-        last = mine.agg(F.max("batch_id")).first()[0]
-        if last is None:
-            return
-        folded = self._fold(mine.filter(F.col("batch_id") != last))
+        settled = F.col("batch_id") < bound
+        folded = self._fold(mine.filter(settled))
         if self.sums:
             # groupBy() with no keys yields one NULL row over zero rows
             folded = folded.filter(F.col(self.sums[0]).isNotNull())
@@ -146,8 +152,20 @@ class SegmentTable:
             self.name,
             cur.filter(~self.owned)
             .unionByName(self.stamp(folded, -1))
-            .unionByName(mine.filter(F.col("batch_id") == last)),
+            .unionByName(mine.filter(~settled)),
         )
+
+
+def _replay_bound(checkpoint_dir: str) -> int | None:
+    """The newest batch id in the stream's offsets log
+    (``<checkpoint_dir>/offsets/<id>``): the only batch that can still
+    replay. Numeric names only, so ``.crc`` and temp files are skipped;
+    None when there is no log."""
+    try:
+        names = os.listdir(os.path.join(checkpoint_dir, "offsets"))
+    except FileNotFoundError:
+        return None
+    return max((int(n) for n in names if n.isdecimal()), default=None)
 
 
 def json_stream(spark: SparkSession, schema: str, source_dir: str) -> DataFrame:

@@ -18,6 +18,28 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 
 
+def local_df(spark, rows: list[tuple], ddl: str):
+    """Single-partition DataFrame from driver-local rows, for a local
+    frame that joins Spark data (rows that only need storing go through
+    ``TableStore.append_rows``, which runs no job).
+
+    ``createDataFrame(rows)`` slices into defaultParallelism partitions,
+    and ``coalesce(1)`` on such a local relation measures ~10× slower
+    than building the single partition up front (it funnels every python
+    slice through one task).
+    """
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), ddl)
+
+
+def log_offsets(checkpoint_dir: str, batch_id: int) -> None:
+    """Write the offsets-log entry a streaming query writes before it
+    runs micro-batch ``batch_id``: the entry segment compaction reads
+    its replay bound from."""
+    offsets = os.path.join(checkpoint_dir, "offsets")
+    os.makedirs(offsets, exist_ok=True)
+    open(os.path.join(offsets, str(batch_id)), "w").close()
+
+
 @pytest.fixture(scope="session")
 def spark():
     import tempfile

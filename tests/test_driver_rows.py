@@ -14,7 +14,6 @@ from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
     PIPELINE_LOG_DDL,
     STG_MONITORING_DDL,
     IngestionEngine,
-    local_df,
 )
 from data_ingestion_from_multiple_directories_linux_spark.operators.maintenance import (
     compact_table,
@@ -28,6 +27,7 @@ from data_ingestion_from_multiple_directories_linux_spark.sources.table_store im
 from data_ingestion_from_multiple_directories_linux_spark.streaming.segments import (
     SegmentTable,
 )
+from tests.conftest import local_df, log_offsets
 from tests.test_ingest_engine import patient, write_json
 
 SEG_DDL = "checkpoint string, batch_id bigint, k string, n bigint"
@@ -81,6 +81,7 @@ def test_driver_rows_and_state_reads_submit_no_job(spark, tmp_path, monkeypatch)
     seg = SegmentTable(store, "seg", str(tmp_path / "ck"), keys=("k",), sums=("n",),
                        ddl=SEG_DDL)
     for b in range(3):
+        log_offsets(str(tmp_path / "ck"), b)
         seg.replace(b, local_df(spark, [("a", b + 1)], "k string, n bigint"))
     # every read the segment law makes, inside its real callers
     read_jobs = []

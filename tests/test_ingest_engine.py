@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +25,8 @@ from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
     STG_MONITORING,
     IngestionEngine,
     file_status,
+    land_files,
+    pair_in,
 )
 from data_ingestion_from_multiple_directories_linux_spark.sources.table_store import TableStore
 
@@ -251,6 +254,80 @@ def test_run_killed_before_its_audit_append_reruns_like_a_clean_run(
     assert latest(engine.store) == latest(clean.store) == {
         pairs[0]: "failed", pairs[1]: "success"
     }
+
+
+def test_quarantine_write_error_waits_for_staging_and_requeue_reruns_clean(
+    spark, uploads, tmp_path, monkeypatch
+):
+    """Staging and quarantine land side by side: a quarantine write that
+    raises surfaces from land_files only after the staging write has
+    finished, every file of the table is logged failed, and
+    requeue_failed plus a rerun equals a clean run."""
+    write_json(uploads, "FAC001", "patient_person_0_20250103141949.json",
+               [patient(0), patient(1), patient(2, dob="bad")])
+    write_json(uploads, "FAC002", "patient_person_1_20250103141950.json", [patient(20)])
+    pairs = [("patient_person_0_20250103141949.json", "FAC001"),
+             ("patient_person_1_20250103141950.json", "FAC002")]
+    clean = IngestionEngine(spark, str(tmp_path / "clean"))
+    clean.run(uploads)
+
+    engine = IngestionEngine(spark, str(tmp_path / "wh"))
+    append = engine.store.append
+    staged = threading.Event()
+
+    def quarantine_fails(name, df, *args, **kw):
+        if name.endswith("_bad_dates"):
+            raise OSError("quarantine volume full")
+        append(name, df, *args, **kw)
+        staged.set()
+
+    staged_when_raised = []
+
+    def watched(*args, **kw):
+        try:
+            return land_files(*args, **kw)
+        except OSError:
+            staged_when_raised.append(staged.is_set())
+            raise
+
+    monkeypatch.setattr(engine.store, "append", quarantine_fails)
+    monkeypatch.setattr(
+        "data_ingestion_from_multiple_directories_linux_spark.ingest.engine.land_files",
+        watched,
+    )
+    rep = engine.run(uploads)
+    monkeypatch.undo()
+    assert staged_when_raised == [True]
+    assert rep.files_failed == 2
+    assert all("quarantine volume full" in e for e in rep.errors.values())
+
+    assert engine.requeue_failed() == 2
+    rep = engine.run(uploads)
+    assert (rep.files_ingested, rep.files_failed) == (1, 1)
+    for name in ("stg_patient_person", "stg_patient_person_bad_dates"):
+        assert _landed(engine.store, name) == _landed(clean.store, name)
+
+    def latest(store):
+        return {p: status for p, (status, _) in file_status(store, pairs).items()}
+
+    assert latest(engine.store) == latest(clean.store)
+
+
+#: names a quoting, escaping or splitting bug would mangle
+HOSTILE_NAMES = ["it's.json", "a,b.json", "back\\slash.json", "new\nline.json",
+                 "50%_off.json", "a+b.json", "données_日本.json", "[x].*"]
+
+
+def test_pair_in_matches_hostile_names_exactly_as_an_inset(spark, tmp_path):
+    pairs = {(fn, fac) for fn in HOSTILE_NAMES for fac in ("FAC'1", "F%3A:9")}
+    # near misses: prefixes of the hostile names, and a third facility
+    rows = [(fn, fac) for fn in HOSTILE_NAMES + ["it", "a", "new", "back"]
+            for fac in ("FAC'1", "F%3A:9", "FAC")]
+    path = str(tmp_path / "keys")
+    spark.createDataFrame(rows, "file_name string, facility_id string").write.parquet(path)
+    hit = spark.read.parquet(path).filter(pair_in(("file_name", "facility_id"), pairs))
+    assert sorted(tuple(r) for r in hit.collect()) == sorted(pairs)
+    assert "INSET" in hit._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_numeric_facility_round_trips_and_retries_alone(engine, uploads):

@@ -8,15 +8,13 @@ from __future__ import annotations
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 
-from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
-    local_df,
-)
 from data_ingestion_from_multiple_directories_linux_spark.sources.table_store import (
     TableStore,
 )
 from data_ingestion_from_multiple_directories_linux_spark.streaming.segments import (
     SegmentTable,
 )
+from tests.conftest import local_df, log_offsets
 
 DDL = "checkpoint string, batch_id bigint, k string, n bigint"
 # "shared" is in every batch, so the SUM fold really merges segments
@@ -49,6 +47,7 @@ def _run(spark, root: str, kind: str) -> None:
     store.overwrite("seg", local_df(spark, FOREIGN, DDL))
 
     def replay():
+        log_offsets(f"{root}/ck", b)
         seg.replace(b, local_df(spark, BATCHES[b], "k string, n bigint"))
 
     for b in range(4):
@@ -82,3 +81,40 @@ def test_replay_and_compaction_at_every_point_equal_one_shot(spark, tmp_path):
         ]
         for f in futures:
             f.result()
+
+
+def _n_jobs(spark) -> int:
+    """Every job the session has run (the status store's job list)."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc._jsc.sc().statusStore().jobsList(None).size()
+
+
+def test_compact_submits_only_its_fold_and_write(spark, tmp_path):
+    """The replay bound is read from the offsets log, so compacting a
+    SUM table runs just the fold's shuffle and the overwrite, and a
+    scope without an offsets log is left alone with no job at all."""
+    store = TableStore(spark, str(tmp_path / "wh"))
+    ck = str(tmp_path / "ck")
+    seg = SegmentTable(store, "seg", ck, ddl=DDL, **FOLDS["sum"])
+    store.overwrite("seg", local_df(spark, FOREIGN, DDL))
+    for b in range(3):
+        log_offsets(ck, b)
+        seg.replace(b, local_df(spark, BATCHES[b], "k string, n bigint"))
+    # a checksum and a temp file of a later entry are not entries
+    for junk in (".5.crc", ".7.1f2e.tmp"):
+        open(f"{ck}/offsets/{junk}", "w").close()
+
+    before = _n_jobs(spark)
+    seg.compact()
+    assert _n_jobs(spark) - before == 2
+    mine = {r["batch_id"] for r in store.read("seg").collect() if r["checkpoint"] == seg.scope}
+    assert mine == {-1, 2}
+    assert sorted(tuple(r) for r in seg.merged().collect()) == _one_shot("sum", 3)
+
+    unlogged = SegmentTable(store, "seg", str(tmp_path / "ck2"), ddl=DDL, **FOLDS["sum"])
+    rows = sorted(tuple(r) for r in store.read("seg").collect())
+    before = _n_jobs(spark)
+    unlogged.compact()
+    assert _n_jobs(spark) == before
+    assert sorted(tuple(r) for r in store.read("seg").collect()) == rows

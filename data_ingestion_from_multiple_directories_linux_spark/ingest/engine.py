@@ -37,7 +37,8 @@ the count job, and staging and quarantine land side by side. Files
 are matched to their log and staging rows by one IN over their keys
 (:func:`pair_in`), built in a fixed number of py4j calls, so the
 driver's cost of work selection stays small up to the 50k-file run cap.
-Audit writes are append-only rows the driver already holds, written as
+Audit writes, a requeue's included, are append-only rows the driver
+already holds (only compaction rewrites the log), written as
 one parquet file per table per run with no Spark job
 (``TableStore.append_rows``); the engine's own audit tables are read with
 their declared DDL, never by footer inference. The only driver-side
@@ -267,16 +268,16 @@ def land_files(
     rows, swapped in for just those partitions, while every other
     partition takes the new rows as an append
     (``TableStore.append(replace=)``). ``None`` purges every file in
-    ``raw``, this table's ingestion-log rows for them included: a
-    micro-batch replayed after a crash re-lands and re-audits all of
-    its files. A table with neither new rows nor hit partitions is not
-    written.
+    ``raw`` from staging and quarantine: a micro-batch replayed after a
+    crash re-lands all of its files. The ingestion log is never touched
+    here; the caller's audit rows for a replay are later attempts, so
+    they supersede the earlier ones (:func:`latest_attempts`). A table
+    with neither new rows nor hit partitions is not written.
 
     The two destinations are independent, so they land side by side on
     two threads, each after its own probe. Given ``purge_pairs``, both
     probes run while the count job runs; for ``None`` they follow the
-    counts and the log purge. Every thread has finished before this
-    returns or raises.
+    counts. Every thread has finished before this returns or raises.
 
     Returns the counts of every file with at least one row; a file
     that parses to zero rows has no entry."""
@@ -313,7 +314,6 @@ def land_files(
             }
             if purge_pairs is None:
                 purge_pairs = set(counts)
-                purge_file_pairs(store, purge_pairs, names[0])
                 probes = probe(purge_pairs)
             # An unregistered table's schema is inferred per batch, so a
             # retry's rows may lack columns the kept rows hold: read those
@@ -403,28 +403,6 @@ def probe_file_pairs(store: TableStore, name: str, pairs: set[Pair]) -> dict[str
         .filter("hit > 0")
     )
     return {dirs[r[key]]: r["n"] - r["hit"] for r in probe.collect()}
-
-
-def purge_file_pairs(store: TableStore, pairs: set[Pair], table_name: str) -> None:
-    """Remove ``table_name``'s ingestion-log rows of the (file, facility)
-    ``pairs`` (other tables' rows are never purged): one aggregate
-    counts the hit and the remaining rows, then a read-filter-overwrite
-    (the log is not partitioned) — or a drop, when nothing remains."""
-    if not pairs or not store.exists(INGESTION_LOG):
-        return
-    log = store.read(INGESTION_LOG, INGESTION_LOG_DDL)
-    mine = F.col("table_name") == table_name
-    hit = F.coalesce(mine & pair_in(("file_name", "facility_id"), pairs), F.lit(False))
-    n_hit, n_left = log.agg(
-        F.count(F.when(hit, 1)), F.count(F.when(~hit, 1))
-    ).first()
-    if not n_hit:
-        return
-    if n_left:
-        store.overwrite(INGESTION_LOG, log.filter(~hit))
-    else:
-        # an empty parquet dir is unreadable (no footer) — drop instead
-        store.drop(INGESTION_LOG)
 
 
 def audit_rows(
@@ -616,31 +594,38 @@ class IngestionEngine:
         return selected, len(metas) - len(selected), retry_pairs
 
     def requeue_failed(self, like_pattern: str | None = None) -> int:
-        """Bulk status rewrite (M2): ``UPDATE sync_file SET processed=0
-        WHERE file_name ILIKE … AND processed != 0``
+        """Bulk requeue (M2): ``UPDATE sync_file SET processed=0 WHERE
+        file_name ILIKE … AND processed != 0``
         (file_ingestion_summary_report.sql:63-67;
         stg_monitoring_summary.sql:21-23 ``SET processed='N' WHERE
-        processed='F'``) as a read-rewrite-overwrite of the log: failed →
-        'requeued'. This is the manual reopening mechanism for failed
-        files: ``_select_work`` treats an UNCHANGED failed file as
-        terminal (only a file modified after its failing attempt
-        auto-retries), so permanently-bad files re-enter the queue only
-        through this requeue. Returns the number of rows requeued."""
+        processed='F'``) as one appended attempt row per file whose
+        latest attempt (:func:`latest_attempts`) is 'failed': the
+        failed row's fields, with status 'requeued' and a later
+        ``load_end_time``, so it becomes the file's latest attempt and
+        the summary's record totals are unchanged. The log is never
+        rewritten, so a row another writer appends meanwhile survives.
+
+        This is the manual reopening mechanism for failed files:
+        ``_select_work`` treats an UNCHANGED failed file as terminal
+        (only a file modified after its failing attempt auto-retries),
+        so permanently-bad files re-enter the queue only through this
+        requeue. The read is ONE collect of file metadata, as in
+        :func:`file_status`; the rows are written by
+        ``TableStore.append_rows`` with no Spark job and no count job
+        runs. Returns the number of files requeued."""
         if not self.store.exists(INGESTION_LOG):
             return 0
         log = self.store.read(INGESTION_LOG, INGESTION_LOG_DDL)
-        hit = F.col("status") == "failed"
         if like_pattern:
-            hit = hit & F.lower(F.col("file_name")).like(like_pattern.lower())
-        n = log.filter(hit).count()
-        if n:
-            self.store.overwrite(
-                INGESTION_LOG,
-                log.withColumn(
-                    "status", F.when(hit, F.lit("requeued")).otherwise(F.col("status"))
-                ),
-            )
-        return n
+            # a filter on the window's partition key keeps whole files
+            log = log.filter(F.lower(F.col("file_name")).like(like_pattern.lower()))
+        now = datetime.now()
+        rows = [
+            r.asDict() | {"status": "requeued", "load_end_time": now}
+            for r in latest_attempts(log).filter(F.col("status") == "failed").collect()
+        ]
+        self.store.append_rows(INGESTION_LOG, rows, INGESTION_LOG_DDL)
+        return len(rows)
 
     # ------------------------------------------------------------------
     # per-table ingest (S1 + G2 + F6/F7/F8 + G3 + P3 + K1)
@@ -786,9 +771,9 @@ class IngestionEngine:
         # driver-held rows: one file per table, no Spark job
         self.store.append_rows(INGESTION_LOG, audit, INGESTION_LOG_DDL)
         if in_flight:
-            # gone when another writer rewrote the log meanwhile
-            # (requeue_failed, the stream's purge); its 'loading' rows
-            # then stay, shadowed by the later audit rows
+            # gone when compaction, the only writer that rewrites the
+            # log, ran meanwhile; its 'loading' rows then stay, shadowed
+            # by the later audit rows
             with suppress(FileNotFoundError):
                 os.remove(in_flight)
         self.store.append_rows(

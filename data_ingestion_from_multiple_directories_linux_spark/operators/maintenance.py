@@ -297,14 +297,19 @@ def compact_table(
 ) -> CompactionReport | None:
     """Rewrite an append-fragmented table into ~target_bytes files.
 
-    Every appending component (per-batch audit rows, streaming commit
-    markers, incremental dedup indexes) adds small parquet files; at
-    scale the file count, not the byte count, dominates scan planning
-    and listing cost. This is the standard compaction job: skip if the
-    table has fewer than ``min_files`` fragments, else rewrite through
-    the TableStore's atomic write-temp-swap (M7) with one file per
+    Every appending component (per-run audit and requeue rows,
+    incremental dedup indexes) adds small parquet files; at scale the
+    file count, not the byte count, dominates scan planning and listing
+    cost. This is the standard compaction job: skip if the table has
+    fewer than ``min_files`` fragments, else rewrite through the
+    TableStore's atomic write-temp-swap (M7) with one file per
     ``target_bytes`` of on-disk data (partitioned tables compact within
     partitions — pass ``partition_by`` to preserve pruning).
+
+    It is the only rewrite of the append-only ingestion log, and like
+    any swap it drops a row appended between its read and its swap: it
+    must not run beside a writer of the table it compacts (an ingest
+    run, a stream tick or a requeue, for the log).
 
     Returns a report, or None when no compaction was needed. Driver
     touches file METADATA only; the rewrite is a distributed job."""

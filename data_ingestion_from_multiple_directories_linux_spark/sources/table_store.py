@@ -2,9 +2,12 @@
 
 The reference keeps all mutable state in PostgreSQL tables updated in-place
 (sync_file, file_ingestion_log, stg_* …; SURVEY.md §2.10). On immutable
-object storage the engine expresses UPDATE/DELETE as read-modify-write with
-a write-temp-swap so readers never observe a half-written table (SURVEY.md
-§7 "mutable state on immutable storage").
+object storage the engine expresses DELETE (a retry's staging purge,
+migrated-record deletion) as read-modify-write with a write-temp-swap so
+readers never observe a half-written table (SURVEY.md §7 "mutable state
+on immutable storage"). An UPDATE of a file's status is an appended
+attempt row instead: readers take each file's latest attempt, so only
+compaction ever rewrites the ingestion log.
 
 Append-only tables use plain parquet appends: a Spark write job for
 distributed frames (staging), and :meth:`TableStore.append_rows` for the
@@ -145,9 +148,13 @@ class TableStore:
         each replaced partition is swapped for ``df``'s rows of it
         (parked and removed when ``df`` has none; ``df=None`` means no
         rows at all), and ``df``'s other partitions take its files as an
-        append. The swap shares :meth:`overwrite_partitions`' park and
-        rename loop, so :meth:`repair` covers a crash inside it. A table
-        left with no partition is dropped."""
+        append. A table left with no partition is dropped.
+
+        The swap is atomic per partition, not per call: a reader racing
+        it may see some partitions old and some new, never a half-written
+        one. Each replaced partition is parked under its relative path
+        in a ``.{name}.dpo-old-*`` dir before the new one is moved in,
+        so :meth:`repair` restores a partition a crash left missing."""
         if not replace:
             w = df.write.mode("append")
             if partition_by:
@@ -241,47 +248,9 @@ class TableStore:
         out.sort(key=lambda kv: (-kv[1], kv[0]))
         return out[:top_n]
 
-    def overwrite_partitions(
-        self, name: str, df: DataFrame, partition_by: tuple[str, ...]
-    ) -> list[str]:
-        """Dynamic partition overwrite: replace ONLY the hive partitions
-        present in ``df``, leaving every other partition untouched — the
-        incremental-recompute write pattern (re-land one facility/day
-        without rewriting the table; Spark's
-        ``partitionOverwriteMode=dynamic`` for the swap-based store).
-
-        A full :meth:`overwrite` rewrites the WHOLE table to replace one
-        partition — at 100 TB that turns a daily one-partition refresh
-        into a full-table write. Here ``df`` materializes partitioned
-        into scratch, then each leaf partition directory it produced is
-        swapped into the live tree with the same rename discipline as
-        :meth:`overwrite`. Returns the relative partition paths
-        replaced.
-
-        Atomicity contract (documented, not hand-waved): the swap is
-        atomic PER PARTITION, not per call — a reader racing a
-        multi-partition refresh can observe a mix of old and new
-        partitions, but never a half-written single partition (each
-        rename is atomic, and a table format with real snapshot
-        isolation — Delta/Iceberg — is the cluster-scale upgrade). The
-        old data for each partition is parked in a per-call
-        ``.{name}.dpo-old-*`` trash dir UNDER ITS RELATIVE PATH, so a
-        crash between "old moved to trash" and "new moved in" is
-        repairable: :meth:`repair` restores any partition that is
-        missing from the live tree from the newest trash copy, then
-        clears all ``.dpo-*`` residue. Call it at startup."""
-        if not partition_by:
-            raise ValueError("overwrite_partitions needs partition columns")
-        tmp = self.path(f".{name}.dpo-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-        return self._swap_in(name, tmp, len(partition_by))
-
-    def _swap_in(
-        self, name: str, tmp: str, depth: int, replace: set[str] | None = None
-    ) -> list[str]:
+    def _swap_in(self, name: str, tmp: str, depth: int, replace: set[str]) -> None:
         """Move the leaf partitions written under ``tmp`` into the live
-        table; returns their relative paths. A leaf in ``replace``
-        (default: every written leaf) is swapped — the live copy is
+        table. A leaf in ``replace`` is swapped — the live copy is
         parked under ``.{name}.dpo-old-*`` first, and stays gone when
         ``tmp`` has no rows for it; any other leaf's files join the
         live leaf (an append)."""
@@ -291,11 +260,10 @@ class TableStore:
             if os.path.isdir(tmp)
             else {}
         )
-        swap = set(written) if replace is None else replace
         trash = self.path(f".{name}.dpo-old-{uuid.uuid4().hex}")
-        for rel in sorted(swap | set(written)):
+        for rel in sorted(replace | set(written)):
             dst = os.path.join(live, rel)
-            if rel in swap and os.path.isdir(dst):
+            if rel in replace and os.path.isdir(dst):
                 parked = os.path.join(trash, rel)
                 os.makedirs(os.path.dirname(parked), exist_ok=True)
                 os.rename(dst, parked)
@@ -313,12 +281,11 @@ class TableStore:
         if os.path.isdir(live) and not any(self._leaf_partitions(live, depth)):
             # an empty parquet dir is unreadable (no footer)
             self.drop(name)
-        return sorted(written)
 
     def repair(self, name: str) -> dict[str, list[str]]:
-        """Crash-recovery scan for :meth:`overwrite_partitions` (and
-        ``append(replace=)``) AND :meth:`overwrite` residue — run at
-        startup, like a table format's orphan-file cleanup.
+        """Crash-recovery scan for ``append(replace=)`` AND
+        :meth:`overwrite` residue — run at startup, like a table format's
+        orphan-file cleanup.
 
         Two restore rules, applied NEWEST trash first (mtime order —
         when two crashed calls both parked a copy, the later call's

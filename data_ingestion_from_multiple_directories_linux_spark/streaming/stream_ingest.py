@@ -22,12 +22,12 @@ Mapping to the reference's operating model:
   on the same checkpoint is refused by the streaming engine;
 * ``foreachBatch`` — lands the micro-batch through the batch engine's
   own sink (``ingest.engine.land_files``: one persist, one per-file
-  count job, one ingestion-log purge, one staging and one quarantine
-  write that replace only the facility partitions a replay hit) and
-  audits it by the same verdict law (``ingest.engine.audit_rows``), so
-  both modes write the same staging, quarantine and audit rows for the
-  same files; the audit rows are driver rows, stored by
-  ``TableStore.append_rows`` with no Spark job;
+  count job, one staging and one quarantine write that replace only the
+  facility partitions a replay hit) and audits it by the same verdict
+  law (``ingest.engine.audit_rows``), so both modes write the same
+  staging, quarantine and audit rows for the same files; the audit rows
+  are driver rows, appended by ``TableStore.append_rows`` with no Spark
+  job, and never purged: a replay's rows are later attempts;
 * ``maxFilesPerTrigger`` — the batch-size throttle (O2, LIMIT 50000).
 
 Scale: the file source lists and tracks files on the driver exactly like
@@ -113,13 +113,16 @@ class StreamingIngestion:
         Exact under foreachBatch's at-least-once contract without a
         marker: Spark commits ``batch_id`` to the checkpoint only after
         this returns, and a restart re-runs only that one uncommitted
-        batch. Landing first purges every file of the batch (staging,
-        quarantine and this table's audit rows), so a replay replaces
-        what a crashed attempt left instead of adding to it; the file
-        source assigns each file to exactly one batch, so the key is
-        exact. One window: a file that retention deletes between a
-        crash and the replay fails that replay's read. It runs from the
-        first write of the batch until Spark's commit.
+        batch. Landing first purges every file of the batch from
+        staging and quarantine, so a replay replaces the rows a crashed
+        attempt left instead of adding to them; the file source assigns
+        each file to exactly one batch, so the key is exact. The
+        ingestion log is only appended to: a replay's audit rows carry
+        later ``load_end_time``s, so they are the files' latest attempts
+        (``latest_attempts``) and the earlier rows stay as history. One
+        window: a file that retention deletes between a crash and the
+        replay fails that replay's read. It runs from the first write of
+        the batch until Spark's commit.
         """
         now = datetime.now()
         counts = land_files(

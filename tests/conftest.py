@@ -31,6 +31,16 @@ def local_df(spark, rows: list[tuple], ddl: str):
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), ddl)
 
 
+def n_jobs(spark) -> int:
+    """Every job the session has run (the status store's job list). A
+    diff around a call counts the jobs of every thread, a streaming
+    query's and a pool's included, which a job group does not; run
+    nothing else on the session meanwhile."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc._jsc.sc().statusStore().jobsList(None).size()
+
+
 def log_offsets(checkpoint_dir: str, batch_id: int) -> None:
     """Write the offsets-log entry a streaming query writes before it
     runs micro-batch ``batch_id``: the entry segment compaction reads

@@ -21,11 +21,13 @@ from pyspark.sql import functions as F
 
 from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
     INGESTION_LOG,
+    INGESTION_LOG_DDL,
     PIPELINE_LOG,
     STG_MONITORING,
     IngestionEngine,
     file_status,
     land_files,
+    latest_attempts,
     pair_in,
 )
 from data_ingestion_from_multiple_directories_linux_spark.sources.table_store import TableStore
@@ -573,16 +575,92 @@ def test_null_sentinel_normalization_on_ingest(engine, uploads):
     assert vals == {1: None, 2: None, 3: None, 4: "real"}
 
 
+def _latest_statuses(store) -> dict[tuple[str, str], str]:
+    """{(file, facility): status} of each file's latest logged attempt."""
+    return {
+        (r["file_name"], r["facility_id"]): r["status"]
+        for r in latest_attempts(store.read(INGESTION_LOG)).collect()
+    }
+
+
 def test_requeue_failed_bulk_update(engine, uploads):
-    """M2: analyst bulk-requeue rewrites failed → requeued
-    (file_ingestion_summary_report.sql:63-67)."""
+    """M2: analyst bulk-requeue moves failed → requeued
+    (file_ingestion_summary_report.sql:63-67) by appending one
+    'requeued' attempt row per failed file."""
     write_json(uploads, "FAC001", "patient_person_0_20250103141949.json", [])
     engine.run(uploads)
     n = engine.requeue_failed()
     assert n == 1
-    statuses = {r["status"] for r in engine.store.read(INGESTION_LOG).collect()}
+    statuses = set(_latest_statuses(engine.store).values())
     assert statuses == {"requeued"}
+    assert engine.store.read(INGESTION_LOG).count() == 2
     assert engine.requeue_failed(like_pattern="nomatch%") == 0
+    assert engine.store.read(INGESTION_LOG).count() == 2
+
+
+def test_requeue_copies_the_failed_attempt_and_keeps_the_summary_totals(engine, uploads):
+    """The requeued row is the failed attempt with a new status and a
+    later end time, so the summary report's record totals stand."""
+    write_json(uploads, "FAC001", "patient_person_0_20250103141949.json",
+               [patient(0), patient(1, dob="bad")])
+    engine.run(uploads)
+    before = engine.write_summary_report().collect()[0]
+    assert engine.requeue_failed(like_pattern="PATIENT_person%") == 1
+    failed, requeued = sorted(
+        engine.store.read(INGESTION_LOG).collect(), key=lambda r: r["load_end_time"]
+    )
+    assert requeued["status"] == "requeued"
+    assert requeued["load_end_time"] > failed["load_end_time"]
+    keep = [c for c in failed.asDict() if c not in ("status", "load_end_time")]
+    assert [requeued[c] for c in keep] == [failed[c] for c in keep]
+    after = engine.write_summary_report().orderBy("report_time").collect()[-1]
+    assert (after["n_failed"], after["n_requeued"]) == (0, 1)
+    for col in ("total_files", "records_ingested", "records_quarantined"):
+        assert after[col] == before[col]
+
+
+def test_requeue_keeps_a_log_row_appended_after_its_read(engine, uploads, monkeypatch):
+    """requeue_failed only appends to the ingestion log, so an audit
+    row another writer appends after the requeue has read the log (as
+    a concurrent run's audit append would) survives."""
+    from datetime import datetime
+
+    fn = "patient_person_0_20250103141949.json"
+    write_json(uploads, "FAC001", fn, [])
+    engine.run(uploads)
+    other = ("patient_person_1_20250103141950.json", "FAC002")
+    now = datetime.now()
+    read = engine.store.read
+
+    def read_then_append(name, *args, **kw):
+        df = read(name, *args, **kw)
+        if name == INGESTION_LOG:
+            engine.store.append_rows(
+                INGESTION_LOG,
+                [(*other, "stg_patient_person", "1", "success", 1, 0, None, now, now)],
+                INGESTION_LOG_DDL,
+            )
+        return df
+
+    monkeypatch.setattr(engine.store, "read", read_then_append)
+    assert engine.requeue_failed() == 1
+    monkeypatch.undo()
+    assert _latest_statuses(engine.store) == {
+        (fn, "FAC001"): "requeued", other: "success"
+    }
+    assert engine.store.read(INGESTION_LOG).count() == 3
+
+
+def test_requeue_skips_a_failed_file_that_later_succeeded(engine, uploads):
+    """Only a file whose LATEST attempt failed is requeued: a file that
+    failed, was fixed and then landed keeps 'success'."""
+    fn = "patient_person_0_20250103141949.json"
+    write_json(uploads, "FAC001", fn, [patient(0), patient(1, dob="bad")])
+    assert engine.run(uploads).files_failed == 1
+    write_json(uploads, "FAC001", fn, [patient(0), patient(1)])
+    assert engine.run(uploads).files_ingested == 1
+    assert engine.requeue_failed() == 0
+    assert _latest_statuses(engine.store) == {(fn, "FAC001"): "success"}
 
 
 def test_unmodified_failed_file_is_terminal_until_requeue(engine, uploads):
@@ -605,11 +683,13 @@ def test_unmodified_failed_file_is_terminal_until_requeue(engine, uploads):
     assert rep2.files_skipped == 1
     assert engine.store.read(INGESTION_LOG).count() == 1
 
-    # analyst requeue reopens it (still empty → fails again, once)
+    # analyst requeue reopens it (still empty → fails again, once):
+    # one attempt row each for the failure, the requeue and the rerun
     assert engine.requeue_failed() == 1
     rep3 = engine.run(uploads)
     assert rep3.files_failed == 1
-    assert engine.store.read(INGESTION_LOG).count() == 2
+    assert _latest_statuses(engine.store) == {(fn, "FAC001"): "failed"}
+    assert engine.store.read(INGESTION_LOG).count() == 3
 
 
 def test_queue_fairness_oldest_timestamp_first(spark, tmp_path):

@@ -582,9 +582,9 @@ def test_snapshot_diff_classifies_drift(spark):
 
 
 def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
-    """overwrite_partitions: re-landing one facility's data replaces
-    that partition atomically and leaves every other partition's files
-    and rows untouched."""
+    """append(replace=<the frame's leaves>): re-landing one facility's
+    data replaces that partition atomically and leaves every other
+    partition's files and rows untouched."""
     from data_ingestion_from_multiple_directories_linux_spark.sources.table_store import (
         TableStore,
     )
@@ -601,8 +601,7 @@ def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
 
     newa = spark.createDataFrame([(10, "A"), (11, "A"), (12, "A")],
                                  "id bigint, fac string")
-    replaced = store.overwrite_partitions("t", newa, ("fac",))
-    assert replaced == ["fac=A"]
+    store.append("t", newa, ("fac",), replace={"fac=A"})
     got = sorted(
         (r["id"], r["fac"]) for r in store.read("t").collect()
     )
@@ -612,13 +611,8 @@ def test_dynamic_partition_overwrite_replaces_only_touched(spark, tmp_path):
 
     # new partition lands beside existing ones
     newc = spark.createDataFrame([(20, "C")], "id bigint, fac string")
-    assert store.overwrite_partitions("t", newc, ("fac",)) == ["fac=C"]
+    store.append("t", newc, ("fac",), replace={"fac=C"})
     assert store.read("t").count() == 6
-    # empty partition_by rejected
-    import pytest
-
-    with pytest.raises(ValueError):
-        store.overwrite_partitions("t", newc, ())
 
 
 def test_dynamic_partition_overwrite_two_levels(spark, tmp_path):
@@ -638,8 +632,7 @@ def test_dynamic_partition_overwrite_two_levels(spark, tmp_path):
     new = spark.createDataFrame(
         [(10, "A", "d1")], "id bigint, fac string, day string"
     )
-    replaced = store.overwrite_partitions("t", new, ("fac", "day"))
-    assert replaced == ["fac=A/day=d1"]
+    store.append("t", new, ("fac", "day"), replace={"fac=A/day=d1"})
     got = sorted(
         (r["id"], r["fac"], r["day"]) for r in store.read("t").collect()
     )
@@ -694,7 +687,7 @@ def test_repair_restores_partition_lost_mid_swap(spark, tmp_path):
     store.overwrite("t", seed, ("fac",))
 
     # simulate the torn swap: park fac=A in trash (rel path preserved,
-    # as overwrite_partitions does), never complete the second rename;
+    # as append(replace=) does), never complete the second rename;
     # leave an uncommitted scratch dir and an old overwrite() trash too
     trash = store.path(".t.dpo-old-cafef00d")
     os.makedirs(trash)

@@ -9,10 +9,12 @@ from pyspark.sql import functions as F
 
 from data_ingestion_from_multiple_directories_linux_spark.ingest.engine import (
     INGESTION_LOG,
+    INGESTION_LOG_DDL,
     IngestionEngine,
+    latest_attempts,
 )
 from data_ingestion_from_multiple_directories_linux_spark.streaming import StreamingIngestion
-from tests.conftest import CHILD_SYS_PATH
+from tests.conftest import CHILD_SYS_PATH, n_jobs
 from tests.test_ingest_engine import patient, write_json
 
 
@@ -266,13 +268,23 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
     assert len(u1) == 2 and u1[0] in (1, 2) and u1[1] == 3
 
 
+def _latest(store) -> list:
+    """(file, facility, status) of each file's latest logged attempt."""
+    return sorted(
+        (r["file_name"], r["facility_id"], r["status"])
+        for r in latest_attempts(store.read(INGESTION_LOG)).collect()
+    )
+
+
 def test_foreachbatch_replay_is_idempotent(spark, tmp_path, uploads):
     """foreachBatch is at-least-once; the sink is exact under replay on
-    its own: landing a batch purges its files' staging, quarantine and
-    audit rows first, so a replay (of a landed or of a crashed-mid-append
-    batch) replaces them instead of adding."""
-    write_json(uploads, "FAC001", "patient_person_0_20250103141949.json",
-               [patient(i) for i in range(3)])
+    its own: landing a batch purges its files' staging and quarantine
+    rows first, so a replay (of a landed or of a crashed-mid-append
+    batch) replaces them instead of adding. The ingestion log is
+    append-only: each replay adds one attempt row per file, and that
+    row is the file's latest attempt."""
+    fn = "patient_person_0_20250103141949.json"
+    write_json(uploads, "FAC001", fn, [patient(i) for i in range(3)])
     s = _stream(spark, tmp_path, uploads)
     s.run_available_now()
     assert s.store.read("stg_patient_person").count() == 3
@@ -287,12 +299,14 @@ def test_foreachbatch_replay_is_idempotent(spark, tmp_path, uploads):
     )
     s._process_batch(batch, 0)
     assert s.store.read("stg_patient_person").count() == 3
-    assert s.store.read(INGESTION_LOG).count() == 1
+    assert _latest(s.store) == [(fn, "FAC001", "success")]
+    assert s.store.read(INGESTION_LOG).count() == 2
 
     # crash-replay: partial rows present → purged, redone
     s._process_batch(batch, 0)
     assert s.store.read("stg_patient_person").count() == 3  # not 6
-    assert s.store.read(INGESTION_LOG).count() == 1
+    assert _latest(s.store) == [(fn, "FAC001", "success")]
+    assert s.store.read(INGESTION_LOG).count() == 3
 
 
 def test_late_events_dropped_within_watermark_retained(spark, tmp_path):
@@ -457,12 +471,13 @@ def test_new_checkpoint_identity_not_skipped_by_old_markers(spark, tmp_path, upl
                    ("patient_person_1_20250103142050.json", 5),
                    ("patient_person_2_20250103143000.json", 7),
                    ("patient_person_2_20250103143000.json", 8)]
-    log = s3.store.read(INGESTION_LOG).collect()
-    assert sorted((r["file_name"], r["status"]) for r in log) == [
-        ("patient_person_0_20250103141949.json", "success"),
-        ("patient_person_1_20250103142050.json", "success"),
-        ("patient_person_2_20250103143000.json", "success"),
+    assert _latest(s3.store) == [
+        ("patient_person_0_20250103141949.json", "FAC001", "success"),
+        ("patient_person_1_20250103142050.json", "FAC001", "success"),
+        ("patient_person_2_20250103143000.json", "FAC002", "success"),
     ]
+    # one attempt row per landing: file 0 landed three times, file 1 twice
+    assert s3.store.read(INGESTION_LOG).count() == 6
 
 
 def test_zero_row_file_gets_empty_audit_row(spark, tmp_path, uploads):
@@ -594,7 +609,87 @@ def test_replayed_micro_batch_rewrites_only_its_partitions(spark, tmp_path, uplo
     )
     assert got == [("FAC001", 0), ("FAC001", 1), ("FAC001", 2),
                    ("FAC002", 10), ("FAC002", 11)]
-    assert s.store.read(INGESTION_LOG).count() == 2
+    assert _latest(s.store) == [(fn, "FAC001", "success"), (fn, "FAC002", "success")]
+    assert s.store.read(INGESTION_LOG).count() == 3
+
+
+def _one_file_batch(s, uploads, fac: str, fn: str):
+    """Micro-batch ``fac/fn`` as the stream's file source offers it."""
+    import os
+
+    return (
+        s.spark.read.format("json").schema(s.schema).option("multiLine", "true")
+        .load(os.path.join(uploads, fac, fn))
+        .withColumn("_src_file", F.lit(fn))
+        .withColumn("_src_facility", F.lit(fac))
+    )
+
+
+def test_replay_keeps_a_log_row_appended_while_it_lands(
+    spark, tmp_path, uploads, monkeypatch
+):
+    """A replayed micro-batch only appends to the ingestion log, so an
+    audit row that another writer appends while the batch lands (here:
+    once the batch first reads a table) survives, next to the other
+    file's row the log already held."""
+    import threading
+    from datetime import datetime
+
+    fn = "patient_person_0_20250103141949.json"
+    write_json(uploads, "FAC001", fn, [patient(i) for i in range(3)])
+    write_json(uploads, "FAC002", fn, [patient(10)])
+    s = _stream(spark, tmp_path, uploads)
+    s.run_available_now()
+
+    other = "patient_person_9_20250103150000.json"
+    now = datetime.now()
+    read, lock, appended = s.store.read, threading.Lock(), []
+
+    def read_then_append(name, *args, **kw):
+        df = read(name, *args, **kw)
+        with lock:
+            if not appended:
+                appended.append(s.store.append_rows(
+                    INGESTION_LOG,
+                    [(other, "FAC009", "stg_patient_person", "9", "success",
+                      1, 0, None, now, now)],
+                    INGESTION_LOG_DDL,
+                ))
+        return df
+
+    monkeypatch.setattr(s.store, "read", read_then_append)
+    s._process_batch(_one_file_batch(s, uploads, "FAC001", fn), 0)
+    monkeypatch.undo()
+    assert appended
+    assert _latest(s.store) == [
+        (fn, "FAC001", "success"), (fn, "FAC002", "success"),
+        (other, "FAC009", "success"),
+    ]
+    assert s.store.read(INGESTION_LOG).count() == 4
+    assert s.store.read("stg_patient_person").count() == 4
+
+
+def test_stream_tick_and_replay_run_no_log_jobs(spark, tmp_path, uploads):
+    """A micro-batch neither reads nor rewrites the ingestion log: a
+    tick with one new file and a replay of that file each submit at
+    most 6 jobs (status-store diff; the stream's and the landing pool's
+    threads do not inherit a job group)."""
+    write_json(uploads, "FAC001", "patient_person_0_20250103141949.json",
+               [patient(i) for i in range(3)])
+    s = _stream(spark, tmp_path, uploads)
+    s.run_available_now()
+    fn = "patient_person_1_20250103142050.json"
+    write_json(uploads, "FAC002", fn, [patient(10)])
+
+    before = n_jobs(spark)
+    s.run_available_now()
+    assert n_jobs(spark) - before <= 6
+    batch = _one_file_batch(s, uploads, "FAC002", fn)
+    before = n_jobs(spark)
+    s._process_batch(batch, 1)
+    assert n_jobs(spark) - before <= 6
+    assert s.store.read("stg_patient_person").count() == 4
+    assert s.store.read(INGESTION_LOG).count() == 3
 
 
 def test_streaming_incremental_minhash_dedup(spark, tmp_path):
